@@ -32,7 +32,7 @@ from nbdatatools_spark.operators.dedup import (
     minhash_lsh_candidates,
     simhash_near_dups,
 )
-from nbdatatools_spark.operators.knn import knn_pairs, exact_knn, knn_recall
+from nbdatatools_spark.operators.knn import exact_knn, knn_recall
 from nbdatatools_spark.operators.shuffle import seeded_shuffle
 from nbdatatools_spark.operators.similarity import brute_force_topk, lsh_topk
 from nbdatatools_spark.operators.windows import rebase_ordinals, window_slice

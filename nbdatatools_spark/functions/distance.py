@@ -5,6 +5,8 @@ Semantics follow the reference's ``DistanceFunction`` enum
 set; :220-248 cosine, :281-305 euclidean, :307-329 manhattan, :197-218
 dot-product). Implementations are pure ``pyspark.sql.functions`` higher-order
 expressions — they run JVM-side inside whole-stage codegen, never a Python UDF.
+``distance_matrix`` is their numpy twin for the Arrow-batched kernels
+(operators.knn); both resolve metric names through the one ``METRICS`` table.
 
 Divergence (documented, SURVEY §7 "What's hard"): the reference THROWS on
 zero-magnitude cosine inputs (DistanceFunction.java:239-241). Throwing inside a
@@ -15,6 +17,7 @@ engine returns NULL for zero-magnitude cosine and exposes a validation helper
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -82,10 +85,45 @@ METRICS = {
 }
 
 
-def distance_expr(metric: str, a: Column, b: Column) -> Column:
-    """Metric dispatch by name — mirrors DistanceFunction.java:39-53 enum
+def _metric(metric: str):
+    """Metric lookup by name — mirrors DistanceFunction.java:39-53 enum
     dispatch (aliases L2->euclidean, L1->manhattan kept)."""
     key = metric.strip().lower()
     if key not in METRICS:
         raise ValueError(f"unknown distance metric {metric!r}; one of {sorted(METRICS)}")
-    return METRICS[key](a, b)
+    return METRICS[key]
+
+
+def distance_expr(metric: str, a: Column, b: Column) -> Column:
+    """Metric dispatch by name, as a Catalyst column expression."""
+    return _metric(metric)(a, b)
+
+
+def distance_matrix(B, Q, metric: str):
+    """Dense float64 ``(len(B), len(Q))`` distance matrix — the numpy (BLAS)
+    twin of :func:`distance_expr`, with the same metric names. Cells the
+    metric leaves undefined (zero-magnitude cosine) are NaN; each caller
+    states its own policy for them. Values differ from the sequential-fold
+    expressions only in float summation order (last bits)."""
+    fn = _metric(metric)
+    B = np.asarray(B, dtype=np.float64)
+    Q = np.asarray(Q, dtype=np.float64)
+    if fn is cosine_distance:
+        denom = np.outer(np.linalg.norm(B, axis=1), np.linalg.norm(Q, axis=1))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            D = 1.0 - (B @ Q.T) / denom
+        D[denom == 0] = np.nan
+        return D
+    if fn is euclidean_distance:
+        # |b-q|^2 = |b|^2 - 2 b.q + |q|^2, clipped for fp negatives
+        sq = (B * B).sum(1)[:, None] - 2.0 * (B @ Q.T) + (Q * Q).sum(1)[None, :]
+        return np.sqrt(np.maximum(sq, 0.0))
+    if fn is dot_product_distance:
+        return -(B @ Q.T)
+    # manhattan has no GEMM form; chunk the query axis so the (rows, q_chunk,
+    # dim) intermediate stays ~128MB whatever the batch shape
+    q_chunk = max(1, int(16e6 // max(B.shape[0] * B.shape[1], 1)))
+    D = np.empty((B.shape[0], Q.shape[0]), dtype=np.float64)
+    for s in range(0, Q.shape[0], q_chunk):
+        D[:, s : s + q_chunk] = np.abs(B[:, None, :] - Q[None, s : s + q_chunk, :]).sum(axis=2)
+    return D

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from nbdatatools_spark.functions.distance import distance_expr
+from nbdatatools_spark.functions.distance import distance_expr, distance_matrix
 
 
 def _centroid_struct_array(vec, centroids: Sequence[Sequence[float]], metric: str):
@@ -122,12 +122,6 @@ def _centroid_assign_gemm(
     from pyspark.sql.types import DoubleType, IntegerType, StructField
 
     C = np.asarray(centroids, dtype=np.float64)  # (k, d)
-    if metric == "cosine":
-        cn = np.linalg.norm(C, axis=1)
-        Cn = np.zeros_like(C)
-        nz = cn > 0
-        Cn[nz] = C[nz] / cn[nz, None]
-        zero_cent = ~nz
     fields = list(df.schema.fields) + [StructField(out_col, IntegerType())]
     if dist_col:
         fields.append(StructField(dist_col, DoubleType()))
@@ -141,33 +135,8 @@ def _centroid_assign_gemm(
             V = np.asarray(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            if metric == "cosine":
-                vn = np.linalg.norm(V, axis=1)
-                Vn = np.zeros_like(V)
-                vnz = vn > 0
-                Vn[vnz] = V[vnz] / vn[vnz, None]
-                D = 1.0 - Vn @ Cn.T
-                D[~vnz, :] = np.inf  # zero-norm row: undefined -> +Inf
-                if zero_cent.any():
-                    D[:, zero_cent] = np.inf
-            elif metric in ("euclidean", "l2"):
-                # |v-c|^2 = |v|^2 - 2 v.c + |c|^2, clipped for fp negatives
-                sq = (
-                    (V * V).sum(axis=1)[:, None]
-                    - 2.0 * (V @ C.T)
-                    + (C * C).sum(axis=1)[None, :]
-                )
-                D = np.sqrt(np.clip(sq, 0.0, None))
-            elif metric in ("dot", "dot_product"):
-                D = -(V @ C.T)
-            elif metric in ("l1", "manhattan"):
-                D = np.stack(
-                    [np.abs(V - C[i][None, :]).sum(axis=1) for i in range(len(C))],
-                    axis=1,
-                )
-            else:
-                raise ValueError(f"unsupported metric {metric!r}")
-            D = np.where(np.isnan(D), np.inf, D)
+            D = distance_matrix(V, C, metric)
+            D[np.isnan(D)] = np.inf  # undefined (zero-norm cosine) -> +Inf
             cid = D.argmin(axis=1)
             out = pdf.copy()
             out[out_col] = cid.astype(np.int32)

@@ -7,24 +7,44 @@ top-k of base vectors RESTRICTED to the ordinals matching predicate i
 filtered vector search.
 
 Physical strategy: compile each predicate to a Column once (driver-side, the
-predicate table is small by construction — one row per query), build the
-per-query candidate set via the compiled filter, then run the same
-broadcast-crossJoin + windowed top-k as operators.knn but with an extra
-semi-join against the per-query match set. For large predicate counts the
-match sets are computed in ONE pass by unioning tagged filters (each
-predicate's matches tagged with its ordinal) — no per-predicate job.
+predicate table is small by construction — one row per query) and evaluate
+them all in ONE scan of the metadata as a per-row array of matching
+predicate ids (``_predicate_ids``). ``result_indices_table`` groups that
+array by predicate; ``hybrid_ground_truth`` instead joins it onto the base
+vectors by ordinal and runs the dense KNN kernel (operators.knn._knn_kernel)
+with a per-cell mask: base row b is a candidate for query q iff q is among
+b's predicate ids. The base table streams through the kernel once; rows
+matching no predicate are dropped by the join before any distance is
+computed.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.functions.distance import distance_expr
+from nbdatatools_spark.operators.knn import _as_arrays, _knn_kernel
 from nbdatatools_spark.predicates.compiler import compile_pnode
 from nbdatatools_spark.predicates.pnode import PNode, parse_pnode
+
+
+def _predicate_ids(
+    meta: DataFrame,
+    predicates: list[tuple[int, PNode | str]],
+    ordinal: str,
+) -> DataFrame:
+    """-> (ordinal, __pids ARRAY<BIGINT>): per metadata row, the ids of the
+    predicates it satisfies. One scan of ``meta`` evaluates every compiled
+    predicate as a boolean projection."""
+    cols = []
+    for pid, node in predicates:
+        if isinstance(node, (str, bytes, dict)):
+            node = parse_pnode(node)
+        pred = compile_pnode(node, columns=meta.columns)
+        cols.append(F.when(pred, F.lit(pid).cast("bigint")))
+    return meta.select(F.col(ordinal), F.array_compact(F.array(*cols)).alias("__pids"))
 
 
 def result_indices_table(
@@ -36,26 +56,30 @@ def result_indices_table(
 
     -> (ordinal BIGINT, matches ARRAY<BIGINT>) where row i lists the
     ascending metadata ordinals satisfying predicate i (P8;
-    TestDataKind.java:85-89). One scan of ``meta`` evaluates every compiled
-    predicate as a boolean projection; explode+filter+collect keeps it a
-    single shuffle keyed by predicate ordinal.
+    TestDataKind.java:85-89). explode+collect over ``_predicate_ids`` keeps
+    it a single shuffle keyed by predicate ordinal.
     """
-    cols = []
-    for pid, node in predicates:
-        if isinstance(node, (str, bytes, dict)):
-            node = parse_pnode(node)
-        pred = compile_pnode(node, columns=meta.columns)
-        cols.append(F.when(pred, F.lit(pid)))
-    tagged = meta.select(
-        F.col(ordinal).alias("__mord"),
-        F.array_compact(F.array(*cols)).alias("__pids"),
+    exploded = _predicate_ids(meta, predicates, ordinal).select(
+        F.col(ordinal).alias("__mord"), F.explode("__pids").alias("pid")
     )
-    exploded = tagged.select("__mord", F.explode("__pids").alias("pid"))
     return (
         exploded.groupBy("pid")
         .agg(F.array_sort(F.collect_list("__mord")).alias("matches"))
-        .select(F.col("pid").cast("bigint").alias(ordinal), "matches")
+        .select(F.col("pid").alias(ordinal), "matches")
     )
+
+
+def _not_matching(D: np.ndarray, pids: pd.Series, qids: np.ndarray) -> np.ndarray:
+    """Kernel mask: cell (b, q) is excluded unless query ordinal ``qids[q]``
+    is among base row b's predicate ids."""
+    order = np.argsort(qids)
+    rows = np.repeat(np.arange(len(pids)), pids.map(len).to_numpy())
+    flat = np.concatenate([np.empty(0, np.int64), *pids])
+    pos = np.minimum(np.searchsorted(qids, flat, sorter=order), len(qids) - 1)
+    hit = qids[order[pos]] == flat
+    excluded = np.ones(D.shape, dtype=bool)
+    excluded[rows[hit], order[pos[hit]]] = False
+    return excluded
 
 
 def hybrid_ground_truth(
@@ -71,38 +95,15 @@ def hybrid_ground_truth(
     """Filtered KNN answer key: for each query i, top-k over base vectors
     whose ordinal satisfies predicate i.
 
-    Returns (ordinal, indices, distances) like exact_knn. The per-query
-    allowed sets ride along the broadcast query side as arrays — the big base
-    table still streams through exactly once.
+    Returns (ordinal, indices, distances) like exact_knn, with the same
+    policy for undefined distances (ranked last, NULL). A query with no
+    predicate, or whose predicate matches nothing, gets no row.
     """
-    matches = result_indices_table(meta, predicates, ordinal)
-    q = queries.select(
-        F.col(ordinal).alias("__qid"), F.col(vec).alias("__qvec")
-    ).join(
-        matches.select(F.col(ordinal).alias("__qid"), F.col("matches").alias("__allowed")),
-        "__qid",
-        "inner",
-    )
-    b = base.select(F.col(ordinal).alias("__bid"), F.col(vec).alias("__bvec"))
-    pairs = (
-        b.crossJoin(F.broadcast(q))
-        .where(F.array_contains(F.col("__allowed"), F.col("__bid").cast("bigint")))
-        .select(
-            "__qid",
-            "__bid",
-            distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
-        )
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
-    )
-    topk = pairs.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
-    return (
-        topk.groupBy("__qid")
-        .agg(F.array_sort(F.collect_list(F.struct("__rn", "__bid", "__dist"))).alias("__nn"))
-        .select(
-            F.col("__qid").alias(ordinal),
-            F.transform("__nn", lambda s: s["__bid"]).alias("indices"),
-            F.transform("__nn", lambda s: s["__dist"]).alias("distances"),
+    pids = _predicate_ids(meta, predicates, ordinal).where(F.size("__pids") > 0)
+    candidates = base.select(ordinal, vec).join(pids, ordinal)
+    return _as_arrays(
+        _knn_kernel(
+            queries, candidates, k, metric, ordinal, vec, ordinal, vec,
+            exclude=_not_matching, query_key=ordinal, base_key="__pids",
         )
     )

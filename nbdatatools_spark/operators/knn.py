@@ -12,26 +12,36 @@ Physical strategy (scale posture):
 - Exact KNN is a cross product Q x B. We BROADCAST the query side (queries are
   the small side by construction: 1k queries vs 100k..billions of base
   vectors), so the base table streams through executors exactly once with no
-  shuffle of the big side; per-partition partial top-k is then merged by a
-  single shuffle of Q*k rows, not Q*B.
+  shuffle of the big side; per-batch partial top-k is then merged by a
+  single shuffle of Q*k rows per batch, not Q*B.
+- One kernel, ``_knn_kernel``, does that for every dense caller
+  (``exact_knn``, ``hybrid.hybrid_ground_truth``,
+  ``similarity.hard_negatives``): each Arrow batch of the base side computes
+  ``functions.distance.distance_matrix`` against the collected query block,
+  applies the caller's optional per-cell exclusion mask (same-label pairs,
+  non-matching predicates), and keeps its ``_partial_topk``; ``_merge_topk``
+  ranks the candidates. The PQ scans feed their lookup-table distances
+  through the same two tails.
 - Tie-break is (distance, base ordinal) ascending — deterministic under float
-  associativity (SURVEY §7 "What's hard").
-- For both-sides-large workloads, `exact_knn` accepts `block_partitions` to
-  split the query side into chunks that are broadcast sequentially (union of
-  plans — Catalyst schedules them as independent stages).
+  associativity (SURVEY §7 "What's hard"); undefined (NaN) distances rank last.
+- Query sides larger than ``max_broadcast_queries`` are split into pmod blocks
+  on the query ordinal, each collected and broadcast separately; the expr
+  path's ``block_partitions`` does the same for the Catalyst plan.
 """
 
 from __future__ import annotations
 
 from functools import reduce
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.functions.distance import distance_expr
+from nbdatatools_spark.functions.distance import distance_expr, distance_matrix
+
+_CANDIDATES = "__qid BIGINT, __bid BIGINT, __dist DOUBLE"
 
 
 def exact_knn(
@@ -51,18 +61,19 @@ def exact_knn(
     Returns ``(ordinal, indices ARRAY<ordinal-type>, distances ARRAY<DOUBLE>)``
     matching the reference's neighbor facet shape (FIXTURES.md §1): row i =
     top-k base ordinals for query i, ascending distance, ties broken by base
-    ordinal.
+    ordinal. Undefined distances (zero-magnitude cosine) rank last and are
+    NULL on both paths.
 
     ``impl``:
-    - ``"gemm"`` (default — the scale path): numpy/BLAS matrix kernel via
-      Arrow-batched mapInPandas with PER-BATCH PARTIAL TOP-K (the SIMD
-      analogue of the reference's Panama-vector kernels,
-      src/main/java25/.../DistanceFunction.java:199-232). Only Q*k rows per
-      Arrow batch reach the merge shuffle — never the Q*B cross product.
-      ~2 orders of magnitude faster at the reference benchmark scale
-      (100k x 256d); distances differ from sequential summation only in the
-      last float64 bits. Queries exceeding the broadcast cap are processed
-      in bounded blocks automatically.
+    - ``"gemm"`` (default — the scale path): the shared ``_knn_kernel``,
+      numpy/BLAS distance matrices via Arrow-batched mapInPandas with
+      PER-BATCH PARTIAL TOP-K (the SIMD analogue of the reference's
+      Panama-vector kernels, src/main/java25/.../DistanceFunction.java:199-232).
+      Only Q*k rows per Arrow batch reach the merge shuffle — never the Q*B
+      cross product. ~2 orders of magnitude faster at the reference
+      benchmark scale (100k x 256d); distances differ from sequential
+      summation only in the last float64 bits. Queries exceeding the
+      broadcast cap are processed in bounded blocks automatically.
     - ``"expr"``: pure Catalyst zip_with/aggregate distance inside the
       broadcast crossJoin, ranked by a row_number window. Catalyst inserts
       ``WindowGroupLimit ... Partial`` BELOW the exchange (SPARK-37099, the
@@ -75,8 +86,10 @@ def exact_knn(
       BLAS kernel at reference scale, so gemm remains the default.
     """
     if impl == "gemm":
-        return _exact_knn_gemm(
-            queries, base, k, metric, query_ordinal, base_ordinal, query_vec, base_vec
+        return _as_arrays(
+            _knn_kernel(
+                queries, base, k, metric, query_ordinal, query_vec, base_ordinal, base_vec
+            )
         )
     q = queries.select(
         F.col(query_ordinal).alias("__qid"), F.col(query_vec).alias("__qvec")
@@ -91,12 +104,7 @@ def exact_knn(
             "__bid",
             distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
         )
-        # nulls/NaN LAST: zero-magnitude cosine yields NULL (policy) and plain
-        # asc would rank NULLs first, polluting every top-k with zero vectors
-        w = Window.partitionBy("__qid").orderBy(
-            F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
-        )
-        return pairs.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
+        return _merge_topk(pairs, k)
 
     if block_partitions <= 1:
         topk = one_block(q)
@@ -106,126 +114,60 @@ def exact_knn(
             for i in range(block_partitions)
         ]
         topk = reduce(DataFrame.unionByName, blocks)
-
-    return (
-        topk.groupBy("__qid")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__rn", "__bid", "__dist"))
-            ).alias("__nn")
-        )
-        .select(
-            F.col("__qid").alias("ordinal"),
-            F.transform("__nn", lambda s: s["__bid"]).alias("indices"),
-            F.transform("__nn", lambda s: s["__dist"]).alias("distances"),
-        )
-    )
+    return _as_arrays(topk)
 
 
-def _exact_knn_gemm(
-    queries: DataFrame,
-    base: DataFrame,
+def _partial_topk(
+    D: np.ndarray,
+    bids: np.ndarray,
+    qids: np.ndarray,
     k: int,
-    metric: str,
-    query_ordinal: str,
-    base_ordinal: str,
-    query_vec: str,
-    base_vec: str,
-    max_broadcast_queries: int = 65536,
-) -> DataFrame:
-    """BLAS path: the query block (small side by construction) is collected
-    to a numpy matrix and broadcast; each Arrow batch of the base table
-    computes a (batch x Q) distance matrix with one GEMM and keeps its local
-    top-k per query (argpartition). The final merge reduces Q*k*n_batches
-    candidate rows — a tiny shuffle — with the same (dist, ordinal)
-    tie-break as the expr path.
-
-    ``max_broadcast_queries`` guards the driver collect (VERDICT r1 #6): a
-    query side larger than the cap is processed in pmod blocks, each
-    collected and broadcast separately, results unioned — bounded driver
-    memory at any query-side size (~64Mi floats per block at 256d)."""
-    spark = base.sparkSession
-    qrows = queries.select(query_ordinal, query_vec).limit(max_broadcast_queries + 1).collect()
-    if len(qrows) > max_broadcast_queries:
-        n = queries.count()
-        n_blocks = -(-n // max_broadcast_queries)  # ceil
-        blocks = [
-            _exact_knn_gemm(
-                queries.where(F.pmod(F.col(query_ordinal), F.lit(n_blocks)) == i),
-                base, k, metric, query_ordinal, base_ordinal, query_vec, base_vec,
-                max_broadcast_queries=n + 1,  # each block is now under the cap
-            )
-            for i in range(n_blocks)
-        ]
-        return reduce(DataFrame.unionByName, blocks)
-    if not qrows:
-        return spark.createDataFrame(
-            [], f"ordinal BIGINT, indices ARRAY<BIGINT>, distances ARRAY<DOUBLE>"
-        )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((qids, qmat))
-    metric_key = metric.strip().lower()
-
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q_ids, Q = bc.value
-        qn = np.linalg.norm(Q, axis=1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf[base_ordinal].to_numpy(dtype=np.int64)
-            B = np.array(list(pdf[base_vec]), dtype=np.float64)
-            if metric_key in ("cosine",):
-                bn = np.linalg.norm(B, axis=1)
-                denom = np.outer(bn, qn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    D = 1.0 - (B @ Q.T) / denom
-                D[denom == 0] = np.nan  # zero-magnitude -> NULL policy
-            elif metric_key in ("euclidean", "l2"):
-                D = np.sqrt(
-                    np.maximum(
-                        (B * B).sum(1)[:, None] - 2.0 * (B @ Q.T) + (Q * Q).sum(1)[None, :],
-                        0.0,
-                    )
-                )
-            elif metric_key in ("dot_product",):
-                D = -(B @ Q.T)
-            elif metric_key in ("manhattan", "l1"):
-                # L1 has no GEMM form; chunk the query axis so the (batch,
-                # q_chunk, dim) intermediate stays ~128MB regardless of
-                # batch size (the full tensor is batch*Q*dim*8B — tens of
-                # GB at production batch shapes)
-                q_chunk = max(1, int(16e6 // max(B.shape[0] * B.shape[1], 1)))
-                D = np.empty((B.shape[0], Q.shape[0]), dtype=np.float64)
-                for s in range(0, Q.shape[0], q_chunk):
-                    e = min(s + q_chunk, Q.shape[0])
-                    D[:, s:e] = np.abs(B[:, None, :] - Q[None, s:e, :]).sum(axis=2)
-            else:
-                raise ValueError(f"unknown metric {metric!r}")
-            kk = min(k, len(bids))
-            idx = np.argpartition(D, kk - 1, axis=0)[:kk]  # (kk, Q)
-            rows = {
-                "__qid": np.repeat(q_ids, kk),
-                "__bid": bids[idx.T.ravel()],
-                "__dist": np.take_along_axis(D, idx, axis=0).T.ravel(),
-            }
-            yield pd.DataFrame(rows)
-
-    partials = base.select(base_ordinal, base_vec).mapInPandas(
-        partial_topk, "__qid BIGINT, __bid BIGINT, __dist DOUBLE"
+    excluded: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """The one partial top-k: the ``k`` smallest cells of each column of the
+    (base rows x queries) matrix ``D`` as candidate rows ``(__qid, __bid,
+    __dist)``. NaN cells rank last (numpy's order, matching the merge).
+    Cells flagged in ``excluded`` rank after every other cell, NaN included,
+    and are dropped — a query never sees an excluded base row."""
+    key = D
+    if excluded is not None:
+        # finite < undefined (NaN, ranked as +inf) < excluded (NaN)
+        key = np.where(np.isnan(D), np.inf, D)
+        key[excluded] = np.nan
+    kk = min(k, D.shape[0])
+    idx = np.argpartition(key, kk - 1, axis=0)[:kk]  # (kk, Q)
+    rows = pd.DataFrame(
+        {
+            "__qid": np.repeat(qids, kk),
+            "__bid": bids[idx.T.ravel()],
+            "__dist": np.take_along_axis(D, idx, axis=0).T.ravel(),
+        }
     )
+    if excluded is None:
+        return rows
+    return rows[~np.take_along_axis(excluded, idx, axis=0).T.ravel()]
+
+
+def _merge_topk(candidates: DataFrame, k: int) -> DataFrame:
+    """Rank ``(__qid, __bid, __dist)`` candidates per query by (distance asc,
+    NULLs and NaN last, base id asc) and keep ranks 1..k as ``rank``.
+    Undefined distances must go last: plain asc ranks NULLs first and would
+    fill every top-k with zero vectors."""
     w = Window.partitionBy("__qid").orderBy(
         F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
     )
-    topk = partials.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
+    return candidates.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _as_arrays(topk: DataFrame) -> DataFrame:
+    """Ranked rows -> the neighbor facet shape ``(ordinal, indices,
+    distances)``; NaN distances become NULL (the expr path's cosine policy)."""
     return (
         topk.groupBy("__qid")
-        .agg(F.array_sort(F.collect_list(F.struct("__rn", "__bid", "__dist"))).alias("__nn"))
+        .agg(F.array_sort(F.collect_list(F.struct("rank", "__bid", "__dist"))).alias("__nn"))
         .select(
             F.col("__qid").alias("ordinal"),
             F.transform("__nn", lambda s: s["__bid"]).alias("indices"),
-            # NaN (numpy's zero-magnitude marker) -> NULL, matching the expr
-            # path's cosine policy
             F.transform(
                 "__nn",
                 lambda s: F.when(F.isnan(s["__dist"]), F.lit(None)).otherwise(s["__dist"]),
@@ -234,25 +176,69 @@ def _exact_knn_gemm(
     )
 
 
-def knn_pairs(
+def _knn_kernel(
     queries: DataFrame,
     base: DataFrame,
     k: int,
-    metric: str = "cosine",
-    **kw,
+    metric: str,
+    query_id: str,
+    query_vec: str,
+    base_id: str,
+    base_vec: str,
+    exclude: Callable | None = None,
+    query_key: str | None = None,
+    base_key: str | None = None,
+    max_broadcast_queries: int = 65536,
 ) -> DataFrame:
-    """Exploded pair form of exact_knn: (query_ordinal, rank, base_ordinal,
-    distance) — handy for SQL-oracle comparison and downstream joins."""
-    nn = exact_knn(queries, base, k, metric, **kw)
-    return nn.select(
-        F.col("ordinal").alias("query_ordinal"),
-        F.posexplode(F.arrays_zip("indices", "distances")).alias("pos", "pair"),
-    ).select(
-        "query_ordinal",
-        (F.col("pos") + 1).alias("rank"),
-        F.col("pair.indices").alias("base_ordinal"),
-        F.col("pair.distances").alias("distance"),
-    )
+    """The dense exact-KNN kernel: ``(__qid, __bid, __dist, rank)`` rows,
+    ranks 1..k per query.
+
+    The query block (small side by construction) is collected to a numpy
+    matrix and broadcast; each Arrow batch of the base table computes a
+    (batch x Q) ``distance_matrix``, asks ``exclude(D, base_keys,
+    query_keys)`` for the boolean cells to drop (``base_key`` /
+    ``query_key`` name the columns it compares), and keeps its
+    ``_partial_topk``. ``_merge_topk`` then reduces Q*k*n_batches
+    candidate rows — a tiny shuffle.
+
+    ``max_broadcast_queries`` guards the driver collect (VERDICT r1 #6): a
+    query side larger than the cap is processed in pmod blocks, each
+    collected and broadcast separately, results unioned — bounded driver
+    memory at any query-side size (~64Mi floats per block at 256d)."""
+    spark = base.sparkSession
+    qcols = [query_id, query_vec] + ([query_key] if exclude else [])
+    qrows = queries.select(*qcols).limit(max_broadcast_queries + 1).collect()
+    if len(qrows) > max_broadcast_queries:
+        n = queries.count()
+        n_blocks = -(-n // max_broadcast_queries)  # ceil
+        blocks = [
+            _knn_kernel(
+                queries.where(F.pmod(F.col(query_id), F.lit(n_blocks)) == i),
+                base, k, metric, query_id, query_vec, base_id, base_vec,
+                exclude, query_key, base_key,
+                max_broadcast_queries=n + 1,  # each block is now under the cap
+            )
+            for i in range(n_blocks)
+        ]
+        return reduce(DataFrame.unionByName, blocks)
+    if not qrows:
+        return spark.createDataFrame([], _CANDIDATES + ", rank INT")
+    qids = np.array([r[0] for r in qrows], dtype=np.int64)
+    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+    qkeys = np.array([r[2] for r in qrows]) if exclude else None
+    bc = spark.sparkContext.broadcast((qids, qmat, qkeys))
+
+    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        q_ids, Q, q_keys = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            D = distance_matrix(np.array(list(pdf[base_vec]), dtype=np.float64), Q, metric)
+            excluded = exclude(D, pdf[base_key], q_keys) if exclude else None
+            yield _partial_topk(D, pdf[base_id].to_numpy(dtype=np.int64), q_ids, k, excluded)
+
+    bcols = [base_id, base_vec] + ([base_key] if exclude else [])
+    return _merge_topk(base.select(*bcols).mapInPandas(partial_topk, _CANDIDATES), k)
 
 
 def knn_recall(

@@ -24,7 +24,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nbdatatools_spark.functions.distance import distance_expr
-from nbdatatools_spark.operators.knn import exact_knn
+from nbdatatools_spark.operators.knn import (
+    _CANDIDATES,
+    _knn_kernel,
+    _merge_topk,
+    _partial_topk,
+    exact_knn,
+)
 
 
 def brute_force_topk(
@@ -359,9 +365,10 @@ def pq_topk(
     orthogonal, so euclidean and dot distances are preserved exactly;
     the exact re-rank path reads RAW vectors and needs no rotation).
 
-    Same physical shape as the exact GEMM kernel — queries broadcast, each
-    Arrow batch of CODES computes its local top-k from per-query lookup
-    tables, the merge shuffles only Q*k*n_batches candidate rows. Metrics:
+    Queries are broadcast and each Arrow batch of CODES scores them from
+    per-query lookup tables, then hands the distances to operators.knn's
+    ``_partial_topk`` / ``_merge_topk`` — the dense kernel's tail, so the
+    merge shuffles only Q*k*n_batches candidate rows. Metrics:
     ``euclidean`` (additive squared-L2, reported as sqrt) and ``dot``
     (additive inner product, reported negated); for cosine, L2-normalize
     vectors before encoding and use ``dot``.
@@ -372,7 +379,6 @@ def pq_topk(
     extra cost is one broadcast join on Q*k*factor rows.
     """
     import numpy as np
-    import pandas as pd
 
     spark = encoded.sparkSession
     metric_key = metric.strip().lower()
@@ -389,6 +395,8 @@ def pq_topk(
     if rotation is not None:
         qmat = qmat @ np.asarray(rotation)
     bc = spark.sparkContext.broadcast((qids, qmat, np.asarray(codebooks)))
+
+    shortlist_k = k * rerank_factor if rerank_base is not None else k
 
     def adc_partial(batches):
         q_ids, Q, books = bc.value
@@ -408,58 +416,51 @@ def pq_topk(
             D = np.zeros((len(codes), len(Q)))
             for s in range(m):
                 D += lut[:, s, codes[:, s]].T
-            kk = min(k, len(bids))
-            idx = np.argpartition(D, kk - 1, axis=0)[:kk]
-            yield pd.DataFrame(
-                {
-                    "__qid": np.repeat(q_ids, kk),
-                    "__bid": bids[idx.T.ravel()],
-                    "__dist": np.take_along_axis(D, idx, axis=0).T.ravel(),
-                }
-            )
+            yield _partial_topk(D, bids, q_ids, shortlist_k)
 
-    partials = encoded.mapInPandas(adc_partial, "__qid BIGINT, __bid BIGINT, __dist DOUBLE")
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-    shortlist_k = k * rerank_factor if rerank_base is not None else k
-    out = partials.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= shortlist_k)
+    out = _merge_topk(encoded.mapInPandas(adc_partial, _CANDIDATES), shortlist_k)
     if rerank_base is None:
-        dist = F.sqrt("__dist") if metric_key in ("euclidean", "l2") else F.col("__dist")
-        return out.select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            dist.alias("distance"),
-        )
-    # Exact re-rank (the IVFADC+rerank production shape): the Q*k*factor
-    # shortlist is tiny, so broadcast it against the raw vectors, recompute
-    # the true distance on just those candidates, and re-rank. Quantization
-    # error then only matters at the shortlist boundary.
-    qdf = queries.select(
-        F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qvec")
-    )
+        return _as_pairs(out, F.sqrt("__dist") if metric_key in ("euclidean", "l2") else None)
+    exact_metric = {"dot": "dot_product"}.get(metric_key, metric_key)
+    return _rerank(out, queries, rerank_base, k, exact_metric, query_id, base_id, vec_col)
+
+
+def _rerank(
+    shortlist: DataFrame,
+    queries: DataFrame,
+    rerank_base: DataFrame,
+    k: int,
+    metric: str,
+    query_id: str,
+    base_id: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact re-rank of an ADC shortlist (the IVFADC+rerank production
+    shape): the Q*k*factor shortlist is tiny, so broadcast it against the
+    raw vectors, recompute the true distance on just those candidates, and
+    re-rank. Quantization error then only matters at the shortlist
+    boundary."""
+    qdf = queries.select(F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qvec"))
     cand = (
         rerank_base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"))
-        .join(F.broadcast(out.select("__qid", "__bid")), "__bid")
+        .join(F.broadcast(shortlist.select("__qid", "__bid")), "__bid")
         .join(F.broadcast(qdf), "__qid")
     )
-    exact_metric = {"dot": "dot_product"}.get(metric_key, metric_key)
     rer = cand.select(
         "__qid",
         "__bid",
-        distance_expr(exact_metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
+        distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
     )
-    w2 = Window.partitionBy("__qid").orderBy(
-        F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            F.col("__dist").alias("distance"),
-        )
+    return _as_pairs(_merge_topk(rer, k))
+
+
+def _as_pairs(topk: DataFrame, distance=None) -> DataFrame:
+    """Ranked kernel rows -> ``(query_id, rank, base_id, distance)``."""
+    return topk.select(
+        F.col("__qid").alias("query_id"),
+        "rank",
+        F.col("__bid").alias("base_id"),
+        (F.col("__dist") if distance is None else distance).alias("distance"),
     )
 
 
@@ -583,7 +584,6 @@ def ivfpq_topk(
     itself skips unprobed data at 100TB.
     """
     import numpy as np
-    import pandas as pd
 
     spark = encoded.sparkSession
     centroids, books = index
@@ -599,6 +599,7 @@ def ivfpq_topk(
     # prune unprobed cells at the scan (partition/bucket pruning at scale)
     probed_cells = sorted({int(c) for row in probes for c in row})
     pruned = encoded.where(F.col("centroid_id").isin(probed_cells))
+    shortlist_k = k * rerank_factor if rerank_base is not None else k
 
     def adc_partial(batches):
         q_ids, Q_, C, B, P = bc.value
@@ -618,7 +619,8 @@ def ivfpq_topk(
             bids = pdf["id"].to_numpy(dtype=np.int64)
             cells = pdf["centroid_id"].to_numpy()
             codes = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8).reshape(-1, mm)
-            D = np.full((len(codes), nq), np.inf)
+            D = np.zeros((len(codes), nq))
+            unprobed = np.ones(D.shape, dtype=bool)
             for qi in range(nq):
                 probe_set = {int(c) for c in P[qi]}
                 mask = np.isin(cells, list(probe_set))
@@ -631,50 +633,13 @@ def ivfpq_topk(
                     slots = np.array([cell_lut_idx[(qi, int(c))] for c in cells[idxs]])
                     dv += luts[qi, slots, s, codes[idxs, s]]
                 D[idxs, qi] = dv
-            kk = min(k, D.shape[0])
-            idx = np.argpartition(D, kk - 1, axis=0)[:kk]
-            out = pd.DataFrame(
-                {
-                    "__qid": np.repeat(q_ids, kk),
-                    "__bid": bids[idx.T.ravel()],
-                    "__dist": np.take_along_axis(D, idx, axis=0).T.ravel(),
-                }
-            )
-            yield out[np.isfinite(out["__dist"])]
+                unprobed[idxs, qi] = False
+            yield _partial_topk(D, bids, q_ids, shortlist_k, unprobed)
 
-    partials = pruned.mapInPandas(adc_partial, "__qid BIGINT, __bid BIGINT, __dist DOUBLE")
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-    shortlist_k = k * rerank_factor if rerank_base is not None else k
-    out = partials.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= shortlist_k)
+    out = _merge_topk(pruned.mapInPandas(adc_partial, _CANDIDATES), shortlist_k)
     if rerank_base is None:
-        return out.select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            F.sqrt("__dist").alias("distance"),
-        )
-    qdf = queries.select(F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qvec"))
-    cand = (
-        rerank_base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"))
-        .join(F.broadcast(out.select("__qid", "__bid")), "__bid")
-        .join(F.broadcast(qdf), "__qid")
-    )
-    rer = cand.select(
-        "__qid",
-        "__bid",
-        distance_expr("euclidean", F.col("__qvec"), F.col("__bvec")).alias("__dist"),
-    )
-    w2 = Window.partitionBy("__qid").orderBy(F.col("__dist").asc_nulls_last(), F.col("__bid").asc())
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            F.col("__dist").alias("distance"),
-        )
-    )
+        return _as_pairs(out, F.sqrt("__dist"))
+    return _rerank(out, queries, rerank_base, k, "euclidean", query_id, base_id, vec_col)
 
 
 # --- Scalar quantization (SQ8) ---------------------------------------------
@@ -915,121 +880,46 @@ def hard_negatives(
     distance (zero-magnitude cosine) are excluded — a NULL-distance negative
     is useless for training. Ties break on (distance, base_id).
 
-    ``impl="gemm"`` (scale path): the query block (ids, vectors, labels) is
-    one bounded driver collect broadcast to every task; each Arrow batch of
-    the base side computes the distance matrix with one BLAS GEMM, masks
-    same-label pairs to +inf, and keeps its local top-k per query — the
-    merge shuffle carries Q*k rows per batch, never Q*B (the exact_knn
-    kernel shape with a label mask). ``impl="expr"`` is the sequential-fold
-    Catalyst path whose arithmetic a SQL oracle reproduces bit-for-bit.
+    ``impl="gemm"`` (scale path): operators.knn's dense kernel with a
+    same-label exclusion mask — the query block (ids, vectors, labels) is
+    broadcast, each Arrow batch of the base side keeps its local top-k per
+    query, and the merge shuffle carries Q*k rows per batch, never Q*B.
+    ``impl="expr"`` is the sequential-fold Catalyst path whose arithmetic a
+    SQL oracle reproduces bit-for-bit.
     """
     import numpy as np
-    import pandas as pd
 
     if impl == "expr":
         q = queries.select(
-            F.col(query_id).alias("qid"),
-            F.col(vec_col).alias("qvec"),
-            F.col(label_col).alias("qlabel"),
+            F.col(query_id).alias("__qid"),
+            F.col(vec_col).alias("__qvec"),
+            F.col(label_col).alias("__qlabel"),
         )
         b = base.select(
-            F.col(base_id).alias("bid"),
-            F.col(vec_col).alias("bvec"),
-            F.col(label_col).alias("blabel"),
+            F.col(base_id).alias("__bid"),
+            F.col(vec_col).alias("__bvec"),
+            F.col(label_col).alias("__blabel"),
         )
-        pairs = (
+        pairs = _merge_topk(
             b.crossJoin(F.broadcast(q))
-            .where(F.col("qlabel") != F.col("blabel"))
+            .where(F.col("__qlabel") != F.col("__blabel"))
             .select(
-                "qid",
-                "bid",
-                distance_expr(metric, F.col("qvec"), F.col("bvec")).alias("distance"),
+                "__qid",
+                "__bid",
+                distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
             )
-            .where(F.col("distance").isNotNull())
+            .where(F.col("__dist").isNotNull()),
+            k,
         )
-        w = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("bid").asc())
-        return (
-            pairs.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                F.col("qid").alias("query_id"), "rank", F.col("bid").alias("base_id"), "distance"
-            )
+    else:
+        # undefined distances are excluded like same-label pairs
+        pairs = _knn_kernel(
+            queries, base, k, metric, query_id, vec_col, base_id, vec_col,
+            exclude=lambda D, blab, qlab: np.isnan(D) | (blab.to_numpy()[:, None] == qlab[None, :]),
+            query_key=label_col, base_key=label_col,
+            max_broadcast_queries=max_broadcast_queries,
         )
-
-    spark = base.sparkSession
-    qrows = (
-        queries.select(query_id, vec_col, label_col)
-        .limit(max_broadcast_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_broadcast_queries:
-        raise ValueError(
-            f"query side exceeds max_broadcast_queries={max_broadcast_queries}; "
-            "mine negatives in blocks (pmod on the query id) as exact_knn does"
-        )
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id BIGINT, rank INT, base_id BIGINT, distance DOUBLE"
-        )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qlab = np.array([r[2] for r in qrows])
-    bc = spark.sparkContext.broadcast((qids, qmat, qlab))
-    metric_key = metric.strip().lower()
-
-    def partial_topk(batches):
-        q_ids, Q, q_labels = bc.value
-        qn = np.linalg.norm(Q, axis=1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf[base_id].to_numpy(dtype=np.int64)
-            blab = pdf[label_col].to_numpy()
-            B = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if metric_key == "cosine":
-                bn = np.linalg.norm(B, axis=1)
-                denom = np.outer(bn, qn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    D = 1.0 - (B @ Q.T) / denom
-                D[denom == 0] = np.inf  # undefined -> excluded
-            elif metric_key in ("euclidean", "l2"):
-                D = np.sqrt(
-                    np.maximum(
-                        (B * B).sum(1)[:, None] - 2.0 * (B @ Q.T) + (Q * Q).sum(1)[None, :],
-                        0.0,
-                    )
-                )
-            elif metric_key == "dot_product":
-                D = -(B @ Q.T)
-            else:
-                raise ValueError(f"unknown metric {metric!r}")
-            D[blab[:, None] == q_labels[None, :]] = np.inf  # mask same-label
-            kk = min(k, len(bids))
-            idx = np.argpartition(D, kk - 1, axis=0)[:kk]
-            dist = np.take_along_axis(D, idx, axis=0).T.ravel()
-            rows = pd.DataFrame(
-                {
-                    "__qid": np.repeat(q_ids, kk),
-                    "__bid": bids[idx.T.ravel()],
-                    "__dist": dist,
-                }
-            )
-            yield rows[np.isfinite(rows["__dist"])]
-
-    partials = base.select(base_id, vec_col, label_col).mapInPandas(
-        partial_topk, "__qid BIGINT, __bid BIGINT, __dist DOUBLE"
-    )
-    w = Window.partitionBy("__qid").orderBy(F.col("__dist").asc(), F.col("__bid").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias("query_id"),
-            "rank",
-            F.col("__bid").alias("base_id"),
-            F.col("__dist").alias("distance"),
-        )
-    )
+    return _as_pairs(pairs)
 
 
 def ivf_build_index(
@@ -1265,7 +1155,13 @@ def ann_tuning_report(
     the recall buys). All comparisons run on id sets, never distances, so
     kernel float noise can't blur the readout.
     """
-    from nbdatatools_spark.operators.knn import exact_knn
+    from nbdatatools_spark.operators.knn import (
+    _CANDIDATES,
+    _knn_kernel,
+    _merge_topk,
+    _partial_topk,
+    exact_knn,
+)
 
     truth = exact_knn(
         queries, base, k,
@@ -1622,7 +1518,13 @@ def compression_report(
     Returns (method, bytes_per_vector, compression_x, recall) — the
     numbers that decide which tier a 100-TB embedding store lands on.
     """
-    from nbdatatools_spark.operators.knn import exact_knn
+    from nbdatatools_spark.operators.knn import (
+    _CANDIDATES,
+    _knn_kernel,
+    _merge_topk,
+    _partial_topk,
+    exact_knn,
+)
 
     queries = df.where(F.col(id_col) < n_queries)
     truth = exact_knn(

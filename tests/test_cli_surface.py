@@ -316,6 +316,38 @@ def test_cli_main_end_to_end(tmp_path, spark, capsys):
     assert main(["version"]) == 0
 
 
+def test_cli_compute_knn_writes_matching_facets(tmp_path, spark):
+    """compute knn with --out-indices AND --out-distances writes both facets
+    from one answer key: row for row, each distance is the distance from the
+    query to the neighbor the indices file names at that position."""
+    from nbdatatools_spark.__main__ import main
+    from nbdatatools_spark.sources.xvec import read_xvec
+
+    root = str(tmp_path / "ds")
+    make_test_dataset(spark, root, n_base=120, n_query=12, dimensions=8, k=5, seed=11)
+    out_idx, out_dist = str(tmp_path / "nn.ivec"), str(tmp_path / "nn.fvec")
+    assert main(
+        [
+            "compute", "knn", "--base", os.path.join(root, "base.fvec"),
+            "--query", os.path.join(root, "query.fvec"), "--k", "5",
+            "--metric", "euclidean", "--out-indices", out_idx, "--out-distances", out_dist,
+        ]
+    ) == 0
+
+    def rows(path):
+        return [r.vector for r in read_xvec(spark, path).orderBy("ordinal").collect()]
+
+    base = np.array(rows(os.path.join(root, "base.fvec")), dtype=np.float64)
+    queries = np.array(rows(os.path.join(root, "query.fvec")), dtype=np.float64)
+    indices, distances = rows(out_idx), rows(out_dist)
+    assert len(indices) == len(distances) == len(queries)
+    for q, idx, dist in zip(queries, indices, distances):
+        assert len(idx) == len(dist) == 5
+        want = np.sqrt(((base[idx] - q) ** 2).sum(axis=1))
+        np.testing.assert_allclose(dist, want, rtol=1e-5, atol=1e-5)
+        assert list(dist) == sorted(dist)
+
+
 def test_pipeline_runner_config_roundtrip(spark, tmp_path, documents):
     """plans/pipeline.py: YAML/JSON config loads, validates loudly, and the
     composed frame equals hand-chaining the same operators."""

@@ -212,8 +212,15 @@ def test_centroid_assign_gemm_matches_expr(spark, embeddings):
 
 def test_centroid_assign_gemm_zero_vector_and_ties(spark):
     """Zero-norm cosine rows -> +Inf everywhere -> cid 0 (expr parity);
-    exact distance ties -> lowest centroid_id on both paths."""
+    exact distance ties -> lowest centroid_id on both paths.
+
+    The same zero base vector and zero query pin every dense-kernel
+    caller's undefined-distance policy: exact_knn and hybrid_ground_truth
+    rank it last with a NULL distance, hard_negatives excludes it."""
     from nbdatatools_spark.operators.clustering import centroid_assign
+    from nbdatatools_spark.operators.hybrid import hybrid_ground_truth
+    from nbdatatools_spark.operators.knn import exact_knn
+    from nbdatatools_spark.operators.similarity import hard_negatives
 
     df = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 2.0])],
@@ -222,10 +229,35 @@ def test_centroid_assign_gemm_zero_vector_and_ties(spark):
     cents = [[0.0, 1.0], [0.0, 1.0], [1.0, 0.0]]  # 0 and 1 identical: tie
     for impl in ("expr", "gemm"):
         got = {
-            r["vec_id"]: r["centroid_id"]
-            for r in centroid_assign(df, cents, impl=impl).collect()
+            r["vec_id"]: (r["centroid_id"], r["cdist"])
+            for r in centroid_assign(df, cents, impl=impl, dist_col="cdist").collect()
         }
-        assert got == {0: 0, 1: 2, 2: 0}, f"impl {impl}: {got}"
+        assert {i: c for i, (c, _) in got.items()} == {0: 0, 1: 2, 2: 0}, f"impl {impl}: {got}"
+        assert got[0][1] == float("inf"), impl
+
+    # query 0 is the zero vector, base row 0 the zero vector
+    vecs = df.select(F.col("vec_id").alias("ordinal"), F.col("embedding").alias("vector"))
+    q = vecs.where(F.col("ordinal") <= 1)
+    want = {0: ([0, 1, 2], [None, None, None]), 1: ([1, 2, 0], [0.0, 1.0, None])}
+    meta = vecs.select("ordinal", F.lit(0).alias("z"))
+    preds = [(i, '{"fieldName":"z","op":"EQ","values":[0]}') for i in (0, 1)]
+    keys = {
+        impl: exact_knn(q, vecs, 3, "cosine", impl=impl) for impl in ("expr", "gemm")
+    }
+    keys["hybrid"] = hybrid_ground_truth(q, vecs, meta, preds, k=3, metric="cosine")
+    for name, key in keys.items():
+        got = {r["ordinal"]: (list(r["indices"]), list(r["distances"])) for r in key.collect()}
+        assert got == want, f"{name}: {got}"
+
+    # labels all differ, so only the undefined distances are excluded
+    labeled = df.withColumn("label", F.col("vec_id"))
+    for impl in ("expr", "gemm"):
+        neg = hard_negatives(
+            labeled.where(F.col("vec_id") <= 1), labeled, k=3, impl=impl
+        ).collect()
+        assert [(r.query_id, r.rank, r.base_id, r.distance) for r in neg] == [
+            (1, 1, 2, 1.0)
+        ], impl
 
 
 def test_semantic_dedup_gemm_assign_same_survivors(spark, embeddings):

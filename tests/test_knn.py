@@ -146,6 +146,26 @@ def test_hybrid_filtered_truth(vecs):
         assert got[qi] == [int(x) for x in order]
 
 
+@pytest.mark.parametrize("metric", ["cosine", "euclidean"])
+def test_hybrid_always_true_predicate_equals_exact_knn(vecs, metric):
+    """Under a predicate every base row satisfies, the hybrid answer key IS
+    the exact answer key — both go through the one dense kernel, so indices
+    and distances agree element for element."""
+    df, _ = vecs
+    meta = df.select("ordinal", F.lit(0).alias("z"))
+    preds = [(i, '{"fieldName":"z","op":"EQ","values":[0]}') for i in range(6)]
+    q = df.where(F.col("ordinal") < 6)
+    exact = {r["ordinal"]: r for r in exact_knn(q, df, K, metric).collect()}
+    hybrid = {
+        r["ordinal"]: r
+        for r in hybrid_ground_truth(q, df, meta, preds, k=K, metric=metric).collect()
+    }
+    assert sorted(hybrid) == sorted(exact) == list(range(6))
+    for qi in range(6):
+        assert list(hybrid[qi]["indices"]) == list(exact[qi]["indices"])
+        assert list(hybrid[qi]["distances"]) == list(exact[qi]["distances"])
+
+
 def test_knn_label_accuracy_closed_form(spark):
     from nbdatatools_spark.operators.knn import knn_label_accuracy
 
