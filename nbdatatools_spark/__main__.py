@@ -53,9 +53,6 @@ import json
 import os
 import sys
 
-_XVEC_EXTS = (".fvec", ".ivec", ".bvec", ".dvec", ".svec", ".mvec")
-
-
 def _spark():
     from nbdatatools_spark.session import get_spark
 
@@ -63,9 +60,9 @@ def _spark():
 
 
 def _read_vectors(spark, path: str):
-    if path.endswith(_XVEC_EXTS):
-        from nbdatatools_spark.sources.xvec import read_xvec
+    from nbdatatools_spark.sources.xvec import is_xvec, read_xvec
 
+    if is_xvec(path):
         return read_xvec(spark, path)
     if path.endswith(".parquet") or os.path.isdir(path):
         return spark.read.parquet(path)
@@ -77,9 +74,9 @@ def _read_vectors(spark, path: str):
 
 
 def _write_vectors(df, path: str) -> None:
-    if path.endswith(_XVEC_EXTS):
-        from nbdatatools_spark.sources.xvec import write_xvec
+    from nbdatatools_spark.sources.xvec import is_xvec, write_xvec
 
+    if is_xvec(path):
         write_xvec(df, path)
     elif path.endswith(".parquet"):
         df.write.mode("overwrite").parquet(path)
@@ -2174,10 +2171,10 @@ def _slab_source_records(args):
                 yield row["namespace"] or "", int(row["ordinal"]), bytes(row["data"])
             return
         raise SystemExit(f"parquet import needs (ordinal, data) columns: {src}")
-    if src.endswith(_XVEC_EXTS):
-        import struct as _struct
+    from nbdatatools_spark.sources.xvec import is_xvec, read_xvec
 
-        from nbdatatools_spark.sources.xvec import read_xvec
+    if is_xvec(src):
+        import struct as _struct
 
         # .mvec is float16 on disk but read_xvec widens to float32 at ingest
         # (SURVEY F5); the slab payload stores the widened f32 vector.

@@ -444,9 +444,9 @@ def view_sample(
     n: int = 10,
 ) -> DataFrame:
     """``vectordata sample`` / the bounded form of ``cat`` (README.md:82-84):
-    first n rows of a view in ordinal order. The limit lands below the sort
-    in the scan plan (the xvec reader emits ordinals already ordered), so
-    only the needed leading chunks are decoded."""
+    first n rows of a view in ordinal order. Spark plans this as a top-n
+    (TakeOrderedAndProject): every chunk of the facet is still decoded, and
+    each task keeps only its n smallest ordinals before the final merge."""
     return manifest.facet(spark, facet_kind, profile).orderBy("ordinal").limit(n)
 
 

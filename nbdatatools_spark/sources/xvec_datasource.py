@@ -11,50 +11,46 @@ registered DataSource so xvec participates in the ordinary reader surface
 (format/load, schema inference, partition planning by the engine's own
 source framework) instead of a helper function.
 
-Planning mirrors ``xvec.read_xvec``: the driver reads ONE header per file,
-splits files into ordinal-aligned byte ranges (~8 MB), and each
-InputPartition decodes its range with numpy and yields Arrow batches — no
-per-row Python objects. Schema is inferred from the extension
-(fvec→float, ivec→int, bvec/svec→short, dvec→double, mvec→float16-widened),
-exactly like the reference's extension-keyed dispatch.
+Reader, writer and stream reader are thin adapters over the codec in
+``xvec``: ``_plan_chunks`` makes the InputPartitions (ONE header read per
+file, ~8 MB ordinal-aligned byte ranges), ``_decode_chunk`` turns each into
+one Arrow batch, and ``_encode_records`` encodes each written Arrow batch.
+Schema is inferred from the extension (fvec→float, ivec→int,
+bvec/svec→short, dvec→double, mvec→float16-widened), exactly like the
+reference's extension-keyed dispatch.
 """
 
 from __future__ import annotations
 
 import glob as _glob
+import json
 import os
+import uuid
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceWriter,
+    DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
-from nbdatatools_spark.sources.xvec import _file_meta, xvec_dtype
-
-
-class XvecChunk(InputPartition):
-    def __init__(self, path, byte_start, n_records, start_ordinal, dim, stride):
-        self.path = path
-        self.byte_start = byte_start
-        self.n_records = n_records
-        self.start_ordinal = start_ordinal
-        self.dim = dim
-        self.stride = stride
+from nbdatatools_spark.sources.xvec import (
+    _decode_chunk,
+    _file_meta,
+    _plan_chunks,
+    _write_records,
+    is_xvec,
+    xvec_dtype,
+)
 
 
 def _resolve_paths(path_opt: str) -> list[str]:
     if any(ch in path_opt for ch in "*?["):
         paths = sorted(_glob.glob(path_opt))
     elif os.path.isdir(path_opt):
-        paths = sorted(
-            os.path.join(path_opt, f)
-            for f in os.listdir(path_opt)
-            if "." in f and f.rsplit(".", 1)[-1].rstrip("s") in ("fvec", "ivec", "bvec", "dvec", "svec", "mvec")
-        )
+        paths = sorted(os.path.join(path_opt, f) for f in os.listdir(path_opt) if is_xvec(f))
     else:
         paths = [path_opt]
     if not paths:
@@ -62,73 +58,23 @@ def _resolve_paths(path_opt: str) -> list[str]:
     return paths
 
 
+def _chunk_partitions(paths, ordinal_start: int) -> list[InputPartition]:
+    return [InputPartition(c) for c in _plan_chunks(paths, ordinal_start)]
+
+
 class XvecReader(DataSourceReader):
     def __init__(self, options):
-        self._path = options.get("path")
-        if not self._path:
+        path = options.get("path")
+        if not path:
             raise ValueError("xvec source requires a path: .load('/data/x.fvec')")
-        self._validate = str(options.get("validatedims", "true")).lower() != "false"
-        self._chunks: list[XvecChunk] = []
-        ordinal = 0
-        np_dtype0 = None
-        for p in _resolve_paths(self._path):
-            np_dtype, cbytes, _elem = xvec_dtype(p)
-            if np_dtype0 is None:
-                np_dtype0 = np_dtype
-            elif np_dtype != np_dtype0:
-                raise ValueError(f"mixed xvec formats under {self._path!r}")
-            dim, stride, count = _file_meta(p)
-            n_chunk = max(1024, min(65536, (8 << 20) // max(stride, 1)))
-            off = 0
-            while off < count:
-                n = min(n_chunk, count - off)
-                self._chunks.append(
-                    XvecChunk(p, off * stride, n, ordinal + off, dim, stride)
-                )
-                off += n
-            ordinal += count
-        self._np_dtype = np_dtype0
+        self._partitions = _chunk_partitions(_resolve_paths(path), 0)
 
     def partitions(self):
-        return self._chunks or [XvecChunk(None, 0, 0, 0, 0, 0)]
+        return self._partitions
 
-    def read(self, part: XvecChunk):
-        import numpy as np
-        import pyarrow as pa
-
-        if part.path is None:
-            return
-        np_dtype, _cbytes, elem = xvec_dtype(part.path)
-        widen = {"<u1": "<i2", "<f2": "<f4"}.get(np_dtype)
-        arrow_elem = {
-            "float": pa.float32(),
-            "int": pa.int32(),
-            "short": pa.int16(),
-            "double": pa.float64(),
-        }[elem]
-        with open(part.path, "rb") as f:
-            f.seek(part.byte_start)
-            raw = f.read(part.n_records * part.stride)
-        n = part.n_records
-        mat = np.frombuffer(raw, dtype=np.uint8).reshape(n, part.stride)
-        headers = mat[:, :4].copy().view("<i4").ravel()
-        if self._validate and not (headers == part.dim).all():
-            bad = int(headers[headers != part.dim][0])
-            raise ValueError(
-                f"{part.path}: record header dim {bad} != file dim {part.dim}"
-            )
-        body = mat[:, 4:].copy().view(np_dtype)
-        if widen:
-            body = body.astype(widen)
-        offsets = pa.array(
-            np.arange(0, (n + 1) * part.dim, part.dim, dtype=np.int32), type=pa.int32()
-        )
-        values = pa.Array.from_pandas(body.ravel(), type=arrow_elem)
-        vectors = pa.ListArray.from_arrays(offsets, values)
-        ordinals = pa.array(
-            np.arange(part.start_ordinal, part.start_ordinal + n), type=pa.int64()
-        )
-        yield pa.RecordBatch.from_arrays([ordinals, vectors], ["ordinal", "vector"])
+    def read(self, part: InputPartition | None):
+        if part is not None:  # no ranges (empty files): Spark reads None once
+            yield _decode_chunk(*part.value)
 
 
 class XvecDataSource(DataSource):
@@ -150,7 +96,7 @@ class XvecDataSource(DataSource):
     def writer(self, schema, overwrite) -> "XvecWriter":
         return XvecWriter(self.options, overwrite)
 
-    def simpleStreamReader(self, schema) -> "XvecStreamReader":
+    def streamReader(self, schema) -> "XvecStreamReader":
         return XvecStreamReader(self.options)
 
 
@@ -161,18 +107,20 @@ def register_xvec_source(spark) -> None:
 
 
 class XvecCommit(WriterCommitMessage):
-    def __init__(self, file, n):
+    def __init__(self, file, n, dim):
         self.file = file
         self.n = n
+        self.dim = dim
 
 
-class XvecWriter(DataSourceWriter):
+class XvecWriter(DataSourceArrowWriter):
     """``df.write.format('xvec').save(dir)`` — one ``part-*.{ext}`` shard per
-    partition (the write_xvec_shards layout: the engine's cluster-egress
-    shape; ordinals are contiguous within a shard, not across shards —
-    range-partition by ordinal upstream for globally ordered shards).
-    Shards land as temp names and a MANIFEST is written at commit, so a
-    failed job leaves no manifest (the usual commit-protocol contract)."""
+    partition (the engine's cluster-egress shape; ordinals are contiguous
+    within a shard, not across shards — range-partition by ordinal upstream
+    for globally ordered shards). Column 1 holds the vectors. Shards land as
+    temp names and a MANIFEST is written at commit, so a failed job —
+    including ragged vectors within or across shards — leaves no manifest
+    (the usual commit-protocol contract)."""
 
     def __init__(self, options, overwrite):
         self._dir = options.get("path")
@@ -183,36 +131,22 @@ class XvecWriter(DataSourceWriter):
         self._overwrite = overwrite
 
     def write(self, iterator):
-        import uuid
-
-        import numpy as np
-
-        np_dtype, cbytes, _elem = xvec_dtype(f"x.{self._ext}")
         os.makedirs(self._dir, exist_ok=True)
         fname = os.path.join(self._dir, f"part-{uuid.uuid4().hex[:12]}.{self._ext}")
-        n = 0
-        with open(fname, "wb") as out:
-            for row in iterator:
-                vec = np.asarray(row[1], dtype=np_dtype)
-                header = np.array([len(vec)], dtype="<i4")
-                out.write(header.tobytes())
-                out.write(vec.tobytes())
-                n += 1
+        n, dim = _write_records(fname, iterator, xvec_dtype(fname)[0])
         if n == 0:
             os.remove(fname)
-            return XvecCommit(None, 0)
-        return XvecCommit(os.path.basename(fname), n)
+            return XvecCommit(None, 0, None)
+        return XvecCommit(os.path.basename(fname), n, dim)
 
     def commit(self, messages):
-        shards = [(m.file, m.n) for m in messages if m is not None and m.file]
-        manifest = os.path.join(self._dir, "MANIFEST.json")
-        import json as _json
-
-        with open(manifest, "w") as f:
-            _json.dump(
-                {"format": self._ext, "shards": sorted(shards), "rows": sum(n for _, n in shards)},
-                f,
-            )
+        shards = [m for m in messages if m is not None and m.file]
+        dims = sorted({m.dim for m in shards})
+        if len(dims) > 1:
+            raise ValueError(f"ragged vectors: shards of dims {dims}")
+        rows = [(m.file, m.n) for m in shards]
+        with open(os.path.join(self._dir, "MANIFEST.json"), "w") as f:
+            json.dump({"format": self._ext, "shards": sorted(rows), "rows": sum(n for _, n in rows)}, f)
 
     def abort(self, messages):
         for m in messages or []:
@@ -223,70 +157,43 @@ class XvecWriter(DataSourceWriter):
                     pass
 
 
-class XvecStreamReader(SimpleDataSourceStreamReader):
+class XvecStreamReader(DataSourceStreamReader):
     """Streaming xvec ingest: monitor a directory (or glob) for NEW vector
     files and emit their records — continuous ingest for the vector-file
     drop-folder pattern (the streaming face of the reference's chunked
     scheduler consumption; T1/T2 collapse to Structured Streaming offsets).
 
-    Offset = {"seen": [files already ingested], "next_ordinal": N}: files
-    are ingested whole (xvec files are immutable artifacts — partial files
-    are the writer's concern, as in the reference's publisher flow), and
-    ordinals continue monotonically across batches. readBetweenOffsets
-    replays exactly the files between two offsets, so checkpoint recovery
-    re-emits identical micro-batches.
+    Offset = {"seen": [files already listed], "next_ordinal": N}: files are
+    ingested whole (xvec files are immutable artifacts — partial files are
+    the writer's concern, as in the reference's publisher flow), and
+    ordinals continue monotonically across batches. ``partitions(start,
+    end)`` plans exactly the files between two offsets from
+    ``start["next_ordinal"]``, so checkpoint recovery re-emits identical
+    micro-batches, and the batch reader's chunk decode does the rest.
     """
 
     def __init__(self, options):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("xvec stream requires a path")
+        self._latest = self.initialOffset()
 
     def initialOffset(self) -> dict:
         return {"seen": [], "next_ordinal": 0}
 
-    def _list(self):
+    def latestOffset(self) -> dict:
         try:
-            return _resolve_paths(self._path)
+            listed = _resolve_paths(self._path)
         except ValueError:
-            return []
+            listed = []
+        seen = set(self._latest["seen"])
+        new = [p for p in listed if p not in seen]
+        ordinal = self._latest["next_ordinal"] + sum(_file_meta(p)[2] for p in new)
+        self._latest = {"seen": sorted(seen | set(new)), "next_ordinal": ordinal}
+        return self._latest
 
-    def _decode_file(self, path, ordinal_start):
-        import numpy as np
+    def partitions(self, start: dict, end: dict):
+        new = set(end["seen"]) - set(start["seen"])
+        return _chunk_partitions(new, int(start["next_ordinal"]))
 
-        np_dtype, cbytes, _elem = xvec_dtype(path)
-        widen = {"<u1": "<i2", "<f2": "<f4"}.get(np_dtype)
-        dim, stride, count = _file_meta(path)
-        with open(path, "rb") as f:
-            raw = f.read()
-        if count == 0:
-            return
-        mat = np.frombuffer(raw, dtype=np.uint8).reshape(count, stride)
-        body = mat[:, 4:].copy().view(np_dtype)
-        if widen:
-            body = body.astype(widen)
-        for i in range(count):
-            yield (ordinal_start + i, body[i].tolist())
-
-    def read(self, start: dict):
-        seen = set(start.get("seen", []))
-        ordinal = int(start.get("next_ordinal", 0))
-        new_files = [p for p in self._list() if p not in seen]
-        rows = []
-        for p in new_files:
-            _d, _s, count = _file_meta(p)
-            rows.extend(self._decode_file(p, ordinal))
-            ordinal += count
-        end = {"seen": sorted(seen | set(new_files)), "next_ordinal": ordinal}
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        seen = set(start.get("seen", []))
-        ordinal = int(start.get("next_ordinal", 0))
-        for p in sorted(set(end.get("seen", [])) - seen):
-            _d, _s, count = _file_meta(p)
-            yield from self._decode_file(p, ordinal)
-            ordinal += count
-
-    def commit(self, end: dict) -> None:
-        pass
+    read = XvecReader.read

@@ -61,6 +61,20 @@ def test_analyze_find_zero_vectors(spark, tmp_path, capsys):
     assert nz["n_zero"] == len(found)
 
 
+def test_cli_reads_fvecs_alias(spark, tmp_path, capsys):
+    """``.fvecs`` (the reference tooling's plural alias) is an xvec input,
+    as ``xvec_dtype`` says."""
+    p = str(tmp_path / "base.fvecs")
+    with open(p, "wb") as f:
+        for i in range(5):
+            f.write(struct.pack("<i", 2) + struct.pack("<2f", i, -i))
+    assert main(["analyze", "select", "--input", p, "--ordinals", "1..3"]) == 0
+    rows = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
+    assert [(r["ordinal"], r["vector"]) for r in rows] == [
+        (i, [float(i), float(-i)]) for i in (1, 2, 3)
+    ]
+
+
 def test_check_endian(tmp_path, capsys):
     good = tmp_path / "good.fvec"
     with open(good, "wb") as f:

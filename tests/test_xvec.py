@@ -33,7 +33,7 @@ def test_read_roundtrip(spark, tmp_path, ext, np_dtype, gen):
     mat = gen(rng, 50, 8)
     p = str(tmp_path / f"t.{ext}")
     _write_raw(p, mat, np_dtype)
-    df = read_xvec(spark, p, chunk_records=16)
+    df = read_xvec(spark, p)
     rows = df.orderBy("ordinal").collect()
     assert len(rows) == 50
     assert [r["ordinal"] for r in rows] == list(range(50))
@@ -45,6 +45,16 @@ def test_read_roundtrip(spark, tmp_path, ext, np_dtype, gen):
             )
         else:
             np.testing.assert_array_equal(np.array(r["vector"]), mat[i])
+    if ext == "fvec":
+        # 70k x 4d spans two planned ~8MB ranges (65536 records each), so a
+        # range starting past byte 0 is decoded too
+        big = gen(rng, 70_000, 4)
+        bp = str(tmp_path / "big.fvec")
+        _write_raw(bp, big, np_dtype)
+        tbl = read_xvec(spark, bp).toArrow().sort_by("ordinal")
+        assert tbl.column("ordinal").to_pylist() == list(range(70_000))
+        got = tbl.column("vector").combine_chunks().flatten().to_numpy()
+        np.testing.assert_array_equal(got.reshape(-1, 4), big)
 
 
 def test_write_then_read(spark, tmp_path):
@@ -70,14 +80,56 @@ def test_multifile_concat_ordinals(spark, tmp_path):
     assert df.agg(F.max("ordinal")).collect()[0][0] == 11
 
 
-def test_corrupt_header_dim_raises(spark, tmp_path):
-    """Per-record dim validation (data_access_v1.md:107-109)."""
+@pytest.mark.parametrize("front", ["read_xvec", "format", "readStream"])
+def test_corrupt_header_dim_raises(spark, tmp_path, front):
+    """Per-record dim validation (data_access_v1.md:107-109), the same in
+    every reader front end."""
+    from nbdatatools_spark.sources.xvec_datasource import register_xvec_source
+
+    register_xvec_source(spark)
     p = str(tmp_path / "bad.fvec")
     with open(p, "wb") as f:
         f.write(struct.pack("<i", 4) + np.zeros(4, "<f4").tobytes())
         f.write(struct.pack("<i", 3) + np.zeros(4, "<f4").tobytes())  # lying header
     with pytest.raises(Exception):
-        read_xvec(spark, p).collect()
+        if front == "read_xvec":
+            read_xvec(spark, p).collect()
+        elif front == "format":
+            spark.read.format("xvec").load(p).collect()
+        else:
+            q = (
+                spark.readStream.format("xvec").load(p)
+                .writeStream.format("noop")
+                .option("checkpointLocation", str(tmp_path / "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+
+
+def test_ragged_rows_raise(spark, tmp_path):
+    """Ragged vectors have no xvec encoding: write_xvec raises and leaves no
+    file; the DataSource writer fails whether the rows share a partition or
+    not, and leaves no MANIFEST."""
+    import os as _os
+
+    from nbdatatools_spark.sources.xvec_datasource import register_xvec_source
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, [1.0, 2.0, 3.0]), (2, [4.0, 5.0])],
+        "ordinal BIGINT, vector ARRAY<FLOAT>",
+    )
+    p = str(tmp_path / "ragged.fvec")
+    with pytest.raises(ValueError, match="ragged"):
+        write_xvec(df, p)
+    assert not _os.path.exists(p)
+
+    register_xvec_source(spark)
+    for name, frame in [("split", df.repartition(3)), ("one", df.coalesce(1))]:
+        out = str(tmp_path / name)
+        with pytest.raises(Exception, match="ragged"):
+            frame.write.format("xvec").mode("append").save(out)
+        assert not _os.path.exists(_os.path.join(out, "MANIFEST.json"))
 
 
 def test_implausible_dim_raises(tmp_path, spark):
@@ -141,6 +193,19 @@ def test_xvec_python_datasource(spark, tmp_path):
     multi = spark.read.format("xvec").load(str(tmp_path / "m*.fvec"))
     assert multi.count() == 1000
     assert multi.agg(F.max("ordinal")).collect()[0][0] == 999
+
+    # NaN policy: components keep their IEEE values (NaN is not NULL) in
+    # both batch front ends, and write -> read is byte-exact
+    sp = str(tmp_path / "special.fvec")
+    special = np.array([[np.nan, np.inf, -np.inf, -0.0]], "<f4")
+    _write_raw(sp, special, "<f4")
+    for got in (read_xvec(spark, sp), spark.read.format("xvec").load(sp)):
+        vals = got.toArrow().column("vector").combine_chunks().flatten()
+        assert vals.null_count == 0
+        assert vals.to_numpy().tobytes() == special.tobytes()
+    rp = str(tmp_path / "special_back.fvec")
+    write_xvec(read_xvec(spark, sp), rp)
+    assert open(rp, "rb").read() == open(sp, "rb").read()
 
 
 def test_xvec_datasource_writer_roundtrip(spark, tmp_path):
