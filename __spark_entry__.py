@@ -37,7 +37,6 @@ from nbdatatools_spark.operators.shuffle import seeded_shuffle
 from nbdatatools_spark.operators.similarity import brute_force_topk, lsh_topk
 from nbdatatools_spark.operators.windows import rebase_ordinals, window_slice
 from nbdatatools_spark.predicates import compile_pnode, parse_pnode
-from nbdatatools_spark.predicates.compiler import where_pnode
 from nbdatatools_spark.streaming.events import (
     sessionize,
     sliding_window_agg,

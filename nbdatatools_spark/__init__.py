@@ -7,7 +7,7 @@ Spark-first re-expression of its semantics:
 - vector facet tables ``(ordinal BIGINT, vector ARRAY<FLOAT>)``
 - distance kernels as native Catalyst expressions (no Python in the hot path)
 - exact + approximate KNN joins, recall verification
-- a predicate system (PNode JSON -> Column compiler + SQL render codec)
+- a predicate system (PNode JSON -> SQL render codec, evaluated by Spark)
 - dataset manifests (dataset.yaml profiles/windows) as view factories
 - xvec (fvec/ivec/bvec/dvec/svec/mvec) ingest/egress via Arrow
 - large-scale training-data extensions: dedup (exact/MinHash-LSH/SimHash),

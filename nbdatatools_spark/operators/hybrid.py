@@ -26,8 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nbdatatools_spark.operators.knn import _as_arrays, _knn_kernel
-from nbdatatools_spark.predicates.compiler import compile_pnode
-from nbdatatools_spark.predicates.pnode import PNode, parse_pnode
+from nbdatatools_spark.predicates import PNode, compile_pnode, parse_pnode
 
 
 def _predicate_ids(

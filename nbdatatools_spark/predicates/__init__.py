@@ -4,8 +4,8 @@ from nbdatatools_spark.predicates.pnode import (  # noqa: F401
     Conjugate,
     parse_pnode,
 )
-from nbdatatools_spark.predicates.compiler import compile_pnode  # noqa: F401
 from nbdatatools_spark.predicates.sqlcodec import (  # noqa: F401
+    compile_pnode,
     render_cddl,
     render_cql,
     render_sql,

@@ -108,6 +108,6 @@ def parse_pnode(obj: str | bytes | dict) -> PNode:
     fname = obj.get("fieldName") or obj.get("field_name")
     if fld is None and fname is None:
         raise ValueError(f"predicate node requires field or fieldName: {obj!r}")
-    if fld is not None and (not isinstance(fld, int) or fld < 0):
+    if fld is not None and (type(fld) is not int or fld < 0):  # bool is an int
         raise ValueError(f"field index must be a non-negative integer: {fld!r}")
     return PredicateLeaf(op=op, values=tuple(values), field=fld, field_name=fname)

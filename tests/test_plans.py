@@ -26,7 +26,7 @@ def test_pnode_filter_pushes_down(spark, sf_dir):
 
 def test_two_valued_blocks_pushdown_documented(spark, sf_dir):
     """The coalesce wrap (two_valued=True) cannot push — this pins the
-    behavior the PERF note in compiler.py warns about."""
+    behavior the PERF note in sqlcodec.compile_pnode warns about."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     node = parse_pnode('{"fieldName":"o_totalprice","op":"GT","values":[50000.0]}')
     plan = _plan(orders.where(compile_pnode(node, two_valued=True)))

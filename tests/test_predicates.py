@@ -55,6 +55,7 @@ def test_parse_rejects_bad():
         {"op": "AND", "nodes": []},                       # empty conjugate
         {"field": 0, "op": "NOPE", "values": [1]},        # unknown op
         {"field": 0, "op": "GT", "values": []},           # empty values
+        {"field": True, "op": "GT", "values": [1]},       # bool index
     ):
         with pytest.raises(ValueError):
             parse_pnode(bad)
@@ -167,6 +168,7 @@ PREDS = [
     {"fieldName": "score", "op": "GE", "values": [0.5]},
     {"fieldName": "name", "op": "MATCHES", "values": ["name_[0-9]+"]},
     {"fieldName": "name", "op": "EQ", "values": [None]},
+    {"fieldName": "number", "op": "IN", "values": [None, 10]},
     {"op": "AND", "nodes": [
         {"fieldName": "number", "op": "GE", "values": [20]},
         {"op": "OR", "nodes": [

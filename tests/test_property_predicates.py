@@ -23,13 +23,14 @@ ROWS = [
     (5, "it's", 60, 0.1, None, "c"),
     (6, "name_2", -5, 0.33, True, "a"),
     (7, "", 0, 0.99, False, "b"),
+    (8, "a\\b", 35, 0.9, True, "c"),
 ]
 SCHEMA = "ordinal BIGINT, name STRING, number BIGINT, score DOUBLE, flag BOOLEAN, category STRING"
 
 _num_ops = st.sampled_from(["GT", "LT", "EQ", "NE", "GE", "LE"])
 _numbers = st.sampled_from([-5, 0, 10, 20, 35, 60, 100])
 _scores = st.sampled_from([0.0, 0.1, 0.25, 0.5, 0.9, 1.0])
-_texts = st.sampled_from(["name_1", "name_2", "it's", "", "zzz"])
+_texts = st.sampled_from(["name_1", "name_2", "it's", "", "zzz", "a\\b"])
 _cats = st.sampled_from(["a", "b", "c", "x"])
 
 
@@ -61,7 +62,7 @@ def _leaf():
         st.just({"fieldName": "name", "op": "EQ", "values": [None]}),
         st.builds(
             lambda p: {"fieldName": "name", "op": "MATCHES", "values": [p]},
-            st.sampled_from(["name_[0-9]+", "n.*", ".*'s", "name_2"]),
+            st.sampled_from(["name_[0-9]+", "n.*", ".*'s", "name_2", r"name_\d+"]),
         ),
     )
 
