@@ -24,9 +24,13 @@ Physical strategy (scale posture):
   through the same two tails.
 - Tie-break is (distance, base ordinal) ascending — deterministic under float
   associativity (SURVEY §7 "What's hard"); undefined (NaN) distances rank last.
+- ``_ranked_knn`` is the one exact KNN (ranked rows), in two shapes with one
+  NaN -> NULL rule: ``_as_arrays`` (``exact_knn``'s neighbor facets) and
+  ``_as_pairs`` (a row per neighbor: ``similarity.brute_force_topk``, the PQ
+  scans). ``_self_neighbors`` is the self-KNN edge list of the four
+  neighbor audits (hubness, label accuracy, mutual k-NN, overlap).
 - Query sides larger than ``max_broadcast_queries`` are split into pmod blocks
-  on the query ordinal, each collected and broadcast separately; the expr
-  path's ``block_partitions`` does the same for the Catalyst plan.
+  on the query ordinal, each collected and broadcast separately.
 """
 
 from __future__ import annotations
@@ -53,7 +57,6 @@ def exact_knn(
     base_ordinal: str = "ordinal",
     query_vec: str = "vector",
     base_vec: str = "vector",
-    block_partitions: int = 1,
     impl: str = "gemm",
 ) -> DataFrame:
     """Exact top-k neighbors per query.
@@ -85,11 +88,30 @@ def exact_knn(
       against sequential-sum SQL oracles, but it is ~100x slower than the
       BLAS kernel at reference scale, so gemm remains the default.
     """
+    return _as_arrays(
+        _ranked_knn(
+            queries, base, k, metric, query_ordinal, base_ordinal, query_vec, base_vec, impl
+        )
+    )
+
+
+def _ranked_knn(
+    queries: DataFrame,
+    base: DataFrame,
+    k: int,
+    metric: str,
+    query_ordinal: str,
+    base_ordinal: str,
+    query_vec: str,
+    base_vec: str,
+    impl: str,
+) -> DataFrame:
+    """The one exact KNN: ranked rows ``(__qid, __bid, __dist, rank)``,
+    ranks 1..k per query — ``_knn_kernel`` for ``impl="gemm"``, the
+    broadcast crossJoin over ``distance_expr`` otherwise (see exact_knn)."""
     if impl == "gemm":
-        return _as_arrays(
-            _knn_kernel(
-                queries, base, k, metric, query_ordinal, query_vec, base_ordinal, base_vec
-            )
+        return _knn_kernel(
+            queries, base, k, metric, query_ordinal, query_vec, base_ordinal, base_vec
         )
     q = queries.select(
         F.col(query_ordinal).alias("__qid"), F.col(query_vec).alias("__qvec")
@@ -97,24 +119,12 @@ def exact_knn(
     b = base.select(
         F.col(base_ordinal).alias("__bid"), F.col(base_vec).alias("__bvec")
     )
-
-    def one_block(qblock: DataFrame) -> DataFrame:
-        pairs = b.crossJoin(F.broadcast(qblock)).select(
-            "__qid",
-            "__bid",
-            distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
-        )
-        return _merge_topk(pairs, k)
-
-    if block_partitions <= 1:
-        topk = one_block(q)
-    else:
-        blocks = [
-            one_block(q.where(F.pmod(F.col("__qid"), F.lit(block_partitions)) == i))
-            for i in range(block_partitions)
-        ]
-        topk = reduce(DataFrame.unionByName, blocks)
-    return _as_arrays(topk)
+    pairs = b.crossJoin(F.broadcast(q)).select(
+        "__qid",
+        "__bid",
+        distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
+    )
+    return _merge_topk(pairs, k)
 
 
 def _partial_topk(
@@ -159,20 +169,34 @@ def _merge_topk(candidates: DataFrame, k: int) -> DataFrame:
     return candidates.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
+def _defined(dist):
+    """NaN distance -> NULL (the expr path's cosine policy): the one
+    undefined-distance rule of both output shapes."""
+    return F.when(F.isnan(dist), F.lit(None)).otherwise(dist)
+
+
 def _as_arrays(topk: DataFrame) -> DataFrame:
     """Ranked rows -> the neighbor facet shape ``(ordinal, indices,
-    distances)``; NaN distances become NULL (the expr path's cosine policy)."""
+    distances)``."""
     return (
         topk.groupBy("__qid")
         .agg(F.array_sort(F.collect_list(F.struct("rank", "__bid", "__dist"))).alias("__nn"))
         .select(
             F.col("__qid").alias("ordinal"),
             F.transform("__nn", lambda s: s["__bid"]).alias("indices"),
-            F.transform(
-                "__nn",
-                lambda s: F.when(F.isnan(s["__dist"]), F.lit(None)).otherwise(s["__dist"]),
-            ).alias("distances"),
+            F.transform("__nn", lambda s: _defined(s["__dist"])).alias("distances"),
         )
+    )
+
+
+def _as_pairs(topk: DataFrame, distance=None) -> DataFrame:
+    """Ranked rows -> one row per neighbor ``(query_id, rank, base_id,
+    distance)``; ``distance`` optionally replaces the ``__dist`` column."""
+    return topk.select(
+        F.col("__qid").alias("query_id"),
+        "rank",
+        F.col("__bid").alias("base_id"),
+        _defined(F.col("__dist") if distance is None else distance).alias("distance"),
     )
 
 
@@ -286,19 +310,19 @@ def verify_knn(
     metric: str = "cosine",
     sample_size: int = 100,
     seed: int = 42,
-    impl: str = "expr",
 ) -> DataFrame:
     """End-to-end verify_knn: sample queries deterministically, recompute KNN,
     compare to the stored answer key (03-cli-reference.md:201-218 defaults:
     sample 100, k 10). Sampling is by smallest md5(ordinal) — deterministic
-    and portable (same rows in any engine)."""
+    and portable (same rows in any engine). The sample is recomputed on
+    the GEMM kernel, the one ``compute knn`` writes keys with."""
     sampled = (
         queries.withColumn("__h", F.md5(F.col("ordinal").cast("string")))
         .orderBy("__h")
         .limit(sample_size)
         .drop("__h")
     )
-    computed = exact_knn(sampled, base, k, metric, impl=impl)
+    computed = exact_knn(sampled, base, k, metric)
     return knn_recall(computed, truth, k)
 
 
@@ -309,7 +333,6 @@ def verify_profiles(
     sample_size: int = 100,
     metric: str | None = None,
     profiles: list[str] | None = None,
-    impl: str = "gemm",
 ):
     """``analyze verify_profiles`` (README.md:45-46): verify the KNN answer
     keys of MANY profiles of one dataset efficiently — each distinct facet
@@ -343,12 +366,41 @@ def verify_profiles(
         queries = facet("query_vectors", p)
         truth = facet("neighbor_indices", p).withColumnRenamed("vector", "indices")
         r = verify_knn(
-            queries, base, truth, k=k, sample_size=sample_size, metric=metric, impl=impl
+            queries, base, truth, k=k, sample_size=sample_size, metric=metric
         ).collect()[0]
         results.append((p, float(r["mean_recall"]), int(r["n_queries"])))
     for df in cache.values():
         df.unpersist()
     return spark.createDataFrame(results, "profile STRING, mean_recall DOUBLE, n_queries BIGINT")
+
+
+def _self_neighbors(
+    df: DataFrame,
+    k: int,
+    metric: str,
+    id_col: str,
+    vec_col: str,
+    impl: str,
+    neighbors: DataFrame | None = None,
+) -> DataFrame:
+    """The self-KNN edge list the neighbor audits share: each id's k
+    nearest OTHER ids as ``(query_id, base_id, distance)``.
+
+    The input is the exact self-KNN at k+1 (``impl`` picks the kernel) or
+    the caller's precomputed ``neighbors`` list ``(query_id, base_id,
+    distance)`` — raw ANN output included. Self rows are dropped and the
+    rest re-ranked by (distance asc, NULLs last, base_id) to exactly k, so
+    an undefined distance never displaces a defined one."""
+    if neighbors is None:
+        cand = _ranked_knn(df, df, k + 1, metric, id_col, id_col, vec_col, vec_col, impl)
+    else:
+        cand = neighbors.select(
+            F.col("query_id").alias("__qid"),
+            F.col("base_id").alias("__bid"),
+            F.col("distance").alias("__dist"),
+        )
+    # _merge_topk's rank replaces the k+1 self-KNN's own
+    return _as_pairs(_merge_topk(cand.where(F.col("__qid") != F.col("__bid")), k)).drop("rank")
 
 
 def hubness_stats(
@@ -367,11 +419,12 @@ def hubness_stats(
     and ANN recall; the N_k distribution (and its skewness, computed
     downstream of this frame) is the standard diagnostic.
 
-    Plan: one self-KNN at k+1 (GEMM partial top-k by default — the scale
-    path), drop self rows, deterministic re-rank by (distance, base_id)
-    to exactly k, then ONE groupBy(base_id) count joined back to the id
-    universe so zero-occurrence anti-hubs report 0. Shuffles carry
-    (query_id, base_id, distance) triples only.
+    Plan: the shared ``_self_neighbors`` edge list (self-KNN at k+1, GEMM
+    partial top-k by default — the scale path; self rows dropped,
+    re-ranked by (distance NULLs last, base_id) to exactly k), then ONE
+    groupBy(base_id) count joined back to the id universe so
+    zero-occurrence anti-hubs report 0. Shuffles carry (query_id,
+    base_id, distance) triples only.
 
     ``neighbors`` is the CORPUS-SCALE path: pass a precomputed directed
     neighbor list (query_id, base_id, distance) from the ANN family
@@ -383,22 +436,7 @@ def hubness_stats(
 
     Returns (id, k_occurrence) — every input id exactly once.
     """
-    from pyspark.sql import Window
-
-    if neighbors is None:
-        from nbdatatools_spark.operators.similarity import brute_force_topk
-
-        pairs = brute_force_topk(
-            df, df, k + 1, metric=metric, query_id=id_col, base_id=id_col,
-            vec_col=vec_col, impl=impl,
-        )
-    else:
-        pairs = neighbors.select("query_id", "base_id", "distance")
-    pairs = pairs.where(F.col("query_id") != F.col("base_id"))
-    w = Window.partitionBy("query_id").orderBy("distance", "base_id")
-    topk = pairs.withColumn("__rk", F.row_number().over(w)).where(
-        F.col("__rk") <= k
-    )
+    topk = _self_neighbors(df, k, metric, id_col, vec_col, impl, neighbors)
     occ = topk.groupBy(F.col("base_id").alias("id")).agg(
         F.count(F.lit(1)).cast("int").alias("k_occurrence")
     )
@@ -430,32 +468,18 @@ def knn_label_accuracy(
     Returns a ROLLUP: one row per true label plus the grand-total row
     (gid=1, label NULL) — (gid, label, n, n_correct, accuracy at 6dp).
 
-    Plan: ONE self-KNN (GEMM partial top-k default; ``impl="expr"`` is
-    the oracle-parity audit path — a deliberate quadratic, keep it off
-    hot paths), one (query, neighbor-label) vote aggregate, one ranking
-    window over <= k rows per query, one rollup. All counts integer.
+    Plan: the shared ``_self_neighbors`` edge list (GEMM partial top-k
+    default; ``impl="expr"`` is the oracle-parity audit path — a
+    deliberate quadratic, keep it off hot paths), one (query,
+    neighbor-label) vote aggregate, one ranking window over <= k rows per
+    query, one rollup. All counts integer.
     """
-    from pyspark.sql import Window
-
-    from nbdatatools_spark.operators.similarity import brute_force_topk
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     labels = df.select(F.col(id_col).alias("__id"), F.col(label_col).alias("__l"))
-    pairs = brute_force_topk(
-        df, df, k + 1, metric=metric, query_id=id_col, base_id=id_col,
-        vec_col=vec_col, impl=impl,
-    ).where(F.col("query_id") != F.col("base_id"))
-    w = Window.partitionBy("query_id").orderBy("distance", "base_id")
-    neigh = (
-        pairs.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .join(
-            labels.select(
-                F.col("__id").alias("base_id"), F.col("__l").alias("__nl")
-            ),
-            "base_id",
-        )
+    neigh = _self_neighbors(df, k, metric, id_col, vec_col, impl).join(
+        labels.select(F.col("__id").alias("base_id"), F.col("__l").alias("__nl")),
+        "base_id",
     )
     votes = neigh.groupBy("query_id", "__nl").agg(F.count(F.lit(1)).alias("__v"))
     wv = Window.partitionBy("query_id").orderBy(F.desc("__v"), F.asc("__nl"))
@@ -499,32 +523,16 @@ def mutual_knn_pairs(
     reciprocity test; cf. the reciprocal-rank heuristics of Qin et al.
     CVPR 2011).
 
-    Plan: ONE self-KNN at k+1 (GEMM partial top-k default), self-drop +
-    deterministic re-rank to k, then the directed edge list self-joins on
-    the REVERSED key pair — an equi-join on (query, base) ids, never
-    all-pairs. ``neighbors`` is the corpus-scale path (see
-    hubness_stats): a precomputed ANN neighbor list replaces the exact
-    self-KNN; the reciprocity join is unchanged. Returns
-    (id_a, id_b, distance) with id_a < id_b, ordered.
+    Plan: the shared ``_self_neighbors`` edge list (self-KNN at k+1, GEMM
+    partial top-k default, self-drop + deterministic re-rank to k), then
+    the directed edge list self-joins on the REVERSED key pair — an
+    equi-join on (query, base) ids, never all-pairs. ``neighbors`` is
+    the corpus-scale path (see hubness_stats): a precomputed ANN neighbor
+    list replaces the exact self-KNN; the reciprocity join is unchanged.
+    Returns (id_a, id_b, distance) with id_a < id_b, ordered.
     """
-    from pyspark.sql import Window
-
-    if neighbors is None:
-        from nbdatatools_spark.operators.similarity import brute_force_topk
-
-        pairs = brute_force_topk(
-            df, df, k + 1, metric=metric, query_id=id_col, base_id=id_col,
-            vec_col=vec_col, impl=impl,
-        )
-    else:
-        pairs = neighbors.select("query_id", "base_id", "distance")
-    pairs = pairs.where(F.col("query_id") != F.col("base_id"))
-    w = Window.partitionBy("query_id").orderBy("distance", "base_id")
-    edges = (
-        pairs.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("query_id", "base_id", "distance")
-        .localCheckpoint(eager=False)
+    edges = _self_neighbors(df, k, metric, id_col, vec_col, impl, neighbors).localCheckpoint(
+        eager=False
     )
     fwd = edges.where(F.col("query_id") < F.col("base_id")).select(
         F.col("query_id").alias("id_a"),
@@ -564,12 +572,12 @@ def knn_overlap(
     space (recall@k is this with B = approximate). 1.0 = neighborhoods
     intact; ~k/n = unrelated spaces.
 
-    Plan: ONE self-KNN per space at k+1 (GEMM partial top-k default;
-    ``neighbors_a/b`` accept precomputed ANN lists — the hubness /
-    mutual-kNN corpus-scale convention), self-drop + deterministic
-    re-rank to k, then the two directed edge lists equi-join on
-    (query, base) — never all-pairs. Per-point overlaps round to 9dp
-    and DECIMAL-sum into the mean (engine-exact).
+    Plan: the shared ``_self_neighbors`` edge list per space (self-KNN at
+    k+1, GEMM partial top-k default; ``neighbors_a/b`` accept precomputed
+    ANN lists — the hubness / mutual-kNN corpus-scale convention;
+    self-drop + deterministic re-rank to k), then the two directed edge
+    lists equi-join on (query, base) — never all-pairs. Per-point
+    overlaps round to 9dp and DECIMAL-sum into the mean (engine-exact).
 
     Scale note (measured, 2k -> 20k vectors): the EXACT default is the
     deliberate GEMM-absorbed quadratic of the hubness family — 6.1x
@@ -588,24 +596,10 @@ def knn_overlap(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    from nbdatatools_spark.operators.similarity import brute_force_topk
 
     def edges(df, vec, nbrs):
-        if nbrs is None:
-            pairs = brute_force_topk(
-                df, df, k + 1, metric=metric, query_id=id_col,
-                base_id=id_col, vec_col=vec, impl=impl,
-            )
-        else:
-            pairs = nbrs.select("query_id", "base_id", "distance")
-        pairs = pairs.where(F.col("query_id") != F.col("base_id"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc_nulls_last(), F.col("base_id").asc()
-        )
-        return (
-            pairs.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= k)
-            .select("query_id", "base_id")
+        return _self_neighbors(df, k, metric, id_col, vec, impl, nbrs).select(
+            "query_id", "base_id"
         )
 
     ea = edges(df_a, vec_a, neighbors_a).localCheckpoint(eager=False)

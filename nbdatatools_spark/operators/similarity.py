@@ -1,8 +1,7 @@
 """Similarity search over embedding columns (SURVEY §7.8 extension).
 
-- ``brute_force_topk``: exact cosine/euclidean top-k — the correctness
-  baseline. Same physical shape as operators.knn (broadcast query side,
-  per-partition partial top-k).
+- ``brute_force_topk``: exact top-k — the correctness baseline; the ranked
+  rows of operators.knn's one exact KNN, one row per neighbor.
 - ``random_hyperplane_signature`` + ``lsh_topk``: cosine LSH — bucket both
   sides by an n-bit random-hyperplane signature and search only within the
   bucket (multi-probe optional). Hyperplanes are generated deterministically
@@ -26,9 +25,11 @@ from pyspark.sql import functions as F
 from nbdatatools_spark.functions.distance import distance_expr
 from nbdatatools_spark.operators.knn import (
     _CANDIDATES,
+    _as_pairs,
     _knn_kernel,
     _merge_topk,
     _partial_topk,
+    _ranked_knn,
     exact_knn,
 )
 
@@ -43,30 +44,17 @@ def brute_force_topk(
     vec_col: str = "embedding",
     impl: str = "gemm",
 ) -> DataFrame:
-    """Exact top-k neighbor pairs (query_id, rank, base_id, distance).
+    """Exact top-k neighbor pairs (query_id, rank, base_id, distance): the
+    ranked rows of ``knn._ranked_knn`` in the one-row-per-neighbor shape
+    (``exact_knn`` renders the same rows as neighbor arrays). Ranks run
+    1..k per query by (distance, base_id); undefined distances rank last
+    and are NULL.
 
     Default ``impl="gemm"`` — per-batch partial top-k, the scale path;
     pass ``impl="expr"`` only for bit-exact SQL-oracle comparisons (see
     exact_knn docstring)."""
-    nn = exact_knn(
-        queries,
-        base,
-        k,
-        metric,
-        query_ordinal=query_id,
-        base_ordinal=base_id,
-        query_vec=vec_col,
-        base_vec=vec_col,
-        impl=impl,
-    )
-    return nn.select(
-        F.col("ordinal").alias("query_id"),
-        F.posexplode(F.arrays_zip("indices", "distances")).alias("pos", "pair"),
-    ).select(
-        "query_id",
-        (F.col("pos") + 1).alias("rank"),
-        F.col("pair.indices").alias("base_id"),
-        F.col("pair.distances").alias("distance"),
+    return _as_pairs(
+        _ranked_knn(queries, base, k, metric, query_id, base_id, vec_col, vec_col, impl)
     )
 
 
@@ -452,16 +440,6 @@ def _rerank(
         distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
     )
     return _as_pairs(_merge_topk(rer, k))
-
-
-def _as_pairs(topk: DataFrame, distance=None) -> DataFrame:
-    """Ranked kernel rows -> ``(query_id, rank, base_id, distance)``."""
-    return topk.select(
-        F.col("__qid").alias("query_id"),
-        "rank",
-        F.col("__bid").alias("base_id"),
-        (F.col("__dist") if distance is None else distance).alias("distance"),
-    )
 
 
 # --- IVFADC: IVF coarse quantizer + PQ on residuals ------------------------
@@ -1155,14 +1133,6 @@ def ann_tuning_report(
     the recall buys). All comparisons run on id sets, never distances, so
     kernel float noise can't blur the readout.
     """
-    from nbdatatools_spark.operators.knn import (
-    _CANDIDATES,
-    _knn_kernel,
-    _merge_topk,
-    _partial_topk,
-    exact_knn,
-)
-
     truth = exact_knn(
         queries, base, k,
         metric="cosine",
@@ -1518,14 +1488,6 @@ def compression_report(
     Returns (method, bytes_per_vector, compression_x, recall) — the
     numbers that decide which tier a 100-TB embedding store lands on.
     """
-    from nbdatatools_spark.operators.knn import (
-    _CANDIDATES,
-    _knn_kernel,
-    _merge_topk,
-    _partial_topk,
-    exact_knn,
-)
-
     queries = df.where(F.col(id_col) < n_queries)
     truth = exact_knn(
         queries, df, k, metric="cosine",

@@ -62,7 +62,7 @@ def main() -> None:
 
     # 3. verify_knn defaults: sample 100, k=10 (03-cli-reference.md:201-218)
     t0 = time.time()
-    r = verify_knn(queries, base, truth, k=10, sample_size=100, impl="gemm").collect()[0]
+    r = verify_knn(queries, base, truth, k=10, sample_size=100).collect()[0]
     results["verify_knn_sample100_k10_sec"] = round(time.time() - t0, 2)
     results["verify_knn_mean_recall"] = round(r["mean_recall"], 6)
 

@@ -123,7 +123,12 @@ def main():
     candidates = "--candidates" in argv
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])
-    spark = get_spark("oracle-check", shuffle_partitions=8)
+    spark = get_spark(
+        "oracle-check",
+        shuffle_partitions=8,
+        # keep the \r progress bar out of the log so `ok <gate>` lines grep cleanly
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for name in (
         "region nation customer supplier part orders lineitem events documents embeddings".split()

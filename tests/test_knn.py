@@ -7,7 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from nbdatatools_spark.operators.hybrid import hybrid_ground_truth, result_indices_table
-from nbdatatools_spark.operators.knn import exact_knn, knn_recall, verify_knn
+from nbdatatools_spark.operators.knn import (
+    _as_arrays,
+    _knn_kernel,
+    exact_knn,
+    knn_recall,
+    verify_knn,
+)
 from nbdatatools_spark.operators.analysis import neighbor_invariants
 
 N, DIM, K = 200, 16, 5
@@ -60,10 +66,14 @@ def test_block_partitioned_equals_single(vecs):
     df, _ = vecs
     q = df.where(F.col("ordinal") < 12)
     a = {r["ordinal"]: list(r["indices"]) for r in exact_knn(q, df, K).collect()}
-    b = {
-        r["ordinal"]: list(r["indices"])
-        for r in exact_knn(q, df, K, block_partitions=3).collect()
-    }
+    # a cap of 5 splits the 12 queries into 3 pmod blocks
+    blocked = _as_arrays(
+        _knn_kernel(
+            q, df, K, "cosine", "ordinal", "vector", "ordinal", "vector",
+            max_broadcast_queries=5,
+        )
+    )
+    b = {r["ordinal"]: list(r["indices"]) for r in blocked.collect()}
     assert a == b
 
 
@@ -229,3 +239,14 @@ def test_hubness_and_mutual_knn_accept_ann_neighbors(spark, sf_dir):
     ann = lsh_topk(emb, emb, 6, dim=64, n_bits=8)
     h = hubness_stats(emb, k=5, neighbors=ann)
     assert h.count() == emb.count()
+    # an undefined (NULL) distance ranks after every defined one: query 0's
+    # nearest other id is 2, not the NULL-distance 1
+    four = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)], "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    )
+    nbrs = spark.createDataFrame(
+        [(0, 0, 0.0), (0, 1, None), (0, 2, 0.5), (1, 2, 0.1), (2, 1, 0.1), (3, 2, 0.2)],
+        "query_id BIGINT, base_id BIGINT, distance DOUBLE",
+    )
+    occ = {r["id"]: r["k_occurrence"] for r in hubness_stats(four, k=1, neighbors=nbrs).collect()}
+    assert occ == {0: 0, 1: 1, 2: 3, 3: 0}
