@@ -60,17 +60,12 @@ def _spark():
 
 
 def _read_vectors(spark, path: str):
-    from nbdatatools_spark.sources.xvec import is_xvec, read_xvec
+    from nbdatatools_spark.sources import open_vectors
 
-    if is_xvec(path):
-        return read_xvec(spark, path)
-    if path.endswith(".parquet") or os.path.isdir(path):
-        return spark.read.parquet(path)
-    if path.endswith(".csv"):
-        from nbdatatools_spark.sources.csv_vec import read_csv_vectors
-
-        return read_csv_vectors(spark, path)
-    raise SystemExit(f"unsupported vector input: {path}")
+    try:
+        return open_vectors(spark, path)
+    except ValueError as e:
+        raise SystemExit(str(e)) from None
 
 
 def _write_vectors(df, path: str) -> None:
@@ -151,14 +146,7 @@ def _cmd_analyze(args) -> int:
 
         base = df
         queries = _read_vectors(spark, args.queries)
-        truth = spark.read.parquet(args.truth) if args.truth.endswith(".parquet") else None
-        if truth is None:
-            from nbdatatools_spark.sources.xvec import read_xvec
-
-            idx = read_xvec(spark, args.truth)
-            from pyspark.sql import functions as F
-
-            truth = idx.select("ordinal", F.col("vector").alias("indices"))
+        truth = _read_vectors(spark, args.truth).withColumnRenamed("vector", "indices")
         rep = verify_knn(
             queries, base, truth, k=args.k, metric=args.metric, sample_size=args.sample
         ).collect()

@@ -278,12 +278,18 @@ def knn_recall(
     Reference: ``verify_knn`` — membership comparison (set-wise, not
     order-sensitive), README.md:46-47; recall = |computed ∩ expected| / k.
     Returns a 1-row DataFrame (mean_recall, n_queries).
+
+    Missing-row policy: every row of ``computed`` is scored, and a query
+    absent from ``truth`` scores 0 — a truncated answer key lowers recall
+    instead of silently shrinking ``n_queries``. Rows of ``truth`` with no
+    computed row are not scored.
     """
     joined = computed.select(
         F.col(ordinal).alias("__o"), F.col(computed_indices).alias("__c")
     ).join(
         truth.select(F.col(ordinal).alias("__o"), F.col(truth_indices).alias("__t")),
         "__o",
+        "left",
     )
     per_query = joined.select(
         F.col("__o"),
@@ -291,7 +297,11 @@ def knn_recall(
             F.size(
                 F.array_intersect(
                     F.slice("__c", 1, k).cast("array<bigint>"),
-                    F.slice("__t", 1, k).cast("array<bigint>"),
+                    # absent key -> empty set: size(NULL) is -1 outside ANSI
+                    F.coalesce(
+                        F.slice("__t", 1, k).cast("array<bigint>"),
+                        F.array().cast("array<bigint>"),
+                    ),
                 )
             ).cast("double")
             / k

@@ -7,22 +7,36 @@
   bucket (multi-probe optional). Hyperplanes are generated deterministically
   from a seed on the driver (tiny: n_bits x dim floats) and inlined as literal
   arrays, so the bucketing is a pure Catalyst expression.
-- ``ivf_topk``: IVF-style partition search — KMeans centroids (MLlib, trained
-  on a sample), each base vector assigned to its nearest centroid once
-  (precomputable / materializable), queries probe the ``nprobe`` nearest
-  centroids. At 100TB the assignment table is bucketed by centroid id so each
-  query touches ~nprobe/k_centroids of the data.
+- ``ivf_topk``: IVF-style partition search — clustering.kmeans_centroids
+  (MLlib, trained on a sample), each base vector assigned to its nearest
+  centroid once by clustering.centroid_assign (precomputable /
+  materializable, see ``ivf_build_index``), queries probe the ``nprobe``
+  nearest centroids (``_ivf_probe``). At 100TB the assignment table is
+  bucketed by centroid id so each query touches ~nprobe/k_centroids of the
+  data.
+- The approximate searches share operators.knn's tail: each produces
+  ``(__qid, __bid, __dist)`` candidates and returns
+  ``_as_pairs(_merge_topk(candidates, k))`` — ranks by (distance asc, NULLs
+  last, base id), undefined (NaN) distances NULL, as for the exact paths.
+  ``bq_topk`` keeps its own window: its rows carry a ``hamming`` column.
+- PQ/OPQ/IVFADC train on the driver with one seeded Lloyd loop
+  (``_lloyd``) and encode with one nearest-codeword pass (``_pq_codes``).
 """
 
 from __future__ import annotations
 
-import math
 import random
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nbdatatools_spark.functions.distance import distance_expr
+from nbdatatools_spark.operators.clustering import (
+    _centroid_struct_array,
+    centroid_assign,
+    kmeans_centroids,
+)
 from nbdatatools_spark.operators.knn import (
     _CANDIDATES,
     _as_pairs,
@@ -31,6 +45,7 @@ from nbdatatools_spark.operators.knn import (
     _partial_topk,
     _ranked_knn,
     exact_knn,
+    knn_recall,
 )
 
 
@@ -95,28 +110,59 @@ def lsh_topk(
     join shuffles on the signature — uniform by construction.
     """
     qsig = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        random_hyperplane_signature(F.col(vec_col), dim, n_bits, seed).alias("sig"),
+        F.col(query_id).alias("__qid"),
+        F.col(vec_col).alias("__qvec"),
+        random_hyperplane_signature(F.col(vec_col), dim, n_bits, seed).alias("__sig"),
     )
     bsig = base.select(
-        F.col(base_id).alias("bid"),
-        F.col(vec_col).alias("bvec"),
-        random_hyperplane_signature(F.col(vec_col), dim, n_bits, seed).alias("sig"),
+        F.col(base_id).alias("__bid"),
+        F.col(vec_col).alias("__bvec"),
+        random_hyperplane_signature(F.col(vec_col), dim, n_bits, seed).alias("__sig"),
     )
-    pairs = bsig.join(F.broadcast(qsig), "sig").select(
-        "qid",
-        "bid",
-        distance_expr("cosine", F.col("qvec"), F.col("bvec")).alias("distance"),
+    cands = _cosine_candidates(bsig.join(F.broadcast(qsig), "__sig"))
+    return _as_pairs(_merge_topk(cands, k))
+
+
+def _cosine_candidates(pairs: DataFrame) -> DataFrame:
+    """``(__qid, __bid, __dist)`` candidates of a joined ``(__qid, __qvec,
+    __bid, __bvec)`` pair table, scored by exact cosine distance."""
+    return pairs.select(
+        "__qid",
+        "__bid",
+        distance_expr("cosine", F.col("__qvec"), F.col("__bvec")).alias("__dist"),
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("distance").asc_nulls_last(), F.col("bid").asc()
+
+
+def _ivf_probe(queries: DataFrame, centroids, nprobe: int, query_id: str, vec_col: str):
+    """``(__qid, __qvec, centroid_id)``: each query's ``nprobe`` nearest
+    cells — the first ``nprobe`` ids of its (euclidean distance, id)-sorted
+    ``_centroid_struct_array``, exploded (queries are the small side)."""
+    return queries.select(
+        F.col(query_id).alias("__qid"),
+        F.col(vec_col).alias("__qvec"),
+        F.explode_outer(
+            F.transform(
+                F.slice(
+                    F.array_sort(_centroid_struct_array(F.col(vec_col), centroids, "euclidean")),
+                    1,
+                    nprobe,
+                ),
+                lambda s: s["centroid_id"],
+            )
+        ).alias("centroid_id"),
+        # explode_outer: inner explode's inferred size()>0 filter would
+        # inline the whole centroid-distance array build into an
+        # interpreted per-row scan filter (the winnow trap); the array is
+        # never empty (nprobe >= 1), so semantics are unchanged.
     )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("qid").alias("query_id"), "rank", F.col("bid").alias("base_id"), "distance")
-    )
+
+
+def _ivf_rank(cells: DataFrame, probe: DataFrame, k: int) -> DataFrame:
+    """Top-k pairs of the base rows ``(__bid, __bvec, centroid_id)`` in each
+    query's probed cells, ranked by exact cosine distance. The probe side is
+    tiny -> broadcast; the only large shuffle keys on the query id."""
+    cands = _cosine_candidates(cells.join(F.broadcast(probe), "centroid_id"))
+    return _as_pairs(_merge_topk(cands, k))
 
 
 def ivf_topk(
@@ -133,74 +179,19 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF: KMeans-partitioned approximate search.
 
-    Train centroids on a (deterministic) sample, assign base vectors to
-    nearest centroid, probe the nprobe nearest centroids per query. The
-    centroid table is tiny -> broadcast on both sides; the only large shuffle
-    keys on centroid id.
+    Train centroids on a (deterministic) sample with
+    ``clustering.kmeans_centroids``, assign base vectors to the nearest
+    centroid with the shuffle-free ``clustering.centroid_assign`` (one
+    literal-array argmin projection, VERDICT r1 #4), probe the nprobe
+    nearest centroids per query. The centroid table is tiny -> inlined on
+    both sides; the only large shuffle keys on the query id.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    train = base.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    if sample_fraction < 1.0:
-        train = train.sample(fraction=sample_fraction, seed=seed)
-    model = KMeans(k=n_centroids, seed=seed, maxIter=20).fit(train)
-    centroids = [list(c) for c in model.clusterCenters()]
-
-    # Shuffle-free assignment (VERDICT r1 #4): the centroid table is tiny by
-    # construction, so inline it as a literal array of (cdist, centroid_id)
-    # structs and take the per-row argmin with array_min — struct comparison
-    # is field-order lexicographic, i.e. exactly the (cdist ASC, centroid_id
-    # ASC) tie-break. The old plan crossJoined base x centroids and ranked
-    # with a Window.partitionBy(bid): a full B*n_centroids shuffle just to
-    # compute a per-row minimum.
-    def _cent_struct_array(vec):
-        return F.array(
-            *[
-                F.struct(
-                    distance_expr(
-                        "euclidean", vec, F.array(*[F.lit(float(x)) for x in c])
-                    ).alias("cdist"),
-                    F.lit(i).alias("centroid_id"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        )
-
-    bass = base.select(
-        F.col(base_id).alias("bid"),
-        F.col(vec_col).alias("bvec"),
-        F.array_min(_cent_struct_array(F.col(vec_col)))["centroid_id"].alias("centroid_id"),
+    centroids = kmeans_centroids(base, n_centroids, vec_col, seed, 20, sample_fraction)
+    cells = centroid_assign(
+        base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec")),
+        centroids, "euclidean", "__bvec", impl="expr",
     )
-    # query side: nprobe nearest centroids = first nprobe of the sorted
-    # struct array — same projection trick, then explode (queries are small)
-    qprobe = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        F.explode_outer(
-            F.transform(
-                F.slice(F.array_sort(_cent_struct_array(F.col(vec_col))), 1, nprobe),
-                lambda s: s["centroid_id"],
-            )
-        ).alias("centroid_id"),
-        # explode_outer: inner explode's inferred size()>0 filter would
-        # inline the whole centroid-distance array build into an
-        # interpreted per-row scan filter (the winnow trap); the array is
-        # never empty (nprobe >= 1), so semantics are unchanged.
-    )
-    pairs = bass.join(F.broadcast(qprobe), "centroid_id").select(
-        "qid",
-        "bid",
-        distance_expr("cosine", F.col("qvec"), F.col("bvec")).alias("distance"),
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("distance").asc_nulls_last(), F.col("bid").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("qid").alias("query_id"), "rank", F.col("bid").alias("base_id"), "distance")
-    )
+    return _ivf_rank(cells, _ivf_probe(queries, centroids, nprobe, query_id, vec_col), k)
 
 
 # --- Product quantization (PQ/ADC) -----------------------------------------
@@ -214,6 +205,57 @@ def ivf_topk(
 # table lookups + adds — no float vector is ever touched at scan time.
 # At 100TB of raw embeddings the codes table is ~3TB at d=256, m=8: the
 # difference between a scan that fits the page cache and one that doesn't.
+
+
+def _nearest(X, C):
+    """Row-wise index of the nearest row of ``C`` (squared euclidean; ties
+    -> lowest index)."""
+    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
+
+
+def _lloyd(Y, n_out: int, iters: int, rng):
+    """The one Lloyd k-means: ``min(n_out, len(Y))`` seeds drawn from ``Y``
+    by ``rng``, ``iters`` assign/mean rounds (an empty cluster keeps its
+    centroid), returned as ``(n_out, d)`` — a sample smaller than
+    ``n_out`` pads with the first centroid."""
+    k = min(n_out, len(Y))
+    cents = Y[rng.choice(len(Y), size=k, replace=False)].copy()
+    for _ in range(iters):
+        assign = _nearest(Y, cents)
+        for c in range(k):
+            mask = assign == c
+            if mask.any():
+                cents[c] = Y[mask].mean(0)
+    out = np.empty((n_out, Y.shape[1]))
+    out[:k] = cents
+    out[k:] = cents[0]
+    return out
+
+
+def _pq_books(Y, m: int, n_codes: int, iters: int, rng):
+    """(m, n_codes, d//m) codebooks: ``_lloyd`` on each subspace in turn,
+    one ``rng`` stream across subspaces."""
+    dsub = Y.shape[1] // m
+    return np.stack(
+        [_lloyd(Y[:, s * dsub : (s + 1) * dsub], n_codes, iters, rng) for s in range(m)]
+    )
+
+
+def _pq_codes(X, books):
+    """(n, m) uint8 codes: the nearest codeword per subspace."""
+    m, _, dsub = books.shape
+    return np.stack(
+        [_nearest(X[:, s * dsub : (s + 1) * dsub], books[s]) for s in range(m)], axis=1
+    ).astype(np.uint8)
+
+
+def _sample_matrix(base: DataFrame, vec_col: str, sample_limit: int, m: int):
+    """The driver-side training sample as float64, checked for ``d % m``."""
+    rows = base.select(vec_col).limit(sample_limit).collect()
+    X = np.array([r[0] for r in rows], dtype=np.float64)
+    if X.shape[1] % m != 0:
+        raise ValueError(f"dim {X.shape[1]} not divisible by m={m}")
+    return X
 
 
 def pq_train(
@@ -245,53 +287,21 @@ def pq_train(
     matrix to apply to vectors (``X @ R``) before encoding — pass it to
     pq_encode/pq_topk as ``rotation=``.
     """
-    import numpy as np
-
-    rows = base.select(vec_col).limit(sample_limit).collect()
-    X = np.array([r[0] for r in rows], dtype=np.float64)
-    n, d = X.shape
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
-    k = min(n_codes, n)
-
-    def lloyd(Y, rng):
-        books = np.empty((m, n_codes, dsub))
-        for s in range(m):
-            sub = Y[:, s * dsub : (s + 1) * dsub]
-            cents = sub[rng.choice(n, size=k, replace=False)].copy()
-            for _ in range(iters):
-                d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-                assign = d2.argmin(1)
-                for c in range(k):
-                    mask = assign == c
-                    if mask.any():
-                        cents[c] = sub[mask].mean(0)
-            books[s, :k] = cents
-            if k < n_codes:  # degenerate tiny sample: pad with first centroid
-                books[s, k:] = cents[0]
-        return books
-
+    X = _sample_matrix(base, vec_col, sample_limit, m)
     if not opq:
-        return lloyd(X, np.random.default_rng(seed))
+        return _pq_books(X, m, n_codes, iters, np.random.default_rng(seed))
 
-    def reconstruct(Y, books):
-        Yhat = np.empty_like(Y)
-        for s in range(m):
-            sub = Y[:, s * dsub : (s + 1) * dsub]
-            d2 = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(-1)
-            Yhat[:, s * dsub : (s + 1) * dsub] = books[s][d2.argmin(1)]
-        return Yhat
-
-    R = np.eye(d)
+    R = np.eye(X.shape[1])
     for _ in range(opq_iters):
         Y = X @ R
         # fresh identically-seeded rng per iteration: each alternation is
         # a deterministic function of (X, R), so training is replayable
-        books = lloyd(Y, np.random.default_rng(seed))
-        U, _, Vt = np.linalg.svd(X.T @ reconstruct(Y, books))
+        books = _pq_books(Y, m, n_codes, iters, np.random.default_rng(seed))
+        # reconstruction: each subspace replaced by its nearest codeword
+        Yhat = books[np.arange(m), _pq_codes(Y, books)].reshape(Y.shape)
+        U, _, Vt = np.linalg.svd(X.T @ Yhat)
         R = U @ Vt
-    return lloyd(X @ R, np.random.default_rng(seed)), R
+    return _pq_books(X @ R, m, n_codes, iters, np.random.default_rng(seed)), R
 
 
 def pq_encode(
@@ -304,7 +314,6 @@ def pq_encode(
     """(id, codes BINARY) — each vector becomes m uint8 codes. Vectorized
     per Arrow batch; the codebooks (and the optional OPQ ``rotation``,
     applied as ``X @ R`` before subspace assignment) broadcast once."""
-    import numpy as np
     import pandas as pd
 
     spark = base.sparkSession
@@ -314,20 +323,17 @@ def pq_encode(
 
     def encode(batches):
         books, rot = bc.value
-        m, n_codes, dsub = books.shape
         for pdf in batches:
             if pdf.empty:
                 continue
             X = np.array(list(pdf[vec_col]), dtype=np.float64)
             if rot is not None:
                 X = X @ rot
-            codes = np.empty((len(X), m), dtype=np.uint8)
-            for s in range(m):
-                sub = X[:, s * dsub : (s + 1) * dsub]
-                d2 = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(-1)
-                codes[:, s] = d2.argmin(1)
             yield pd.DataFrame(
-                {"id": pdf[base_id].to_numpy(), "codes": [c.tobytes() for c in codes]}
+                {
+                    "id": pdf[base_id].to_numpy(),
+                    "codes": [c.tobytes() for c in _pq_codes(X, books)],
+                }
             )
 
     return base.select(base_id, vec_col).mapInPandas(encode, "id BIGINT, codes BINARY")
@@ -366,8 +372,6 @@ def pq_topk(
     quantization error then only affects the shortlist boundary, and the
     extra cost is one broadcast join on Q*k*factor rows.
     """
-    import numpy as np
-
     spark = encoded.sparkSession
     metric_key = metric.strip().lower()
     if metric_key not in ("euclidean", "l2", "dot", "dot_product"):
@@ -465,70 +469,28 @@ def ivfpq_build(
     probe touches ~nprobe/n_centroids of the files; the codes are m bytes
     per vector, so even a full scan reads d*4/m x less than raw floats.
     """
-    import numpy as np
     import pandas as pd
 
     spark = base.sparkSession
-    rows = base.select(vec_col).limit(sample_limit).collect()
-    X = np.array([r[0] for r in rows], dtype=np.float64)
-    n, d = X.shape
-    kc = min(n_centroids, n)
+    X = _sample_matrix(base, vec_col, sample_limit, m)
+    # one rng stream: coarse seeds first, then each subspace's
     rng = np.random.default_rng(seed)
-    cents = X[rng.choice(n, size=kc, replace=False)].copy()
-    for _ in range(iters):
-        d2 = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = d2.argmin(1)
-        for c in range(kc):
-            mask = assign == c
-            if mask.any():
-                cents[c] = X[mask].mean(0)
-    centroids = np.zeros((n_centroids, d))
-    centroids[:kc] = cents
-    if kc < n_centroids:
-        centroids[kc:] = cents[0]
-
-    # PQ books over residuals of the sample
-    resid = X - centroids[((X[:, None, :] - centroids[None, :, :]) ** 2).sum(-1).argmin(1)]
-    dsub = d // m
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    kq = min(n_codes, n)
-    books = np.empty((m, n_codes, dsub))
-    for s in range(m):
-        sub = resid[:, s * dsub : (s + 1) * dsub]
-        bc_ = sub[rng.choice(n, size=kq, replace=False)].copy()
-        for _ in range(iters):
-            dd = ((sub[:, None, :] - bc_[None, :, :]) ** 2).sum(-1)
-            a = dd.argmin(1)
-            for c in range(kq):
-                msk = a == c
-                if msk.any():
-                    bc_[c] = sub[msk].mean(0)
-        books[s, :kq] = bc_
-        if kq < n_codes:
-            books[s, kq:] = bc_[0]
-
+    centroids = _lloyd(X, n_centroids, iters, rng)
+    books = _pq_books(X - centroids[_nearest(X, centroids)], m, n_codes, iters, rng)
     bc = spark.sparkContext.broadcast((centroids, books))
 
     def encode(batches):
         C, B = bc.value
-        mm, ncodes, ds = B.shape
         for pdf in batches:
             if pdf.empty:
                 continue
             X_ = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cid = ((X_[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
-            R = X_ - C[cid]
-            codes = np.empty((len(X_), mm), dtype=np.uint8)
-            for s in range(mm):
-                sub = R[:, s * ds : (s + 1) * ds]
-                dd = ((sub[:, None, :] - B[s][None, :, :]) ** 2).sum(-1)
-                codes[:, s] = dd.argmin(1)
+            cid = _nearest(X_, C)
             yield pd.DataFrame(
                 {
                     "id": pdf[base_id].to_numpy(),
                     "centroid_id": cid.astype(np.int32),
-                    "codes": [c.tobytes() for c in codes],
+                    "codes": [c.tobytes() for c in _pq_codes(X_ - C[cid], B)],
                 }
             )
 
@@ -561,8 +523,6 @@ def ivfpq_topk(
     (or partition pruning on a centroid_id-partitioned table) the scan
     itself skips unprobed data at 100TB.
     """
-    import numpy as np
-
     spark = encoded.sparkSession
     centroids, books = index
     qrows = queries.select(query_id, vec_col).limit(max_broadcast_queries + 1).collect()
@@ -865,8 +825,6 @@ def hard_negatives(
     ``impl="expr"`` is the sequential-fold Catalyst path whose arithmetic a
     SQL oracle reproduces bit-for-bit.
     """
-    import numpy as np
-
     if impl == "expr":
         q = queries.select(
             F.col(query_id).alias("__qid"),
@@ -914,54 +872,48 @@ def ivf_build_index(
     job, so it must be paid once and reused across query batches).
 
     Layout under ``index_dir``:
-    - ``centroids.parquet`` (centroid_id INT, centroid ARRAY<DOUBLE>) — tiny
+    - ``centroids.parquet`` (centroid_id INT, centroid ARRAY<DOUBLE>) — tiny;
+      ids are 0..n_centroids-1
     - ``assignments.parquet`` — the base table + ``centroid_id``, written
       PARTITIONED BY centroid_id, so a probe of c cells reads exactly c
       directories (partition pruning = the inverted-list seek)
 
-    Returns ``{"n_centroids", "n_vectors"}``. Training and the shuffle-free
-    literal-argmin assignment reuse the ivf_topk internals.
+    Returns ``{"n_centroids", "n_vectors"}``. Training and assignment are
+    ivf_topk's: ``clustering.kmeans_centroids`` with the same seed,
+    iterations and sample, then the shuffle-free
+    ``clustering.centroid_assign``.
     """
     import os
 
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = base.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    if sample_fraction < 1.0:
-        train = train.sample(fraction=sample_fraction, seed=seed)
-    model = KMeans(k=n_centroids, seed=seed, maxIter=20).fit(train)
-    centroids = [[float(x) for x in c] for c in model.clusterCenters()]
+    centroids = kmeans_centroids(base, n_centroids, vec_col, seed, 20, sample_fraction)
     spark = base.sparkSession
     spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
+        list(enumerate(centroids)),
         "centroid_id INT, centroid ARRAY<DOUBLE>",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "centroids.parquet"))
-
-    def _cent_struct_array(vec):
-        return F.array(
-            *[
-                F.struct(
-                    distance_expr(
-                        "euclidean", vec, F.array(*[F.lit(float(x)) for x in c])
-                    ).alias("cdist"),
-                    F.lit(i).alias("centroid_id"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        )
-
-    assigned = base.withColumn(
-        "centroid_id",
-        F.array_min(_cent_struct_array(F.col(vec_col)))["centroid_id"],
-    )
+    assigned = centroid_assign(base, centroids, "euclidean", vec_col, impl="expr")
     assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
         os.path.join(index_dir, "assignments.parquet")
     )
     n = spark.read.parquet(os.path.join(index_dir, "assignments.parquet")).count()
     return {"n_centroids": len(centroids), "n_vectors": n}
+
+
+def _read_centroids(spark, index_dir: str) -> list[list[float]]:
+    """The index's centroids in id order. Probe and assignment label cells
+    by list position, so ids other than 0..n-1 raise instead of
+    mislabelling cells."""
+    import os
+
+    rows = spark.read.parquet(os.path.join(index_dir, "centroids.parquet")).orderBy(
+        "centroid_id"
+    ).collect()
+    ids = [r.centroid_id for r in rows]
+    if not rows or ids != list(range(len(rows))):
+        raise ValueError(
+            f"centroids under {index_dir!r} must carry ids 0..n-1, found {ids[:8]}"
+        )
+    return [list(r.centroid) for r in rows]
 
 
 def ivf_append_index(
@@ -995,10 +947,7 @@ def ivf_append_index(
     import os
 
     spark = new_vectors.sparkSession
-    cents = spark.read.parquet(os.path.join(index_dir, "centroids.parquet")).collect()
-    if not cents:
-        raise ValueError(f"no centroids found under {index_dir!r}")
-    centroids = {r.centroid_id: list(r.centroid) for r in cents}
+    centroids = _read_centroids(spark, index_dir)
 
     batch = new_vectors
     if drop_existing_ids:
@@ -1007,23 +956,7 @@ def ivf_append_index(
         ).select(F.col(base_id))
         batch = batch.join(seen, base_id, "left_anti")
 
-    def _cent_struct_array(vec):
-        return F.array(
-            *[
-                F.struct(
-                    distance_expr(
-                        "euclidean", vec, F.array(*[F.lit(float(x)) for x in c])
-                    ).alias("cdist"),
-                    F.lit(i).alias("centroid_id"),
-                )
-                for i, c in sorted(centroids.items())
-            ]
-        )
-
-    assigned = batch.withColumn(
-        "centroid_id",
-        F.array_min(_cent_struct_array(F.col(vec_col)))["centroid_id"],
-    )
+    assigned = centroid_assign(batch, centroids, "euclidean", vec_col, impl="expr")
     assigned.write.mode("append").partitionBy("centroid_id").parquet(
         os.path.join(index_dir, "assignments.parquet")
     )
@@ -1055,59 +988,25 @@ def ivf_search_index(
     tiny centroid table, compute each query's nprobe nearest cells, and
     scan ONLY those cells — ``centroid_id IN (...)`` prunes partitions of
     the assignments table, so the scan touches c directories out of
-    n_centroids (visible as PartitionFilters in the plan). Ranking is the
-    ivf_topk tail: per-cell candidates, global top-k window per query."""
+    n_centroids (visible as PartitionFilters in the plan). Probe and
+    ranking are ivf_topk's ``_ivf_probe`` and ``_ivf_rank``, so the same
+    centroids give the same pairs."""
     import os
 
-    cents = spark.read.parquet(os.path.join(index_dir, "centroids.parquet")).collect()
-    centroids = {r.centroid_id: list(r.centroid) for r in cents}
-
-    def _cent_struct_array(vec):
-        return F.array(
-            *[
-                F.struct(
-                    distance_expr(
-                        "euclidean", vec, F.array(*[F.lit(float(x)) for x in c])
-                    ).alias("cdist"),
-                    F.lit(i).alias("centroid_id"),
-                )
-                for i, c in sorted(centroids.items())
-            ]
-        )
-
-    qprobe = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        F.explode_outer(
-            F.transform(
-                F.slice(F.array_sort(_cent_struct_array(F.col(vec_col))), 1, nprobe),
-                lambda s: s["centroid_id"],
-            )
-        ).alias("centroid_id"),
-        # explode_outer: inner explode's inferred size()>0 filter would
-        # inline the whole centroid-distance array build into an
-        # interpreted per-row scan filter (the winnow trap); the array is
-        # never empty (nprobe >= 1), so semantics are unchanged.
-    )
+    qprobe = _ivf_probe(queries, _read_centroids(spark, index_dir), nprobe, query_id, vec_col)
     # bounded driver list of probed cells -> partition-pruning IN filter
     probed = sorted({r.centroid_id for r in qprobe.select("centroid_id").distinct().collect()})
-    assignments = spark.read.parquet(os.path.join(index_dir, "assignments.parquet")).where(
+    cells = spark.read.parquet(os.path.join(index_dir, "assignments.parquet")).where(
         F.col("centroid_id").isin(probed)
-    )
-    pairs = assignments.select(
-        F.col(base_id).alias("bid"), F.col(vec_col).alias("bvec"), "centroid_id"
-    ).join(F.broadcast(qprobe), "centroid_id").select(
-        "qid",
-        "bid",
-        distance_expr("cosine", F.col("qvec"), F.col("bvec")).alias("distance"),
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("distance").asc_nulls_last(), F.col("bid").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("qid").alias("query_id"), "rank", F.col("bid").alias("base_id"), "distance")
+    ).select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"), "centroid_id")
+    return _ivf_rank(cells, qprobe, k)
+
+
+def _neighbor_sets(pairs: DataFrame) -> DataFrame:
+    """ANN pairs ``(query_id, base_id, ...)`` -> ``(ordinal, indices)``,
+    the shape ``knn_recall`` scores."""
+    return pairs.groupBy(F.col("query_id").alias("ordinal")).agg(
+        F.collect_list("base_id").alias("indices")
     )
 
 
@@ -1139,7 +1038,7 @@ def ann_tuning_report(
         query_ordinal=query_id, base_ordinal=base_id,
         query_vec=vec_col, base_vec=vec_col,
         impl="gemm",
-    ).select(F.col("ordinal").alias("qid"), F.col("indices").alias("__truth"))
+    )
 
     spark = base.sparkSession
     out = []
@@ -1149,30 +1048,14 @@ def ann_tuning_report(
             n_centroids=n_centroids, nprobe=int(nprobe), seed=seed,
             query_id=query_id, base_id=base_id, vec_col=vec_col,
         )
-        got = approx.groupBy(F.col("query_id").alias("qid")).agg(
-            F.collect_list("base_id").alias("__got"),
-            F.count(F.lit(1)).alias("__n_cand"),
-        )
         row = (
-            truth.join(got, "qid", "left")
+            knn_recall(truth, _neighbor_sets(approx), k)
             .select(
-                (
-                    F.size(
-                        F.array_intersect(
-                            F.col("__truth").cast("array<bigint>"),
-                            F.coalesce(F.col("__got"), F.array().cast("array<bigint>")).cast(
-                                "array<bigint>"
-                            ),
-                        )
-                    ).cast("double")
-                    / F.lit(float(k))
-                ).alias("__recall"),
-                F.coalesce(F.col("__n_cand"), F.lit(0)).alias("__n_cand"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_queries"),
-                F.round(F.avg("__recall"), 6).alias("recall"),
-                F.round(F.avg("__n_cand"), 6).alias("mean_candidates"),
+                "n_queries",
+                F.round("mean_recall", 6).alias("recall"),
+                F.round(F.try_divide(F.lit(approx.count()), "n_queries"), 6).alias(
+                    "mean_candidates"
+                ),
             )
             .collect()[0]
         )
@@ -1209,8 +1092,10 @@ def lsh_tradeoff_report(
     divisions rendered at 6dp.
 
     100-TB shape (tightened in optimization round 10, guide §1.2/§2.4):
-    ground truth is ONE broadcast query-side crossJoin + rank-k window
-    (the exact_knn audit posture — cap the query sample upstream). The
+    ground truth is ``knn._ranked_knn``'s expr path, ONE broadcast
+    query-side crossJoin + rank-k window (the exact_knn audit posture —
+    cap the query sample upstream), and each setting's LSH top-k is
+    ``knn._merge_topk`` over its bucket-join candidates. The
     base table is scanned ONCE for all settings — a single projection
     evaluates every n_bits signature and is localCheckpointed; before,
     each n_bits ran two independent base scans (one inside lsh_topk, one
@@ -1227,26 +1112,19 @@ def lsh_tradeoff_report(
     if not bits_list:
         raise ValueError("bits_list must be non-empty")
     q = queries.select(
-        F.col(query_id).alias("qid"), F.col(vec_col).alias("qvec")
+        F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qvec")
     )
     from nbdatatools_spark.session import spread_small_input
 
     # hyperplane signatures + the exact-truth crossJoin are per-row
     # heavy: spread an under-split base scan once for both (round 10)
     b = spread_small_input(
-        base.select(F.col(base_id).alias("bid"), F.col(vec_col).alias("bvec"))
+        base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"))
     )
     nq = q.agg(F.count(F.lit(1)).alias("__nq"))
-    dist = distance_expr("cosine", F.col("qvec"), F.col("bvec"))
-    w = Window.partitionBy("qid").orderBy(
-        F.col("__d").asc_nulls_last(), F.col("bid").asc()
-    )
     truth = (
-        b.join(F.broadcast(q), how="cross")
-        .select("qid", "bid", dist.alias("__d"))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("qid", "bid")
+        _ranked_knn(q, b, k, "cosine", "__qid", "__bid", "__qvec", "__bvec", "expr")
+        .select("__qid", "__bid")
         .localCheckpoint(eager=False)
     )
 
@@ -1260,21 +1138,21 @@ def lsh_tradeoff_report(
     # rescans; on a full 100-TB corpus the caller bounds the base side
     # first, exactly as with the exact-knn audit paths.
     bsigs = b.select(
-        "bid",
-        "bvec",
+        "__bid",
+        "__bvec",
         *[
             random_hyperplane_signature(
-                F.col("bvec"), dim, int(nb), seed
+                F.col("__bvec"), dim, int(nb), seed
             ).alias(f"__sig{int(nb)}")
             for nb in bits_list
         ],
     ).localCheckpoint(eager=False)
     qsigs = q.select(
-        "qid",
-        "qvec",
+        "__qid",
+        "__qvec",
         *[
             random_hyperplane_signature(
-                F.col("qvec"), dim, int(nb), seed
+                F.col("__qvec"), dim, int(nb), seed
             ).alias(f"__sig{int(nb)}")
             for nb in bits_list
         ],
@@ -1283,33 +1161,15 @@ def lsh_tradeoff_report(
     blocks = []
     for n_bits in bits_list:
         sig_col = f"__sig{int(n_bits)}"
-        pairs = (
-            bsigs.select("bid", "bvec", F.col(sig_col).alias("sig"))
-            .join(
-                F.broadcast(
-                    qsigs.select("qid", "qvec", F.col(sig_col).alias("sig"))
-                ),
-                "sig",
+        pairs = _cosine_candidates(
+            bsigs.select("__bid", "__bvec", F.col(sig_col).alias("__sig")).join(
+                F.broadcast(qsigs.select("__qid", "__qvec", F.col(sig_col).alias("__sig"))),
+                "__sig",
             )
-            .select(
-                "qid",
-                "bid",
-                distance_expr("cosine", F.col("qvec"), F.col("bvec")).alias(
-                    "distance"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
+        ).localCheckpoint(eager=False)
         n_cand = pairs.agg(F.count(F.lit(1)).alias("__cand"))
-        w_b = Window.partitionBy("qid").orderBy(
-            F.col("distance").asc_nulls_last(), F.col("bid").asc()
-        )
-        approx = (
-            pairs.withColumn("__rk", F.row_number().over(w_b))
-            .where(F.col("__rk") <= k)
-            .select("qid", "bid")
-        )
-        n_match = approx.join(F.broadcast(truth), ["qid", "bid"]).agg(
+        approx = _merge_topk(pairs, k).select("__qid", "__bid")
+        n_match = approx.join(F.broadcast(truth), ["__qid", "__bid"]).agg(
             F.count(F.lit(1)).alias("__m")
         )
         blocks.append(
@@ -1493,31 +1353,14 @@ def compression_report(
         queries, df, k, metric="cosine",
         query_ordinal=id_col, base_ordinal=id_col,
         query_vec=vec_col, base_vec=vec_col, impl="gemm",
-    ).select(F.col("ordinal").alias("qid"), F.col("indices").alias("__t"))
+    )
 
     def recall_of(pairs: DataFrame) -> float:
-        got = pairs.groupBy(F.col("query_id").alias("qid")).agg(
-            F.collect_list("base_id").alias("__g")
+        return float(
+            knn_recall(truth, _neighbor_sets(pairs), k)
+            .select(F.round("mean_recall", 6))
+            .collect()[0][0]
         )
-        row = (
-            truth.join(got, "qid", "left")
-            .select(
-                (
-                    F.size(
-                        F.array_intersect(
-                            F.col("__t").cast("array<bigint>"),
-                            F.coalesce(
-                                F.col("__g"), F.array().cast("array<bigint>")
-                            ).cast("array<bigint>"),
-                        )
-                    ).cast("double")
-                    / F.lit(float(k))
-                ).alias("r")
-            )
-            .agg(F.round(F.avg("r"), 6).alias("r"))
-            .collect()[0]
-        )
-        return float(row.r)
 
     float_bytes = dim * 4
     results = []

@@ -1,4 +1,7 @@
+import os
+
 from nbdatatools_spark.sources.xvec import (  # noqa: F401
+    is_xvec,
     read_xvec,
     write_xvec,
     xvec_dtype,
@@ -14,29 +17,16 @@ from nbdatatools_spark.sources.sqlite_store import (  # noqa: F401
 )
 
 
-def _read_parquet(spark, path):
-    return spark.read.parquet(path)
-
-
-# X1 reader registry — the ServiceLoader-SPI analogue
-# (services/VectorFileIO.java:37-368): format key -> ingest callable
-# (spark, path) -> DataFrame. Extensions register by inserting here.
-READERS = {
-    "fvec": read_xvec,
-    "ivec": read_xvec,
-    "bvec": read_xvec,
-    "dvec": read_xvec,
-    "svec": read_xvec,
-    "mvec": read_xvec,
-    "csv": read_csv_vectors,
-    "parquet": _read_parquet,
-}
-
-
 def open_vectors(spark, path: str):
-    """Extension-dispatched ingest (VectorFileIO.open analogue)."""
-    ext = path.rsplit(".", 1)[-1].lower().rstrip("s") if "." in path else "parquet"
-    ext = ext if ext in READERS else path.rsplit(".", 1)[-1].lower()
-    if ext not in READERS:
-        raise ValueError(f"no reader registered for {path!r} (have {sorted(READERS)})")
-    return READERS[ext](spark, path)
+    """Extension-dispatched vector ingest (VectorFileIO.open analogue): an
+    xvec extension (``.fvecs``-style aliases included) through
+    ``read_xvec``, ``.parquet`` or a directory as a Parquet table,
+    ``.csv`` through ``read_csv_vectors``; anything else raises
+    ``ValueError``."""
+    if is_xvec(path):
+        return read_xvec(spark, path)
+    if path.endswith(".parquet") or os.path.isdir(path):
+        return spark.read.parquet(path)
+    if path.endswith(".csv"):
+        return read_csv_vectors(spark, path)
+    raise ValueError(f"unsupported vector input: {path}")

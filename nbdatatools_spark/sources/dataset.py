@@ -337,17 +337,9 @@ class DatasetManifest:
             # pure function of (seed, i) — datagen.generate_vectors
             df = _virtdata_facet(spark, path, spec)
         else:
-            ext = path.rsplit(".", 1)[-1].lower()
-            if ext in ("parquet",):
-                df = spark.read.parquet(path)
-            elif ext == "csv":
-                from nbdatatools_spark.sources.csv_vec import read_csv_vectors
+            from nbdatatools_spark.sources import open_vectors
 
-                df = read_csv_vectors(spark, path)
-            else:
-                from nbdatatools_spark.sources.xvec import read_xvec
-
-                df = read_xvec(spark, path)
+            df = open_vectors(spark, path)
         if spec.window:
             df = window_slice(df, [f"{a}..{b}" for a, b in spec.window])
         return df

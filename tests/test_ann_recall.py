@@ -51,12 +51,32 @@ def _mean_recall(approx, exact):
     return sum(recs) / len(recs)
 
 
+NAN_ID = 10_000
+
+
+def _with_nan_row(df):
+    """``df`` plus one row whose components are all NaN."""
+    nan_row = df.sparkSession.createDataFrame(
+        [(NAN_ID, [float("nan")] * DIM)], "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    )
+    return df.unionByName(nan_row)
+
+
+def _nan_query_distances(pairs):
+    """The set of distances returned for the all-NaN query."""
+    return {r["distance"] for r in pairs.where(F.col("query_id") == NAN_ID).collect()}
+
+
 def test_lsh_recall_floor(clustered):
     queries, base = clustered
     exact = _topk_sets(brute_force_topk(queries, base, k=K, metric="cosine"))
     approx = _topk_sets(lsh_topk(queries, base, k=K, dim=DIM, n_bits=6))
     r = _mean_recall(approx, exact)
     assert r >= 0.8, f"LSH recall {r:.3f} below floor"
+    # an all-NaN query shares the all-NaN base row's bucket: its distances
+    # are undefined, hence NULL as on every other pairs path
+    nan_q, nan_b = _with_nan_row(queries), _with_nan_row(base)
+    assert _nan_query_distances(lsh_topk(nan_q, nan_b, k=K, dim=DIM, n_bits=6)) == {None}
 
 
 def test_ivf_recall_floor(clustered):
@@ -67,6 +87,8 @@ def test_ivf_recall_floor(clustered):
     )
     r = _mean_recall(approx, exact)
     assert r >= 0.9, f"IVF recall {r:.3f} below floor"
+    nan_pairs = ivf_topk(_with_nan_row(queries), base, k=K, n_centroids=6, nprobe=2)
+    assert _nan_query_distances(nan_pairs) == {None}
 
 
 def test_ivf_nprobe_monotone(clustered):

@@ -253,17 +253,26 @@ def test_cli_main_end_to_end(tmp_path, spark, capsys):
         ]
     ) == 0
     assert os.path.exists(out_idx)
-
-    rc = main(
+    out_pq = str(tmp_path / "my_indices.parquet")
+    assert main(
         [
-            "analyze", "verify_knn", "--input", base,
-            "--queries", os.path.join(root, "query.fvec"),
-            "--truth", os.path.join(root, "indices.ivec"),
-            "--k", "5", "--metric", "cosine", "--sample", "20",
+            "compute", "knn", "--base", base,
+            "--query", os.path.join(root, "query.fvec"),
+            "--k", "5", "--metric", "cosine", "--out-indices", out_pq,
         ]
-    )
-    rep = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rc == 0 and rep["mean_recall"] == 1.0
+    ) == 0
+
+    for key in (out_idx, out_pq):
+        rc = main(
+            [
+                "analyze", "verify_knn", "--input", base,
+                "--queries", os.path.join(root, "query.fvec"),
+                "--truth", key,
+                "--k", "5", "--metric", "cosine", "--sample", "20",
+            ]
+        )
+        rep = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert rc == 0 and rep["mean_recall"] == 1.0 and rep["n_queries"] == 20, key
 
     # convert fvec -> parquet -> fvec byte-identical vectors
     pq_dir = str(tmp_path / "base_pq.parquet")

@@ -117,6 +117,10 @@ def test_verify_knn_sampled(vecs):
     res = verify_knn(df, df, truth, k=K, metric="cosine", sample_size=30).collect()[0]
     assert res["mean_recall"] == pytest.approx(1.0)
     assert res["n_queries"] == 30
+    # a truncated key: sampled queries missing from it score 0, not drop out
+    short = truth.where(F.col("ordinal") < 10)
+    res = verify_knn(df, df, short, k=K, metric="cosine", sample_size=30).collect()[0]
+    assert res["n_queries"] == 30 and res["mean_recall"] < 1
 
 
 def test_recall_partial_overlap(spark):
