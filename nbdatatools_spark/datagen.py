@@ -16,11 +16,11 @@ outputs are pinned by this module's own tests.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+from nbdatatools_spark.session import _planned_scan
 
 _MASK = (1 << 64) - 1
 
@@ -67,7 +67,10 @@ def generate_vectors(
     duplicates_proportion: float = 0.0,
     partitions: int | None = None,
 ) -> DataFrame:
-    """-> (ordinal BIGINT, vector ARRAY<FLOAT>), fully distributed.
+    """-> (ordinal BIGINT, vector ARRAY<FLOAT>), fully distributed: one
+    ``session._planned_scan`` task per ordinal range (``count //
+    partitions`` ordinals each), emitting one Arrow batch built from the
+    float32 matrix's flat values.
 
     - vector[i] ~ N(0, variability^2) + scale * i * noise (ordinal-scaled
       term per TestDataFiles.java:71-78)
@@ -79,16 +82,13 @@ def generate_vectors(
     partitions = partitions or max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
     chunk = max(count // partitions, 1)
     ranges = [(s, min(s + chunk, count)) for s in range(0, count, chunk)]
-    plan = spark.createDataFrame(ranges, "start BIGINT, end BIGINT").repartition(
-        len(ranges)
-    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ords = np.arange(row.start, row.end, dtype=np.int64)
-                mat = _vectors_for(ords)
-                yield pd.DataFrame({"ordinal": ords, "vector": list(mat)})
+    def gen(start: int, end: int) -> pa.RecordBatch:
+        ords = np.arange(start, end, dtype=np.int64)
+        mat = _vectors_for(ords)
+        offsets = np.arange(0, (len(ords) + 1) * dimensions, dimensions, dtype=np.int32)
+        vectors = pa.ListArray.from_arrays(pa.array(offsets), pa.array(mat.ravel()))
+        return pa.RecordBatch.from_arrays([pa.array(ords), vectors], ["ordinal", "vector"])
 
     def _vectors_for(ords: np.ndarray) -> np.ndarray:
         base = _gaussians(seed, ords, dimensions, stream=0) * variability
@@ -126,7 +126,9 @@ def generate_vectors(
                 mat[idx] = src_vec.astype(np.float32)
         return mat
 
-    return plan.mapInPandas(gen, "ordinal BIGINT, vector ARRAY<FLOAT>")
+    return _planned_scan(
+        spark, ranges, gen, "ordinal BIGINT, vector ARRAY<FLOAT>", max(len(ranges), 1)
+    )
 
 
 def make_test_dataset(

@@ -13,11 +13,11 @@ from __future__ import annotations
 
 import hashlib
 import os
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from nbdatatools_spark.session import _planned_scan
 
 DEFAULT_CHUNK = 1 << 20  # 1 MiB
 
@@ -28,27 +28,28 @@ def chunk_digests(
     """-> (chunk_index BIGINT, offset BIGINT, length BIGINT, sha256 STRING).
 
     Chunks are planned on the driver and hashed in parallel on executors
-    (each task reads only its byte range)."""
+    through ``session._planned_scan`` (one task id per chunk, ~8 chunks per
+    partition, no planning shuffle); each task reads only its byte range."""
     size = os.path.getsize(path)
     chunks = [
         (i, off, min(chunk_size, size - off))
         for i, off in enumerate(range(0, size, chunk_size))
     ] or [(0, 0, 0)]
-    plan = spark.createDataFrame(chunks, "chunk_index BIGINT, offset BIGINT, length BIGINT")
 
-    def hash_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            digests = []
-            for row in pdf.itertuples(index=False):
-                with open(path, "rb") as f:
-                    f.seek(row.offset)
-                    digests.append(hashlib.sha256(f.read(row.length)).hexdigest())
-            pdf = pdf.copy()
-            pdf["sha256"] = digests
-            yield pdf
+    def hash_chunk(index: int, offset: int, length: int) -> pa.RecordBatch:
+        with open(path, "rb") as f:
+            f.seek(offset)
+            digest = hashlib.sha256(f.read(length)).hexdigest()
+        return pa.RecordBatch.from_pydict(
+            {"chunk_index": [index], "offset": [offset], "length": [length], "sha256": [digest]}
+        )
 
-    return plan.repartition(max(len(chunks) // 8, 1)).mapInPandas(
-        hash_chunks, "chunk_index BIGINT, offset BIGINT, length BIGINT, sha256 STRING"
+    return _planned_scan(
+        spark,
+        chunks,
+        hash_chunk,
+        "chunk_index BIGINT, offset BIGINT, length BIGINT, sha256 STRING",
+        max(len(chunks) // 8, 1),
     )
 
 

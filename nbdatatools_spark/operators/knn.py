@@ -136,9 +136,13 @@ def _partial_topk(
 ) -> pd.DataFrame:
     """The one partial top-k: the ``k`` smallest cells of each column of the
     (base rows x queries) matrix ``D`` as candidate rows ``(__qid, __bid,
-    __dist)``. NaN cells rank last (numpy's order, matching the merge).
-    Cells flagged in ``excluded`` rank after every other cell, NaN included,
-    and are dropped — a query never sees an excluded base row."""
+    __dist)``, ordered by (value, base id) — NaN cells rank last and tie
+    with each other, matching the merge. Cells flagged in ``excluded`` rank
+    after every other cell, NaN included, and are dropped — a query never
+    sees an excluded base row. Cells tied with a column's k-th value are
+    kept by lowest base id, so every column keeps exactly ``min(k, rows)``
+    cells (before the exclusion drop) and the batch cut agrees with the
+    documented (distance, ordinal) tie-break."""
     key = D
     if excluded is not None:
         # finite < undefined (NaN, ranked as +inf) < excluded (NaN)
@@ -146,6 +150,16 @@ def _partial_topk(
         key[excluded] = np.nan
     kk = min(k, D.shape[0])
     idx = np.argpartition(key, kk - 1, axis=0)[:kk]  # (kk, Q)
+    kth = np.take_along_axis(key, idx[kk - 1 : kk], axis=0)  # (1, Q)
+    tied = (key == kth) | (np.isnan(key) & np.isnan(kth))
+    # argpartition kept an arbitrary subset of the cells tied with the k-th
+    # value wherever a column has more tied cells than the cut holds
+    for q in np.nonzero(tied.sum(0) > np.take_along_axis(tied, idx, axis=0).sum(0))[0]:
+        below = idx[~tied[idx[:, q], q], q]
+        ties = np.nonzero(tied[:, q])[0]
+        idx[:, q] = np.concatenate(
+            [below, ties[np.argsort(bids[ties], kind="stable")[: kk - len(below)]]]
+        )
     rows = pd.DataFrame(
         {
             "__qid": np.repeat(qids, kk),

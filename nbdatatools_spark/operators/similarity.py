@@ -186,12 +186,19 @@ def ivf_topk(
     nearest centroids per query. The centroid table is tiny -> inlined on
     both sides; the only large shuffle keys on the query id.
     """
+    centroids, cells = _ivf_cells(base, n_centroids, seed, base_id, vec_col, sample_fraction)
+    return _ivf_rank(cells, _ivf_probe(queries, centroids, nprobe, query_id, vec_col), k)
+
+
+def _ivf_cells(base, n_centroids, seed, base_id, vec_col, sample_fraction=1.0):
+    """The IVF coarse quantizer: ``kmeans_centroids`` on a sample, then the
+    base rows ``(__bid, __bvec, centroid_id)`` of each cell."""
     centroids = kmeans_centroids(base, n_centroids, vec_col, seed, 20, sample_fraction)
     cells = centroid_assign(
         base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec")),
         centroids, "euclidean", "__bvec", impl="expr",
     )
-    return _ivf_rank(cells, _ivf_probe(queries, centroids, nprobe, query_id, vec_col), k)
+    return centroids, cells
 
 
 # --- Product quantization (PQ/ADC) -----------------------------------------
@@ -1028,9 +1035,12 @@ def ann_tuning_report(
 
     Returns one row per probed setting: ``(nprobe, n_queries, recall,
     mean_candidates)`` — recall = mean per-query |IVF∩exact| / k;
-    mean_candidates = average scanned-cell candidate count (the cost dial
-    the recall buys). All comparisons run on id sets, never distances, so
-    kernel float noise can't blur the readout.
+    mean_candidates = average scanned-cell candidate count, i.e. the rows
+    of the probed-cell join per query (the cost dial the recall buys).
+    The quantizer is fitted and the base assigned once (the same centroids
+    ``ivf_topk`` would fit); each nprobe only re-probes and re-ranks. All
+    comparisons run on id sets, never distances, so kernel float noise
+    can't blur the readout.
     """
     truth = exact_knn(
         queries, base, k,
@@ -1041,25 +1051,27 @@ def ann_tuning_report(
     )
 
     spark = base.sparkSession
+    centroids, cells = _ivf_cells(base, n_centroids, seed, base_id, vec_col)
+    cells = cells.persist()
     out = []
-    for nprobe in nprobes:
-        approx = ivf_topk(
-            queries, base, k,
-            n_centroids=n_centroids, nprobe=int(nprobe), seed=seed,
-            query_id=query_id, base_id=base_id, vec_col=vec_col,
-        )
-        row = (
-            knn_recall(truth, _neighbor_sets(approx), k)
-            .select(
-                "n_queries",
-                F.round("mean_recall", 6).alias("recall"),
-                F.round(F.try_divide(F.lit(approx.count()), "n_queries"), 6).alias(
-                    "mean_candidates"
-                ),
+    try:
+        for nprobe in nprobes:
+            probe = _ivf_probe(queries, centroids, int(nprobe), query_id, vec_col)
+            scanned = cells.join(F.broadcast(probe), "centroid_id").count()
+            row = (
+                knn_recall(truth, _neighbor_sets(_ivf_rank(cells, probe, k)), k)
+                .select(
+                    "n_queries",
+                    F.round("mean_recall", 6).alias("recall"),
+                    F.round(F.try_divide(F.lit(scanned), "n_queries"), 6).alias(
+                        "mean_candidates"
+                    ),
+                )
+                .collect()[0]
             )
-            .collect()[0]
-        )
-        out.append((int(nprobe), row.n_queries, row.recall, row.mean_candidates))
+            out.append((int(nprobe), row.n_queries, row.recall, row.mean_candidates))
+    finally:
+        cells.unpersist()
     return spark.createDataFrame(
         out, "nprobe INT, n_queries BIGINT, recall DOUBLE, mean_candidates DOUBLE"
     )

@@ -5,13 +5,22 @@ scale to a multi-executor cluster: AQE on (runtime re-planning, skew-join
 splitting, partition coalescing), modest shuffle partition default (overridable
 per-job), Arrow enabled for the few pandas-UDF paths (xvec ingest, multimodal
 stubs).
+
+Work the driver plans itself (xvec byte ranges, datagen ordinal ranges,
+integrity chunks) is launched one way, ``_planned_scan``: a ``spark.range``
+over task ids feeding a ``mapInArrow`` that runs the planned tasks. The
+plan is ``MapInArrow`` over ``Range`` -- no planning shuffle and no pickled
+Python RDD of plan rows.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
+from typing import Callable, Iterator, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -54,6 +63,37 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_SCAN_IDS = itertools.count()
+
+
+def _planned_scan(
+    spark: SparkSession,
+    tasks: Sequence[tuple],
+    produce: Callable[..., pa.RecordBatch],
+    schema: str,
+    n_parts: int,
+) -> DataFrame:
+    """Run driver-planned ``tasks`` as one shuffle-free scan: task ``i`` is
+    one id of a ``spark.range`` split into ``n_parts`` contiguous slices and
+    yields the Arrow batch ``produce(*tasks[i])`` with ``schema``.
+
+    The task list travels in the closure (PySpark broadcasts a pickled
+    command above its broadcast threshold), so executors index it by id
+    instead of decoding plan rows. Every call scans its own id range: Spark's
+    cache manager answers a plan equal to a cached one from the cache, and
+    an earlier cached scan of the same tasks must not stand in for a file
+    that was rewritten in place since."""
+    tasks = list(tasks)
+    first = next(_SCAN_IDS) << 32
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield produce(*tasks[i - first])
+
+    return spark.range(first, first + len(tasks), 1, n_parts).mapInArrow(run, schema)
 
 
 TABLES = (

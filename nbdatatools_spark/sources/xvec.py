@@ -28,21 +28,27 @@ rejected). ``read_xvec``/``write_xvec`` here and the ``xvec`` DataSource in
 ``xvec_datasource`` (batch read, shard-per-partition write, stream) are thin
 adapters over them.
 
-Egress: ``write_xvec`` streams partitions to a single file on the driver in
-ordinal order (export utility — the engine's native store is Parquet; SURVEY
-§2.1 S2). For cluster-scale egress use ``df.write.format("xvec")``, which
-writes one shard per partition.
+``read_xvec`` runs the planned ranges through ``session._planned_scan``
+(``spark.range`` task ids -> ``mapInArrow``), so a read is one job with no
+planning shuffle.
+
+Egress: ``write_xvec`` collects the table via Arrow, orders it by ordinal on
+the driver and writes a single file (export utility — the engine's native
+store is Parquet; SURVEY §2.1 S2). For cluster-scale egress use
+``df.write.format("xvec")``, which writes one shard per partition.
 """
 
 from __future__ import annotations
 
 import os
 import struct
-from typing import Iterable, Iterator
+from typing import Iterable
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+from nbdatatools_spark.session import _planned_scan
 
 XVEC_FORMATS = {
     "fvec": ("<f4", 4, "float"),
@@ -64,9 +70,6 @@ _ARROW_ELEM = {
     "short": pa.int16(),
     "double": pa.float64(),
 }
-_CHUNK_SCHEMA = (
-    "path STRING, byte_start BIGINT, n_records INT, start_ordinal BIGINT, dim INT, stride INT"
-)
 
 
 def xvec_dtype(path_or_ext: str) -> tuple[str, int, str]:
@@ -221,12 +224,14 @@ def read_xvec(
 ) -> DataFrame:
     """Parallel xvec scan -> DataFrame (ordinal BIGINT, vector ARRAY<elem>).
 
-    The driver plans ``_plan_chunks`` ranges; executors decode them with
-    ``_decode_chunk`` via mapInArrow. Task count is capped so a 100TB scan
-    schedules each task over many chunk rows instead of creating millions
-    of micro-partitions. This stays a mapInArrow adapter rather than a
-    wrapper over ``spark.read.format("xvec")``: the Python DataSource adds
-    ~0.1 s of planning per load, and an answer-key check reads four files.
+    The driver plans ``_plan_chunks`` ranges; ``session._planned_scan``
+    decodes them with ``_decode_chunk`` over ``spark.range`` task ids, so
+    the physical plan is ``MapInArrow`` over ``Range`` with no planning
+    shuffle. Task count is capped so a 100TB scan schedules each task over
+    many chunks instead of creating millions of micro-partitions. This
+    stays a mapInArrow adapter rather than a wrapper over
+    ``spark.read.format("xvec")``: the Python DataSource adds ~0.1 s of
+    planning per load, and an answer-key check reads four files.
     """
     if isinstance(paths, str):
         paths = [paths]
@@ -234,16 +239,11 @@ def read_xvec(
         raise ValueError("no input paths")
     spark_elem = xvec_dtype(paths[0])[2]
     chunks = _plan_chunks(paths, ordinal_start)
-    # guard: all-empty inputs -> repartition(0) throws (ADVICE r1)
+    # guard: all-empty inputs plan zero chunks -> still one (empty) partition
     n_parts = max(1, min(len(chunks), max(spark.sparkContext.defaultParallelism * 2, 32), 4096))
-    plan = spark.createDataFrame(chunks, _CHUNK_SCHEMA).repartition(n_parts)
-
-    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for row in batch.to_pylist():
-                yield _decode_chunk(**row)
-
-    return plan.mapInArrow(decode, f"ordinal BIGINT, vector ARRAY<{spark_elem}>")
+    return _planned_scan(
+        spark, chunks, _decode_chunk, f"ordinal BIGINT, vector ARRAY<{spark_elem}>", n_parts
+    )
 
 
 def write_xvec(df: DataFrame, path: str, ordinal: str = "ordinal", vec: str = "vector") -> int:
@@ -251,10 +251,14 @@ def write_xvec(df: DataFrame, path: str, ordinal: str = "ordinal", vec: str = "v
 
     Driver-side export utility (single file is inherently driver-bound;
     cluster egress is ``df.write.format("xvec")``). Collects via Arrow — the
-    vector column arrives as flat buffers — and encodes each record batch
-    with ``_encode_records``. Ragged or null vectors raise ValueError and
-    leave no file. Returns record count.
+    vector column arrives as flat buffers — and orders the rows on the
+    driver with ``Table.sort_by`` (nulls first, Spark's ascending order):
+    the table is collected anyway, so a distributed sort would only add a
+    range-sampling job and a sort job. Each record batch is encoded with
+    ``_encode_records``. Ragged or null vectors raise ValueError and leave
+    no file. Returns record count.
     """
     np_dtype = xvec_dtype(path)[0]
-    tbl = df.select(ordinal, vec).sort(ordinal).toArrow()
+    tbl = df.select(ordinal, vec).toArrow()
+    tbl = tbl.sort_by([(tbl.column_names[0], "ascending")], null_placement="at_start")
     return _write_records(path, tbl.to_batches(), np_dtype)[0]

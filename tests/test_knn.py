@@ -180,6 +180,26 @@ def test_hybrid_always_true_predicate_equals_exact_knn(vecs, metric):
         assert list(hybrid[qi]["distances"]) == list(exact[qi]["distances"])
 
 
+def test_kth_distance_ties_break_by_ordinal(spark):
+    """Within one Arrow batch, rows tied with the k-th distance are cut by
+    base ordinal: the gemm kernel (exact_knn and hybrid_ground_truth under an
+    always-true predicate) returns the expr path's (distance, ordinal)
+    answer, not an arbitrary subset of the tied rows."""
+    dist = np.random.default_rng(0).permutation([0] * 3 + [1] * 40 + [2] * 57)
+    base = spark.createDataFrame(
+        [(i, [float(d), 0.0]) for i, d in enumerate(dist)],
+        "ordinal BIGINT, vector ARRAY<FLOAT>",
+    ).coalesce(1)
+    q = spark.createDataFrame([(0, [0.0, 0.0])], "ordinal BIGINT, vector ARRAY<FLOAT>")
+    expr = exact_knn(q, base, 5, "euclidean", impl="expr").collect()[0]["indices"]
+    assert list(expr) == [41, 52, 59, 1, 2]
+    assert list(exact_knn(q, base, 5, "euclidean").collect()[0]["indices"]) == list(expr)
+    meta = base.select("ordinal", F.lit(0).alias("z"))
+    preds = [(0, '{"fieldName":"z","op":"EQ","values":[0]}')]
+    hybrid = hybrid_ground_truth(q, base, meta, preds, k=5, metric="euclidean").collect()
+    assert list(hybrid[0]["indices"]) == list(expr)
+
+
 def test_knn_label_accuracy_closed_form(spark):
     from nbdatatools_spark.operators.knn import knn_label_accuracy
 

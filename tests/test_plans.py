@@ -118,6 +118,24 @@ def test_ivf_assignment_has_no_shuffle(spark, embeddings):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
+def test_driver_planned_scans_have_no_shuffle(spark, tmp_path):
+    """read_xvec, generate_vectors and chunk_digests run their driver-planned
+    tasks over spark.range task ids: no planning Exchange and no scan of a
+    pickled Python RDD of plan rows."""
+    from nbdatatools_spark.datagen import generate_vectors
+    from nbdatatools_spark.operators.integrity import chunk_digests
+    from nbdatatools_spark.sources.xvec import read_xvec, write_xvec
+
+    gen = generate_vectors(spark, 300, 4, partitions=3)
+    path = str(tmp_path / "v.fvec")
+    write_xvec(gen, path)
+    for df in (gen, read_xvec(spark, path), chunk_digests(spark, path, 1024)):
+        df.count()
+        plan = _plan(df)
+        assert "Range" in plan
+        assert "Exchange" not in plan and "ExistingRDD" not in plan
+
+
 def test_window_slice_pushes_ordinal_range(spark, embeddings):
     from nbdatatools_spark.operators.windows import window_slice
 

@@ -51,6 +51,9 @@ def test_ann_tuning_report_monotone_recall(spark, embeddings):
     # probing every cell IS exhaustive search -> exact recall
     assert rep[8].recall == 1.0
     assert all(r.n_queries == 12 for r in rep.values())
+    # mean_candidates counts scanned base rows: every cell scans the base
+    assert rep[8].mean_candidates == embeddings.count()
+    assert rep[1].mean_candidates < rep[8].mean_candidates
 
 
 def test_cost_report_and_broadcast_predicate(spark, sf_dir):

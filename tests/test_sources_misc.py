@@ -238,6 +238,31 @@ def test_datagen_injection(spark):
     assert abs(stats[0]) < 0.1 and 0.85 < stats[1] < 1.15
 
 
+def test_datagen_values_pinned_to_gaussians(spark):
+    """Rows are bit-identical to ``_gaussians`` of their ordinal; injected
+    zero rows are zero and each duplicate copies the vector of an earlier
+    ordinal."""
+    from nbdatatools_spark.datagen import _gaussians, _uniforms
+
+    n, dim, seed, sigma = 400, 8, 5, 2.0
+    tbl = generate_vectors(
+        spark, n, dim, seed=seed, variability=sigma,
+        zeroes_proportion=0.05, duplicates_proportion=0.05, partitions=3,
+    ).toArrow().sort_by("ordinal")
+    assert tbl.column("ordinal").to_pylist() == list(range(n))
+    got = tbl.column("vector").combine_chunks().flatten().to_numpy().reshape(n, dim)
+    ords = np.arange(n)
+    want = (_gaussians(seed, ords, dim) * sigma).astype(np.float32)
+    is_zero = _uniforms(seed, ords, 1, 101)[:, 0] < 0.05
+    is_dup = ~is_zero & (_uniforms(seed, ords, 1, 102)[:, 0] < 0.05) & (ords > 0)
+    plain = ~is_zero & ~is_dup
+    assert is_zero.any() and is_dup.any()
+    assert (got[plain].view(np.uint32) == want[plain].view(np.uint32)).all()
+    assert (got[is_zero] == 0).all()
+    for i in np.nonzero(is_dup)[0]:
+        assert (want[:i] == got[i]).all(axis=1).any(), i
+
+
 # --- tokens --------------------------------------------------------------
 
 def test_templatizer(spark):

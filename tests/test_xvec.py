@@ -69,6 +69,22 @@ def test_write_then_read(spark, tmp_path):
     assert [r["vector"] for r in back] == [[float(i), float(i) + 0.5] for i in range(20)]
 
 
+def test_write_orders_rows_by_ordinal(spark, tmp_path):
+    """Rows arriving in descending ordinal order across several partitions
+    are written in ordinal order, byte for byte the oracle's encoding."""
+    from perfbench import oracles
+
+    mat = np.random.default_rng(5).normal(size=(60, 3)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, mat[i].tolist()) for i in reversed(range(60))],
+        "ordinal BIGINT, vector ARRAY<FLOAT>",
+    ).repartition(4)
+    assert df.rdd.getNumPartitions() > 1
+    p = tmp_path / "desc.fvec"
+    assert write_xvec(df, str(p)) == 60
+    assert p.read_bytes() == oracles.xvec_bytes(mat, "<f4")
+
+
 def test_multifile_concat_ordinals(spark, tmp_path):
     rng = np.random.default_rng(1)
     a, b = rng.normal(size=(5, 4)).astype("<f4"), rng.normal(size=(7, 4)).astype("<f4")
