@@ -39,12 +39,13 @@ def _uniforms(seed: int, ordinals: np.ndarray, dim: int, stream: int) -> np.ndar
     n = len(ordinals)
     d_idx = np.arange(dim, dtype=np.uint64)[None, :]
     o_idx = ordinals.astype(np.uint64)[:, None]
-    counter = (
-        (np.uint64(seed) * np.uint64(0x9E3779B97F4A7C15))
-        ^ (o_idx * np.uint64(0xC2B2AE3D27D4EB4F))
-        ^ (d_idx * np.uint64(0x165667B19E3779F9))
-        ^ (np.uint64(stream) * np.uint64(0x27D4EB2F165667C5))
-    ) & np.uint64(_MASK)
+    with np.errstate(over="ignore"):  # the mix wraps mod 2**64 by design
+        counter = (
+            (np.uint64(seed) * np.uint64(0x9E3779B97F4A7C15))
+            ^ (o_idx * np.uint64(0xC2B2AE3D27D4EB4F))
+            ^ (d_idx * np.uint64(0x165667B19E3779F9))
+            ^ (np.uint64(stream) * np.uint64(0x27D4EB2F165667C5))
+        ) & np.uint64(_MASK)
     bits = _splitmix64(counter)
     return (bits >> np.uint64(11)).astype(np.float64) / float(1 << 53)
 

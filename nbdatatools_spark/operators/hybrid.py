@@ -11,8 +11,8 @@ predicate table is small by construction — one row per query) and evaluate
 them all in ONE scan of the metadata as a per-row array of matching
 predicate ids (``_predicate_ids``). ``result_indices_table`` groups that
 array by predicate; ``hybrid_ground_truth`` instead joins it onto the base
-vectors by ordinal and runs the dense KNN kernel (operators.knn._knn_kernel)
-with a per-cell mask: base row b is a candidate for query q iff q is among
+vectors by ordinal and runs the dense KNN kernel (operators.knn._knn_kernel,
+the query-block scan every top-k caller shares) with a per-cell mask: base row b is a candidate for query q iff q is among
 b's predicate ids. The base table streams through the kernel once; rows
 matching no predicate are dropped by the join before any distance is
 computed.

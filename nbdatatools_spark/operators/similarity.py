@@ -38,12 +38,12 @@ from nbdatatools_spark.operators.clustering import (
     kmeans_centroids,
 )
 from nbdatatools_spark.operators.knn import (
-    _CANDIDATES,
     _as_pairs,
     _knn_kernel,
     _merge_topk,
-    _partial_topk,
+    _query_blocks,
     _ranked_knn,
+    _scan_topk,
     exact_knn,
     knn_recall,
 )
@@ -321,29 +321,38 @@ def pq_encode(
     """(id, codes BINARY) — each vector becomes m uint8 codes. Vectorized
     per Arrow batch; the codebooks (and the optional OPQ ``rotation``,
     applied as ``X @ R`` before subspace assignment) broadcast once."""
+    return _encode(base, base_id, vec_col, codebooks, rotation=rotation)
+
+
+def _encode(base: DataFrame, base_id: str, vec_col: str, codebooks, rotation=None, centroids=None):
+    """The one PQ encode scan: ``(id[, centroid_id], codes)``. Each Arrow
+    batch is rotated (``X @ R``) when a ``rotation`` is given, assigned to
+    its nearest coarse centroid and replaced by the residual when
+    ``centroids`` are given (IVFADC), then coded by ``_pq_codes``."""
     import pandas as pd
 
-    spark = base.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (np.asarray(codebooks), None if rotation is None else np.asarray(rotation))
+    bc = base.sparkSession.sparkContext.broadcast(
+        (np.asarray(codebooks), None if rotation is None else np.asarray(rotation), centroids)
     )
 
     def encode(batches):
-        books, rot = bc.value
+        books, rot, C = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             X = np.array(list(pdf[vec_col]), dtype=np.float64)
             if rot is not None:
                 X = X @ rot
-            yield pd.DataFrame(
-                {
-                    "id": pdf[base_id].to_numpy(),
-                    "codes": [c.tobytes() for c in _pq_codes(X, books)],
-                }
-            )
+            out = {"id": pdf[base_id].to_numpy()}
+            if C is not None:
+                cid = _nearest(X, C)
+                out["centroid_id"] = cid.astype(np.int32)
+                X = X - C[cid]
+            out["codes"] = [c.tobytes() for c in _pq_codes(X, books)]
+            yield pd.DataFrame(out)
 
-    return base.select(base_id, vec_col).mapInPandas(encode, "id BIGINT, codes BINARY")
+    cells = "" if centroids is None else "centroid_id INT, "
+    return base.select(base_id, vec_col).mapInPandas(encode, f"id BIGINT, {cells}codes BINARY")
 
 
 def pq_topk(
@@ -355,7 +364,6 @@ def pq_topk(
     query_id: str = "vec_id",
     base_id: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_queries: int = 65536,
     rerank_base: DataFrame | None = None,
     rerank_factor: int = 4,
     rotation=None,
@@ -366,39 +374,28 @@ def pq_topk(
     orthogonal, so euclidean and dot distances are preserved exactly;
     the exact re-rank path reads RAW vectors and needs no rotation).
 
-    Queries are broadcast and each Arrow batch of CODES scores them from
-    per-query lookup tables, then hands the distances to operators.knn's
-    ``_partial_topk`` / ``_merge_topk`` — the dense kernel's tail, so the
-    merge shuffles only Q*k*n_batches candidate rows. Metrics:
-    ``euclidean`` (additive squared-L2, reported as sqrt) and ``dot``
-    (additive inner product, reported negated); for cosine, L2-normalize
-    vectors before encoding and use ``dot``.
+    operators.knn's query-block scan with an ADC scorer: query blocks
+    (pmod-blocked past the cap, as in exact_knn) are broadcast, each task
+    builds the per-query lookup tables once, and each Arrow batch of CODES
+    is scored from them. Metrics: ``euclidean`` (additive squared-L2,
+    reported as sqrt) and ``dot`` (additive inner product, reported
+    negated); for cosine, L2-normalize vectors before encoding and use
+    ``dot``.
 
     Pass the raw vector table as ``rerank_base`` to re-rank an ADC
     shortlist of ``k * rerank_factor`` candidates by EXACT distance —
     quantization error then only affects the shortlist boundary, and the
     extra cost is one broadcast join on Q*k*factor rows.
     """
-    spark = encoded.sparkSession
     metric_key = metric.strip().lower()
     if metric_key not in ("euclidean", "l2", "dot", "dot_product"):
         raise ValueError(f"pq_topk supports euclidean/dot, got {metric!r}")
-    qrows = queries.select(query_id, vec_col).limit(max_broadcast_queries + 1).collect()
-    if len(qrows) > max_broadcast_queries:
-        raise ValueError(
-            f"query side exceeds max_broadcast_queries={max_broadcast_queries}; "
-            "block the query side as in exact_knn"
-        )
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    if rotation is not None:
-        qmat = qmat @ np.asarray(rotation)
-    bc = spark.sparkContext.broadcast((qids, qmat, np.asarray(codebooks)))
-
+    books = np.asarray(codebooks)
+    rot = None if rotation is None else np.asarray(rotation)
     shortlist_k = k * rerank_factor if rerank_base is not None else k
 
-    def adc_partial(batches):
-        q_ids, Q, books = bc.value
+    def adc(payload):
+        Q, books = payload
         m, n_codes, dsub = books.shape
         # LUT[q, s, c] = subspace distance contribution
         subq = Q.reshape(len(Q), m, dsub)
@@ -407,17 +404,23 @@ def pq_topk(
             lut = ((subq[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
         else:  # dot: negative inner product so smaller = closer
             lut = -(subq[:, :, None, :] * books[None, :, :, :]).sum(-1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf["id"].to_numpy(dtype=np.int64)
+
+        def score(pdf):
             codes = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8).reshape(-1, m)
             D = np.zeros((len(codes), len(Q)))
             for s in range(m):
                 D += lut[:, s, codes[:, s]].T
-            yield _partial_topk(D, bids, q_ids, shortlist_k)
+            return D, None
 
-    out = _merge_topk(encoded.mapInPandas(adc_partial, _CANDIDATES), shortlist_k)
+        return score
+
+    out = _query_blocks(
+        queries, query_id, [vec_col],
+        lambda qids, Q, _: _scan_topk(
+            encoded, "id", ["codes"], shortlist_k, qids,
+            (Q if rot is None else Q @ rot, books), adc,
+        ),
+    )
     if rerank_base is None:
         return _as_pairs(out, F.sqrt("__dist") if metric_key in ("euclidean", "l2") else None)
     exact_metric = {"dot": "dot_product"}.get(metric_key, metric_key)
@@ -476,35 +479,12 @@ def ivfpq_build(
     probe touches ~nprobe/n_centroids of the files; the codes are m bytes
     per vector, so even a full scan reads d*4/m x less than raw floats.
     """
-    import pandas as pd
-
-    spark = base.sparkSession
     X = _sample_matrix(base, vec_col, sample_limit, m)
     # one rng stream: coarse seeds first, then each subspace's
     rng = np.random.default_rng(seed)
     centroids = _lloyd(X, n_centroids, iters, rng)
     books = _pq_books(X - centroids[_nearest(X, centroids)], m, n_codes, iters, rng)
-    bc = spark.sparkContext.broadcast((centroids, books))
-
-    def encode(batches):
-        C, B = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X_ = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cid = _nearest(X_, C)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[base_id].to_numpy(),
-                    "centroid_id": cid.astype(np.int32),
-                    "codes": [c.tobytes() for c in _pq_codes(X_ - C[cid], B)],
-                }
-            )
-
-    encoded = base.select(base_id, vec_col).mapInPandas(
-        encode, "id BIGINT, centroid_id INT, codes BINARY"
-    )
-    return encoded, (centroids, books)
+    return _encode(base, base_id, vec_col, books, centroids=centroids), (centroids, books)
 
 
 def ivfpq_topk(
@@ -515,7 +495,6 @@ def ivfpq_topk(
     nprobe: int = 4,
     query_id: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_queries: int = 65536,
     rerank_base: DataFrame | None = None,
     rerank_factor: int = 4,
     base_id: str = "vec_id",
@@ -525,63 +504,52 @@ def ivfpq_topk(
     per-batch partial top-k, tiny merge. Optional exact re-rank as in
     :func:`pq_topk`.
 
-    The probe mask costs one (rows x Q) boolean per batch; rows in cells no
-    query probes contribute nothing. Combined with centroid_id bucketing
-    (or partition pruning on a centroid_id-partitioned table) the scan
-    itself skips unprobed data at 100TB.
+    The query-block scan of :func:`pq_topk`: each query block picks its
+    probes on the driver and prunes the scan to the probed cells; each
+    task builds the residual LUTs and a (Q x n_centroids) probe-slot table
+    once. The probe mask costs one (rows x Q) boolean per batch. Combined
+    with centroid_id bucketing (or partition pruning on a
+    centroid_id-partitioned table) the scan itself skips unprobed data at
+    100TB.
     """
-    spark = encoded.sparkSession
     centroids, books = index
-    qrows = queries.select(query_id, vec_col).limit(max_broadcast_queries + 1).collect()
-    if len(qrows) > max_broadcast_queries:
-        raise ValueError("query side exceeds max_broadcast_queries")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    qc = ((Q[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)  # (Q, C)
-    probes = np.argsort(qc, axis=1)[:, :nprobe]  # (Q, nprobe)
-    bc = spark.sparkContext.broadcast((qids, Q, centroids, books, probes))
-
-    # prune unprobed cells at the scan (partition/bucket pruning at scale)
-    probed_cells = sorted({int(c) for row in probes for c in row})
-    pruned = encoded.where(F.col("centroid_id").isin(probed_cells))
     shortlist_k = k * rerank_factor if rerank_base is not None else k
 
-    def adc_partial(batches):
-        q_ids, Q_, C, B, P = bc.value
-        mm, ncodes, ds = B.shape
-        nq = len(Q_)
-        # per (query, probed cell) residual LUT: (Q, nprobe, m, n_codes)
-        luts = np.empty((nq, P.shape[1], mm, ncodes))
-        cell_lut_idx = {}  # (q, cell) -> probe slot
-        for qi in range(nq):
-            for pj, cell in enumerate(P[qi]):
-                r = (Q_[qi] - C[cell]).reshape(mm, ds)
-                luts[qi, pj] = ((r[:, None, :] - B) ** 2).sum(-1)
-                cell_lut_idx[(qi, int(cell))] = pj
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf["id"].to_numpy(dtype=np.int64)
-            cells = pdf["centroid_id"].to_numpy()
-            codes = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8).reshape(-1, mm)
-            D = np.zeros((len(codes), nq))
-            unprobed = np.ones(D.shape, dtype=bool)
-            for qi in range(nq):
-                probe_set = {int(c) for c in P[qi]}
-                mask = np.isin(cells, list(probe_set))
-                if not mask.any():
-                    continue
-                idxs = np.nonzero(mask)[0]
-                dv = np.zeros(len(idxs))
-                for s in range(mm):
-                    # per-row LUT slot depends on the row's cell
-                    slots = np.array([cell_lut_idx[(qi, int(c))] for c in cells[idxs]])
-                    dv += luts[qi, slots, s, codes[idxs, s]]
-                D[idxs, qi] = dv
-                unprobed[idxs, qi] = False
-            yield _partial_topk(D, bids, q_ids, shortlist_k, unprobed)
+    def ivfadc(payload):
+        Q, C, B, P = payload
+        m, n_codes, dsub = B.shape
+        nq, n_probe = P.shape
+        # per (query, probe slot) residual LUT: (Q, nprobe, m, n_codes);
+        # slot[q, cell] is the cell's probe slot, -1 where q does not probe it
+        R = (Q[:, None, :] - C[P]).reshape(nq, n_probe, m, 1, dsub)
+        luts = np.stack([((r - B) ** 2).sum(-1) for r in R])  # per query: bounded temporaries
+        slot = np.full((nq, len(C)), -1)
+        slot[np.arange(nq)[:, None], P] = np.arange(n_probe)
 
-    out = _merge_topk(pruned.mapInPandas(adc_partial, _CANDIDATES), shortlist_k)
+        def score(pdf):
+            codes = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8).reshape(-1, m)
+            S = slot[:, pdf["centroid_id"].to_numpy()].T  # (rows, Q)
+            rows, qs = np.nonzero(S >= 0)
+            dv = np.zeros(len(rows))
+            for s in range(m):
+                dv += luts[qs, S[rows, qs], s, codes[rows, s]]
+            D = np.zeros(S.shape)
+            D[rows, qs] = dv
+            return D, S < 0
+
+        return score
+
+    def run(qids, Q, _):
+        qc = ((Q[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)  # (Q, C)
+        probes = np.argsort(qc, axis=1)[:, :nprobe]  # (Q, nprobe)
+        # prune unprobed cells at the scan (partition/bucket pruning at scale)
+        return _scan_topk(
+            encoded.where(F.col("centroid_id").isin(np.unique(probes).tolist())),
+            "id", ["centroid_id", "codes"], shortlist_k, qids,
+            (Q, centroids, books, probes), ivfadc,
+        )
+
+    out = _query_blocks(queries, query_id, [vec_col], run)
     if rerank_base is None:
         return _as_pairs(out, F.sqrt("__dist"))
     return _rerank(out, queries, rerank_base, k, "euclidean", query_id, base_id, vec_col)
@@ -814,7 +782,6 @@ def hard_negatives(
     base_id: str = "vec_id",
     vec_col: str = "embedding",
     impl: str = "gemm",
-    max_broadcast_queries: int = 65536,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each query vector,
     the ``k`` nearest base vectors whose ``label_col`` DIFFERS from the
@@ -826,9 +793,10 @@ def hard_negatives(
     is useless for training. Ties break on (distance, base_id).
 
     ``impl="gemm"`` (scale path): operators.knn's dense kernel with a
-    same-label exclusion mask — the query block (ids, vectors, labels) is
-    broadcast, each Arrow batch of the base side keeps its local top-k per
-    query, and the merge shuffle carries Q*k rows per batch, never Q*B.
+    same-label exclusion mask — query blocks (ids, vectors, labels;
+    pmod-blocked past the cap, as in exact_knn) are broadcast, each Arrow
+    batch of the base side keeps its local top-k per query, and the merge
+    shuffle carries Q*k rows per batch, never Q*B.
     ``impl="expr"`` is the sequential-fold Catalyst path whose arithmetic a
     SQL oracle reproduces bit-for-bit.
     """
@@ -860,7 +828,6 @@ def hard_negatives(
             queries, base, k, metric, query_id, vec_col, base_id, vec_col,
             exclude=lambda D, blab, qlab: np.isnan(D) | (blab.to_numpy()[:, None] == qlab[None, :]),
             query_key=label_col, base_key=label_col,
-            max_broadcast_queries=max_broadcast_queries,
         )
     return _as_pairs(pairs)
 

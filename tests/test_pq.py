@@ -164,6 +164,42 @@ def test_ivfpq_nprobe_monotone(clustered, spark):
     assert recalls[2] >= 0.5  # raw ADC, all cells
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_pq_scans_block_large_query_sides(clustered, monkeypatch):
+    """A query side over the block cap is scanned in pmod blocks, and the
+    blocked result equals the single-block one for every PQ scan."""
+    from nbdatatools_spark.operators import knn
+    from nbdatatools_spark.operators.similarity import ivfpq_build, ivfpq_topk
+
+    books = pq_train(clustered, m=4, n_codes=16, seed=5)
+    enc = pq_encode(clustered, books)
+    ivf_enc, index = ivfpq_build(clustered, n_centroids=8, m=4, n_codes=16, seed=3)
+    q = clustered.where(F.col("vec_id") < 20)
+    scans = [
+        lambda: pq_topk(q, enc, books, k=5, metric="euclidean"),
+        lambda: pq_topk(q, enc, books, k=5, metric="dot", rerank_base=clustered),
+        lambda: ivfpq_topk(q, ivf_enc, index, k=5, nprobe=2),
+    ]
+    single = [_rows(scan()) for scan in scans]
+    monkeypatch.setattr(knn, "_MAX_QUERY_BLOCK", 6)  # 20 queries -> 4 blocks
+    blocked = [_rows(scan()) for scan in scans]
+    assert all(len(rows) == 20 * 5 for rows in single)
+    assert blocked == single
+
+
+def test_pq_scans_empty_query_side(clustered):
+    from nbdatatools_spark.operators.similarity import ivfpq_build, ivfpq_topk
+
+    books = pq_train(clustered, m=4, n_codes=16, seed=5)
+    ivf_enc, index = ivfpq_build(clustered, n_centroids=8, m=4, n_codes=16, seed=3)
+    none = clustered.where(F.col("vec_id") < 0)
+    assert pq_topk(none, pq_encode(clustered, books), books, k=5).count() == 0
+    assert ivfpq_topk(none, ivf_enc, index, k=5).count() == 0
+
+
 # --- SQ8 scalar quantization ------------------------------------------------
 
 def test_sq8_roundtrip_error_bound(spark, embeddings):
