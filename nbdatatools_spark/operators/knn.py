@@ -12,39 +12,49 @@ Physical strategy (scale posture):
 - Exact KNN is a cross product Q x B. We BROADCAST the query side (queries are
   the small side by construction: 1k queries vs 100k..billions of base
   vectors), so the base table streams through executors exactly once with no
-  shuffle of the big side; per-batch partial top-k is then merged by a
-  single shuffle of Q*k rows per batch, not Q*B.
+  shuffle of the big side; each scan task keeps only its own top-k per
+  query (Q*k rows, never Q*B), and the driver merges the tasks' rows with
+  one ``np.lexsort`` — no shuffle, no window, no ``groupBy``.
 - One query-block scan does that for every top-k caller: ``_query_blocks``
-  collects the query side, ``_scan_topk`` broadcasts it and keeps each
-  Arrow batch's ``_partial_topk`` for ``_merge_topk``; a caller supplies
-  only its per-batch scorer. ``_knn_kernel`` (``exact_knn``, hybrid ground
-  truth, hard negatives) scores with ``distance_matrix`` and an optional
-  per-cell exclusion mask; the PQ scans with per-task lookup tables.
+  collects the query side through Arrow, ``_scan_topk`` broadcasts it, runs
+  each Arrow batch's ``_partial_topk``, merges the batches within each
+  task and ranks the collected candidates with ``_rank_rows``; a caller
+  supplies only its per-batch scorer. ``_knn_kernel`` (``exact_knn``,
+  hybrid ground truth, hard negatives, the self-KNN audits) scores with
+  ``distance_matrix`` and an optional per-cell exclusion mask; the PQ scans
+  with per-task lookup tables.
 - Tie-break is (distance, base ordinal) ascending — deterministic under float
   associativity (SURVEY §7 "What's hard"); undefined (NaN) distances rank last.
 - ``_ranked_knn`` is the one exact KNN (ranked rows), in two shapes with one
   NaN -> NULL rule: ``_as_arrays`` (``exact_knn``'s neighbor facets) and
   ``_as_pairs`` (a row per neighbor: ``similarity.brute_force_topk``, the PQ
-  scans). ``_self_neighbors`` is the self-KNN edge list of the four
-  neighbor audits (hubness, label accuracy, mutual k-NN, overlap).
-- Query sides larger than ``_MAX_QUERY_BLOCK`` are split into pmod blocks
-  on the query ordinal, each collected, broadcast and scanned separately.
+  scans). Both render a scan's ranked Arrow table as a local relation.
+  ``_self_neighbors`` is the self-KNN edge list of the four neighbor audits
+  (hubness, label accuracy, mutual k-NN, overlap).
+- Driver memory is bounded by one budget, ``_CANDIDATE_BYTES`` (256 MB of
+  24-byte candidate rows per query block): the scan runs in at most
+  ``_scan_tasks`` tasks, and a query side whose candidates would exceed
+  the budget is cut into contiguous id ranges, each collected, broadcast
+  and scanned separately.
 """
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nbdatatools_spark.functions.distance import distance_expr, distance_matrix
 
 _CANDIDATES = "__qid BIGINT, __bid BIGINT, __dist DOUBLE"
-_MAX_QUERY_BLOCK = 65536  # queries per collected block (``_query_blocks``)
+_RANKED = pa.schema(
+    [("__qid", pa.int64()), ("__bid", pa.int64()), ("__dist", pa.float64()), ("rank", pa.int32())]
+)
+_CANDIDATE_BYTES = 256 << 20  # driver budget for one query block's scan candidates
 
 
 def exact_knn(
@@ -66,16 +76,22 @@ def exact_knn(
     ordinal. Undefined distances (zero-magnitude cosine) rank last and are
     NULL on both paths.
 
+    The top-k runs when ``exact_knn`` is called: the ranked rows are
+    collected to the driver and the result is a local relation
+    (``LocalTableScan``, one row per query in ordinal order), so later
+    actions on it run no scan.
+
     ``impl``:
     - ``"gemm"`` (default — the scale path): the shared ``_knn_kernel``,
       numpy/BLAS distance matrices via Arrow-batched mapInPandas with
       PER-BATCH PARTIAL TOP-K (the SIMD analogue of the reference's
       Panama-vector kernels, src/main/java25/.../DistanceFunction.java:199-232).
-      Only Q*k rows per Arrow batch reach the merge shuffle — never the Q*B
-      cross product. ~2 orders of magnitude faster at the reference
-      benchmark scale (100k x 256d); distances differ from sequential
-      summation only in the last float64 bits. Queries exceeding the
-      broadcast cap are processed in bounded blocks automatically.
+      Each scan task merges its batches and returns only Q*k rows, which
+      the driver ranks — never the Q*B cross product and no shuffle. ~2
+      orders of magnitude faster at the reference benchmark scale (100k x
+      256d); distances differ from sequential summation only in the last
+      float64 bits. Query sides past the driver's candidate budget are
+      processed in bounded blocks automatically.
     - ``"expr"``: pure Catalyst zip_with/aggregate distance inside the
       broadcast crossJoin, ranked by a row_number window. Catalyst inserts
       ``WindowGroupLimit ... Partial`` BELOW the exchange (SPARK-37099, the
@@ -104,10 +120,11 @@ def _ranked_knn(
     query_vec: str,
     base_vec: str,
     impl: str,
-) -> DataFrame:
+) -> DataFrame | pa.Table:
     """The one exact KNN: ranked rows ``(__qid, __bid, __dist, rank)``,
-    ranks 1..k per query — ``_knn_kernel`` for ``impl="gemm"``, the
-    broadcast crossJoin over ``distance_expr`` otherwise (see exact_knn)."""
+    ranks 1..k per query — ``_knn_kernel``'s Arrow table for
+    ``impl="gemm"``, the broadcast crossJoin over ``distance_expr`` (a
+    lazy frame) otherwise (see exact_knn)."""
     if impl == "gemm":
         return _knn_kernel(
             queries, base, k, metric, query_ordinal, query_vec, base_ordinal, base_vec
@@ -175,11 +192,34 @@ def _merge_topk(candidates: DataFrame, k: int) -> DataFrame:
     """Rank ``(__qid, __bid, __dist)`` candidates per query by (distance asc,
     NULLs and NaN last, base id asc) and keep ranks 1..k as ``rank``.
     Undefined distances must go last: plain asc ranks NULLs first and would
-    fill every top-k with zero vectors."""
+    fill every top-k with zero vectors. The Spark twin of ``_rank_rows``,
+    for candidates that JVM joins produce (the expr and ANN paths)."""
     w = Window.partitionBy("__qid").orderBy(
         F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
     )
     return candidates.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _group_starts(keys: np.ndarray) -> np.ndarray:
+    """Start positions of the runs of equal values in sorted ``keys``."""
+    return np.flatnonzero(np.r_[len(keys) > 0, keys[1:] != keys[:-1]])
+
+
+def _rank_rows(qid: np.ndarray, bid: np.ndarray, dist: np.ndarray, k: int):
+    """The numpy ranking of the query-block scan: positions of each query's
+    ``k`` best candidate rows in (query, distance asc with NaN last, base id
+    asc) order — ``_merge_topk``'s order — and their ranks 1..k."""
+    order = np.lexsort((bid, dist, np.isnan(dist), qid))
+    q = qid[order]
+    starts = _group_starts(q)
+    rank = np.arange(len(q)) - np.repeat(starts, np.diff(np.r_[starts, len(q)]))
+    keep = rank < k
+    return order[keep], (rank[keep] + 1).astype(np.int32)
+
+
+def _local(table: pa.Table) -> DataFrame:
+    """A driver-side Arrow table as a local relation (``LocalTableScan``)."""
+    return SparkSession.active().createDataFrame(table)
 
 
 def _defined(dist):
@@ -188,23 +228,33 @@ def _defined(dist):
     return F.when(F.isnan(dist), F.lit(None)).otherwise(dist)
 
 
-def _as_arrays(topk: DataFrame) -> DataFrame:
+def _as_arrays(topk: DataFrame | pa.Table) -> DataFrame:
     """Ranked rows -> the neighbor facet shape ``(ordinal, indices,
-    distances)``."""
-    return (
-        topk.groupBy("__qid")
-        .agg(F.array_sort(F.collect_list(F.struct("rank", "__bid", "__dist"))).alias("__nn"))
-        .select(
-            F.col("__qid").alias("ordinal"),
-            F.transform("__nn", lambda s: s["__bid"]).alias("indices"),
-            F.transform("__nn", lambda s: _defined(s["__dist"])).alias("distances"),
-        )
+    distances)``, one row per query in ordinal order, built on the driver
+    from the ranked Arrow table (a Spark-ranked frame is collected first)
+    and returned as a local relation: no shuffle and no ``groupBy``."""
+    if isinstance(topk, DataFrame):
+        topk = topk.toArrow()
+    topk = topk.sort_by([("__qid", "ascending"), ("rank", "ascending")])
+    qid = topk.column("__qid").to_numpy()
+    starts = _group_starts(qid)
+    offsets = pa.array(np.r_[starts, len(qid)].astype(np.int32))
+    arrays = pa.table({
+        "ordinal": topk.column("__qid").take(starts),
+        "indices": pa.ListArray.from_arrays(offsets, topk.column("__bid").combine_chunks()),
+        "distances": pa.ListArray.from_arrays(offsets, topk.column("__dist").combine_chunks()),
+    })
+    return _local(arrays).select(
+        "ordinal", "indices", F.transform("distances", _defined).alias("distances")
     )
 
 
-def _as_pairs(topk: DataFrame, distance=None) -> DataFrame:
+def _as_pairs(topk: DataFrame | pa.Table, distance=None) -> DataFrame:
     """Ranked rows -> one row per neighbor ``(query_id, rank, base_id,
-    distance)``; ``distance`` optionally replaces the ``__dist`` column."""
+    distance)``; ``distance`` optionally replaces the ``__dist`` column. A
+    ranked Arrow table renders as a local relation."""
+    if isinstance(topk, pa.Table):
+        topk = _local(topk)
     return topk.select(
         F.col("__qid").alias("query_id"),
         "rank",
@@ -213,53 +263,94 @@ def _as_pairs(topk: DataFrame, distance=None) -> DataFrame:
     )
 
 
-def _query_blocks(queries, query_id: str, cols: list, run: Callable, cap=None) -> DataFrame:
-    """The one query-side collect of the top-k scans: the ``(query_id,
-    vector[, key])`` rows reach the driver as ``qids`` (int64), ``Q``
-    (float64) and ``qkeys`` (``None`` without a key column), and ``run(qids,
-    Q, qkeys)`` returns their ranked rows. ``cap`` (default
-    ``_MAX_QUERY_BLOCK``) bounds the collect (VERDICT r1 #6): a larger query
-    side is cut into pmod blocks on the query id, each run separately and
-    the results unioned (~64Mi floats per block at 256d). An empty query
-    side runs nothing and yields no rows."""
-    cap = cap or _MAX_QUERY_BLOCK
-    rows = queries.select(query_id, *cols).limit(cap + 1).collect()
-    if len(rows) > cap:
-        n = queries.count()
-        n_blocks = -(-n // cap)  # ceil
-        blocks = [
-            _query_blocks(
-                queries.where(F.pmod(F.col(query_id), F.lit(n_blocks)) == i),
-                query_id, cols, run, cap=n + 1,  # each block is now under the cap
-            )
-            for i in range(n_blocks)
-        ]
-        return reduce(DataFrame.unionByName, blocks)
-    if not rows:
-        return queries.sparkSession.createDataFrame([], _CANDIDATES + ", rank INT")
-    qids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = np.array([r[1] for r in rows], dtype=np.float64)
-    return run(qids, Q, np.array([r[2] for r in rows]) if len(cols) > 1 else None)
+def _scan_tasks(spark) -> int:
+    """Task count of a query-block scan: the base is coalesced (no shuffle)
+    to at most the session's default parallelism."""
+    return spark.sparkContext.defaultParallelism
 
 
-def _scan_topk(base, base_id: str, cols: list, k: int, qids, payload, make_score) -> DataFrame:
+def _query_blocks(queries, query_id: str, cols: list, k: int, run: Callable) -> pa.Table:
+    """The one query-side collect of the top-k scans: each block of
+    ``(query_id, vector[, key])`` rows reaches the driver through
+    ``toArrow()`` as ``qids`` (int64), ``Q`` (float64, from the flat values
+    buffer) and ``qkeys`` (``None`` without a key column), and ``run(qids,
+    Q, qkeys)`` returns their ranked Arrow rows; the blocks' rows are
+    concatenated.
+
+    Block size comes from one driver budget, ``_CANDIDATE_BYTES``: a scan
+    of Q queries at depth ``k`` brings back at most Q*k rows of 24 bytes
+    per scan task (``_scan_tasks``), so a block holds at most
+    ``_CANDIDATE_BYTES // (24 * k * tasks)`` queries (PHiDJ-style blocking
+    of the probe side). A larger query side is cut by position: its ids are
+    collected and sorted on the driver, and each block is a contiguous id
+    range, so no block exceeds the budget whatever the id values. An empty
+    query side runs nothing and yields no rows."""
+    cap = max(1, _CANDIDATE_BYTES // (24 * k * _scan_tasks(queries.sparkSession)))
+    side = queries.select(
+        F.col(query_id).alias("__qid"), *[F.col(c).alias(f"__q{i}") for i, c in enumerate(cols)]
+    )
+    first = side.limit(cap + 1).toArrow()
+    if first.num_rows <= cap:
+        blocks = [first]
+    else:
+        starts = np.sort(side.select("__qid").toArrow().column(0).to_numpy())[::cap].tolist()
+        qid = F.col("__qid")
+        blocks = (
+            side.where((qid >= lo) & (qid < hi) if hi is not None else qid >= lo).toArrow()
+            for lo, hi in zip(starts, starts[1:] + [None])
+        )
+    ranked = [run(*_query_arrays(block)) for block in blocks if block.num_rows]
+    return pa.concat_tables(ranked) if ranked else _RANKED.empty_table()
+
+
+def _query_arrays(block: pa.Table):
+    """A collected query block -> ``(qids, Q, qkeys)``; null or ragged
+    query vectors raise."""
+    vecs = block.column(1).combine_chunks()
+    lens = vecs.value_lengths().to_numpy(zero_copy_only=False)
+    if vecs.null_count or (lens != lens[0]).any():
+        raise ValueError("query vectors must be non-null and of one dimension")
+    Q = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(vecs), -1)
+    qkeys = block.column(2).to_numpy(zero_copy_only=False) if block.num_columns > 2 else None
+    return block.column(0).to_numpy().astype(np.int64), Q, qkeys
+
+
+def _scan_topk(base, base_id: str, cols: list, k: int, qids, payload, make_score) -> pa.Table:
     """The one query-block scan: ``(qids, payload)`` is broadcast, each task
     builds ``score = make_score(payload)`` once, and each Arrow batch of the
     ``(base_id, *cols)`` rows yields the ``_partial_topk`` of ``D, excluded
     = score(pdf)`` (a batch x Q distance matrix, an optional mask of cells
-    to drop); ``_merge_topk`` reduces the Q*k*n_batches candidates."""
-    bc = base.sparkSession.sparkContext.broadcast((qids, payload))
+    to drop). Each task merges its batches as it goes and emits at most
+    Q*k rows; the driver collects them with ``toArrow()`` and ranks them
+    with ``_rank_rows``. Returns the ranked ``(__qid, __bid, __dist,
+    rank)`` table: no shuffle, no window."""
+    spark = base.sparkSession
+    bc = spark.sparkContext.broadcast((qids, payload))
 
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def task_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, p = bc.value
         score = make_score(p)
+        top = None
         for pdf in batches:
             if pdf.empty:
                 continue
             D, excluded = score(pdf)
-            yield _partial_topk(D, pdf[base_id].to_numpy(dtype=np.int64), q_ids, k, excluded)
+            cand = _partial_topk(D, pdf[base_id].to_numpy(dtype=np.int64), q_ids, k, excluded)
+            if top is not None:
+                cand = pd.concat([top, cand], ignore_index=True)
+                cand = cand.iloc[_rank_rows(*(cand[c].to_numpy() for c in cand.columns), k)[0]]
+            top = cand
+        if top is not None:
+            yield top
 
-    return _merge_topk(base.select(base_id, *cols).mapInPandas(partial_topk, _CANDIDATES), k)
+    cand = (
+        base.select(base_id, *cols)
+        .coalesce(_scan_tasks(spark))
+        .mapInPandas(task_topk, _CANDIDATES)
+        .toArrow()
+    )
+    pos, rank = _rank_rows(*(cand.column(i).to_numpy() for i in range(3)), k)
+    return cand.take(pos).append_column("rank", pa.array(rank))
 
 
 def _knn_kernel(
@@ -274,14 +365,13 @@ def _knn_kernel(
     exclude: Callable | None = None,
     query_key: str | None = None,
     base_key: str | None = None,
-    max_broadcast_queries: int | None = None,
-) -> DataFrame:
-    """The dense exact-KNN kernel: ``(__qid, __bid, __dist, rank)`` rows,
-    ranks 1..k per query — ``_scan_topk`` over query blocks of at most
-    ``max_broadcast_queries`` (default ``_MAX_QUERY_BLOCK``), scoring each
-    Arrow batch with a (batch x Q) ``distance_matrix`` and dropping the
-    cells ``exclude(D, base_keys, query_keys)`` flags (``base_key`` /
-    ``query_key`` name the columns it compares)."""
+) -> pa.Table:
+    """The dense exact-KNN kernel: ranked ``(__qid, __bid, __dist, rank)``
+    rows, ranks 1..k per query — ``_scan_topk`` over ``_query_blocks``,
+    scoring each Arrow batch with a (batch x Q) ``distance_matrix`` and
+    dropping the cells ``exclude(D, base_keys, query_keys)`` flags
+    (``base_key`` / ``query_key`` name the columns it compares; the base
+    key may be ``base_id`` itself)."""
     keyed = exclude is not None
 
     def dense(payload):
@@ -293,12 +383,10 @@ def _knn_kernel(
 
         return score
 
+    base_cols = [base_vec] + ([base_key] if keyed and base_key != base_id else [])
     return _query_blocks(
-        queries, query_id, [query_vec] + ([query_key] if keyed else []),
-        lambda qids, Q, qkeys: _scan_topk(
-            base, base_id, [base_vec] + ([base_key] if keyed else []), k, qids, (Q, qkeys), dense
-        ),
-        max_broadcast_queries,
+        queries, query_id, [query_vec] + ([query_key] if keyed else []), k,
+        lambda qids, Q, qkeys: _scan_topk(base, base_id, base_cols, k, qids, (Q, qkeys), dense),
     )
 
 
@@ -437,7 +525,16 @@ def _self_neighbors(
     the caller's precomputed ``neighbors`` list ``(query_id, base_id,
     distance)`` — raw ANN output included. Self rows are dropped and the
     rest re-ranked by (distance asc, NULLs last, base_id) to exactly k, so
-    an undefined distance never displaces a defined one."""
+    an undefined distance never displaces a defined one. On the gemm path
+    the scan masks each query's own cell and ranks k other ids directly."""
+    if neighbors is None and impl == "gemm":
+        return _as_pairs(
+            _knn_kernel(
+                df, df, k, metric, id_col, vec_col, id_col, vec_col,
+                exclude=lambda D, bids, qids: bids.to_numpy()[:, None] == qids[None, :],
+                query_key=id_col, base_key=id_col,
+            )
+        ).drop("rank")
     if neighbors is None:
         cand = _ranked_knn(df, df, k + 1, metric, id_col, id_col, vec_col, vec_col, impl)
     else:

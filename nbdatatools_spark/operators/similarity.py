@@ -28,6 +28,7 @@ from __future__ import annotations
 import random
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -40,6 +41,7 @@ from nbdatatools_spark.operators.clustering import (
 from nbdatatools_spark.operators.knn import (
     _as_pairs,
     _knn_kernel,
+    _local,
     _merge_topk,
     _query_blocks,
     _ranked_knn,
@@ -375,9 +377,10 @@ def pq_topk(
     the exact re-rank path reads RAW vectors and needs no rotation).
 
     operators.knn's query-block scan with an ADC scorer: query blocks
-    (pmod-blocked past the cap, as in exact_knn) are broadcast, each task
-    builds the per-query lookup tables once, and each Arrow batch of CODES
-    is scored from them. Metrics: ``euclidean`` (additive squared-L2,
+    (cut past the driver's candidate budget, as in exact_knn) are
+    broadcast, each task builds the per-query lookup tables once, each
+    Arrow batch of CODES is scored from them, and the driver ranks the
+    tasks' top-k rows. Metrics: ``euclidean`` (additive squared-L2,
     reported as sqrt) and ``dot`` (additive inner product, reported
     negated); for cosine, L2-normalize vectors before encoding and use
     ``dot``.
@@ -415,7 +418,7 @@ def pq_topk(
         return score
 
     out = _query_blocks(
-        queries, query_id, [vec_col],
+        queries, query_id, [vec_col], shortlist_k,
         lambda qids, Q, _: _scan_topk(
             encoded, "id", ["codes"], shortlist_k, qids,
             (Q if rot is None else Q @ rot, books), adc,
@@ -428,7 +431,7 @@ def pq_topk(
 
 
 def _rerank(
-    shortlist: DataFrame,
+    shortlist: pa.Table,
     queries: DataFrame,
     rerank_base: DataFrame,
     k: int,
@@ -445,7 +448,7 @@ def _rerank(
     qdf = queries.select(F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qvec"))
     cand = (
         rerank_base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"))
-        .join(F.broadcast(shortlist.select("__qid", "__bid")), "__bid")
+        .join(F.broadcast(_local(shortlist).select("__qid", "__bid")), "__bid")
         .join(F.broadcast(qdf), "__qid")
     )
     rer = cand.select(
@@ -549,7 +552,7 @@ def ivfpq_topk(
             (Q, centroids, books, probes), ivfadc,
         )
 
-    out = _query_blocks(queries, query_id, [vec_col], run)
+    out = _query_blocks(queries, query_id, [vec_col], shortlist_k, run)
     if rerank_base is None:
         return _as_pairs(out, F.sqrt("__dist"))
     return _rerank(out, queries, rerank_base, k, "euclidean", query_id, base_id, vec_col)
@@ -793,10 +796,10 @@ def hard_negatives(
     is useless for training. Ties break on (distance, base_id).
 
     ``impl="gemm"`` (scale path): operators.knn's dense kernel with a
-    same-label exclusion mask — query blocks (ids, vectors, labels;
-    pmod-blocked past the cap, as in exact_knn) are broadcast, each Arrow
-    batch of the base side keeps its local top-k per query, and the merge
-    shuffle carries Q*k rows per batch, never Q*B.
+    same-label exclusion mask — query blocks (ids, vectors, labels; cut
+    past the driver's candidate budget, as in exact_knn) are broadcast,
+    each scan task keeps its local top-k per query, and the driver ranks
+    those Q*k rows per task, never Q*B.
     ``impl="expr"`` is the sequential-fold Catalyst path whose arithmetic a
     SQL oracle reproduces bit-for-bit.
     """

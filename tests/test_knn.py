@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nbdatatools_spark.operators.hybrid import hybrid_ground_truth, result_indices_table
+from nbdatatools_spark.operators import knn
 from nbdatatools_spark.operators.knn import (
     _as_arrays,
     _knn_kernel,
@@ -62,19 +63,71 @@ def test_neighbor_invariants_hold(vecs):
     assert res["n_bad_order"] == 0 and res["n_bad_bounds"] == 0 and res["n_rows"] == 20
 
 
-def test_block_partitioned_equals_single(vecs):
+def _budget_for(spark, k, queries):
+    """A candidate budget that lets ``queries`` queries of depth k per block."""
+    return 24 * k * knn._scan_tasks(spark) * queries
+
+
+def test_block_partitioned_equals_single(spark, vecs, monkeypatch):
     df, _ = vecs
     q = df.where(F.col("ordinal") < 12)
     a = {r["ordinal"]: list(r["indices"]) for r in exact_knn(q, df, K).collect()}
-    # a cap of 5 splits the 12 queries into 3 pmod blocks
+    # a budget of 5 queries per block splits the 12 queries into 3 blocks
+    monkeypatch.setattr(knn, "_CANDIDATE_BYTES", _budget_for(spark, K, 5))
     blocked = _as_arrays(
-        _knn_kernel(
-            q, df, K, "cosine", "ordinal", "vector", "ordinal", "vector",
-            max_broadcast_queries=5,
-        )
+        _knn_kernel(q, df, K, "cosine", "ordinal", "vector", "ordinal", "vector")
     )
     b = {r["ordinal"]: list(r["indices"]) for r in blocked.collect()}
     assert a == b
+
+
+def test_query_blocks_cut_by_position(spark, vecs, monkeypatch):
+    """Ids sharing a factor with the block count (0, 3, ..., 33 under 3
+    blocks) must still spread over blocks of at most the budget's size."""
+    df, _ = vecs
+    q = df.where((F.col("ordinal") % 3 == 0) & (F.col("ordinal") < 36))
+    single = _as_arrays(
+        _knn_kernel(q, df, K, "cosine", "ordinal", "vector", "ordinal", "vector")
+    ).collect()
+    seen = []
+    scan = knn._scan_topk
+
+    def recording(base, base_id, cols, k, qids, payload, make_score):
+        seen.append(sorted(qids.tolist()))
+        return scan(base, base_id, cols, k, qids, payload, make_score)
+
+    monkeypatch.setattr(knn, "_scan_topk", recording)
+    monkeypatch.setattr(knn, "_CANDIDATE_BYTES", _budget_for(spark, K, 5))
+    blocked = _as_arrays(
+        _knn_kernel(q, df, K, "cosine", "ordinal", "vector", "ordinal", "vector")
+    ).collect()
+    assert [len(ids) for ids in seen] == [5, 5, 2]
+    assert sorted(i for ids in seen for i in ids) == list(range(0, 36, 3))
+    assert [tuple(r) for r in blocked] == [tuple(r) for r in single]
+
+
+def test_driver_rank_equals_merge_topk(spark):
+    """The scan's driver ranking (``_rank_rows``) and the Spark ranking
+    (``_merge_topk``) agree row for row on candidates with NaN distances,
+    ties at the k-th distance and equal distances from different tasks."""
+    rng = np.random.default_rng(7)
+    n, k = 600, 4
+    qid = rng.integers(0, 12, n).astype(np.int64)
+    bid = rng.permutation(n).astype(np.int64)
+    dist = rng.choice([0.0, 0.25, 0.5, 0.75, 1.0, np.nan], n)  # heavy ties
+    # the same (qid, distance) pairs again under other base ids, as another
+    # scan task would report them
+    qid, bid, dist = np.r_[qid, qid[:100]], np.r_[bid, bid[:100] + n], np.r_[dist, dist[:100]]
+    pos, rank = knn._rank_rows(qid, bid, dist, k)
+    got = sorted(zip(qid[pos].tolist(), rank.tolist(), bid[pos].tolist()))
+    cands = spark.createDataFrame(
+        [(int(a), int(b), float(c)) for a, b, c in zip(qid, bid, dist)], knn._CANDIDATES
+    )
+    want = sorted(
+        (r["__qid"], r["rank"], r["__bid"]) for r in knn._merge_topk(cands, k).collect()
+    )
+    assert got == want
+    assert len(got) == 12 * k
 
 
 def test_zero_vectors_never_rank_in_cosine_topk(spark):

@@ -169,8 +169,9 @@ def _rows(df):
 
 
 def test_pq_scans_block_large_query_sides(clustered, monkeypatch):
-    """A query side over the block cap is scanned in pmod blocks, and the
-    blocked result equals the single-block one for every PQ scan."""
+    """A query side over the driver's candidate budget is scanned in
+    blocks, and the blocked result equals the single-block one for every
+    PQ scan."""
     from nbdatatools_spark.operators import knn
     from nbdatatools_spark.operators.similarity import ivfpq_build, ivfpq_topk
 
@@ -184,7 +185,10 @@ def test_pq_scans_block_large_query_sides(clustered, monkeypatch):
         lambda: ivfpq_topk(q, ivf_enc, index, k=5, nprobe=2),
     ]
     single = [_rows(scan()) for scan in scans]
-    monkeypatch.setattr(knn, "_MAX_QUERY_BLOCK", 6)  # 20 queries -> 4 blocks
+    # 6 queries of depth 5 per block: 20 queries -> 4 blocks (the
+    # re-ranked scan's 20-deep shortlist gets 1 query per block)
+    budget = 24 * 5 * knn._scan_tasks(clustered.sparkSession) * 6
+    monkeypatch.setattr(knn, "_CANDIDATE_BYTES", budget)
     blocked = [_rows(scan()) for scan in scans]
     assert all(len(rows) == 20 * 5 for rows in single)
     assert blocked == single

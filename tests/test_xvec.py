@@ -300,3 +300,89 @@ def test_xvec_streaming_source_incremental(spark, tmp_path):
     assert len(got2) == 100
     assert sorted(r.ordinal for r in got2) == list(range(100))
     assert sorted(r.vector[0] for r in got2) == [float(i) for i in range(100)]
+
+
+# --- decoded-facet cache ----------------------------------------------------
+
+
+def _vectors(df):
+    return [list(r["vector"]) for r in df.orderBy("ordinal").collect()]
+
+
+def test_cache_hit_returns_the_persisted_frame(spark, tmp_path):
+    p = str(tmp_path / "hit.fvec")
+    _write_raw(p, np.arange(40, dtype="<f4").reshape(10, 4), "<f4")
+    df = read_xvec(spark, p)
+    assert _vectors(df)[9] == [36.0, 37.0, 38.0, 39.0]
+    again = read_xvec(spark, p)
+    assert again is df
+    # the plan's root scan is the cache (the decode below it is the cached
+    # plan's description, not a node that runs)
+    assert again._jdf.queryExecution().executedPlan().toString().startswith("InMemoryTableScan")
+    # another ordinal_start is another entry
+    assert read_xvec(spark, p, ordinal_start=5) is not df
+
+
+def test_cache_rewrite_in_place_same_size_reads_new_bytes(spark, tmp_path):
+    p = str(tmp_path / "inplace.fvec")
+    _write_raw(p, np.zeros((10, 4), "<f4"), "<f4")
+    assert _vectors(read_xvec(spark, p))[3] == [0.0] * 4
+    with open(p, "r+b") as f:  # same inode, same size, new bytes
+        f.seek(3 * 20 + 4)
+        f.write(np.full(4, 7.0, "<f4").tobytes())
+    assert _vectors(read_xvec(spark, p))[3] == [7.0] * 4
+
+
+def test_cache_write_read_rewrite_decodes_new_file(spark, tmp_path):
+    p = str(tmp_path / "rw.fvec")
+    first = spark.createDataFrame([(i, [float(i)] * 3) for i in range(6)], "ordinal BIGINT, vector ARRAY<FLOAT>")
+    write_xvec(first, p)
+    assert _vectors(read_xvec(spark, p))[5] == [5.0] * 3
+    write_xvec(first.select("ordinal", F.transform("vector", lambda x: -x).alias("vector")), p)
+    assert _vectors(read_xvec(spark, p))[5] == [-5.0] * 3
+
+
+def test_cache_unpersisted_hit_is_a_miss(spark, tmp_path):
+    p = str(tmp_path / "unpersist.fvec")
+    _write_raw(p, np.arange(24, dtype="<f4").reshape(6, 4), "<f4")
+    df = read_xvec(spark, p)
+    df.count()
+    df.unpersist()  # what a caller that owns the frame may do
+    again = read_xvec(spark, p)
+    assert again.is_cached
+    assert _vectors(again)[5] == [20.0, 21.0, 22.0, 23.0]
+    spark.catalog.clearCache()
+    assert _vectors(read_xvec(spark, p))[0] == [0.0, 1.0, 2.0, 3.0]
+
+
+def test_cache_evicts_lru_under_byte_budget(spark, tmp_path, monkeypatch):
+    from nbdatatools_spark.sources import xvec
+
+    xvec.clear_cache(spark)
+    paths = []
+    for i in range(4):
+        paths.append(str(tmp_path / f"lru{i}.fvec"))
+        _write_raw(paths[-1], np.full((10, 4), i, "<f4"), "<f4")  # 200 bytes each
+    monkeypatch.setattr(xvec, "_CACHE_BYTES", 500)
+    frames = [read_xvec(spark, p) for p in paths[:2]]
+    read_xvec(spark, paths[0])  # touch: lru0 is now more recent than lru1
+    frames.append(read_xvec(spark, paths[2]))
+    assert [f.is_cached for f in frames] == [True, False, True]
+    frames.append(read_xvec(spark, paths[3]))
+    assert sum(b for _, b in xvec._caches[spark].values()) <= 500
+    assert [f.is_cached for f in frames] == [False, False, True, True]
+    assert read_xvec(spark, paths[3]) is frames[3]
+    assert _vectors(read_xvec(spark, paths[1]))[0] == [1.0] * 4
+    xvec.clear_cache(spark)
+
+
+def test_cache_clear_empties_it(spark, tmp_path):
+    from nbdatatools_spark.sources import xvec
+
+    p = str(tmp_path / "clear.fvec")
+    _write_raw(p, np.ones((4, 4), "<f4"), "<f4")
+    df = read_xvec(spark, p)
+    assert xvec._caches[spark]
+    xvec.clear_cache(spark)
+    assert not xvec._caches[spark] and not df.is_cached
+    assert read_xvec(spark, p) is not df
