@@ -199,15 +199,11 @@ def _cmd_compute_knn(args) -> int:
     if not args.out_indices and not args.out_distances:
         _emit(nn.orderBy("ordinal").limit(args.limit).collect())
         return 0
-    # both facets come from one evaluation of the answer key
-    nn = nn.persist()
-    try:
-        if args.out_indices:
-            _write_vectors(nn.select("ordinal", F.col("indices").cast("array<int>").alias("vector")), args.out_indices)
-        if args.out_distances:
-            _write_vectors(nn.select("ordinal", F.col("distances").cast("array<float>").alias("vector")), args.out_distances)
-    finally:
-        nn.unpersist()
+    # exact_knn returns a local relation: both facets read the one answer key
+    if args.out_indices:
+        _write_vectors(nn.select("ordinal", F.col("indices").cast("array<int>").alias("vector")), args.out_indices)
+    if args.out_distances:
+        _write_vectors(nn.select("ordinal", F.col("distances").cast("array<float>").alias("vector")), args.out_distances)
     return 0
 
 

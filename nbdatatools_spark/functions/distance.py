@@ -7,6 +7,7 @@ dot-product). Implementations are pure ``pyspark.sql.functions`` higher-order
 expressions — they run JVM-side inside whole-stage codegen, never a Python UDF.
 ``distance_matrix`` is their numpy twin for the Arrow-batched kernels
 (operators.knn); both resolve metric names through the one ``METRICS`` table.
+Those kernels decode every vector column through ``_matrix``.
 
 Divergence (documented, SURVEY §7 "What's hard"): the reference THROWS on
 zero-magnitude cosine inputs (DistanceFunction.java:239-241). Throwing inside a
@@ -18,6 +19,7 @@ engine returns NULL for zero-magnitude cosine and exposes a validation helper
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -97,6 +99,19 @@ def _metric(metric: str):
 def distance_expr(metric: str, a: Column, b: Column) -> Column:
     """Metric dispatch by name, as a Catalyst column expression."""
     return _metric(metric)(a, b)
+
+
+def _matrix(vectors: pa.ListArray, dim: int | None = None) -> np.ndarray:
+    """Arrow list array of vectors -> float64 ``(rows, dim)`` from the flat
+    values buffer. A null vector, or one not of length ``dim`` (default: the
+    first one's), raises; a null component reads as NaN."""
+    lens = vectors.value_lengths().to_numpy(zero_copy_only=False)
+    if dim is None:
+        dim = int(lens[0]) if len(lens) else 0
+    if vectors.null_count or (lens != dim).any():
+        raise ValueError("vectors must be non-null and of one dimension")
+    flat = vectors.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(vectors), dim)
 
 
 def distance_matrix(B, Q, metric: str):

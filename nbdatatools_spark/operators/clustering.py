@@ -33,11 +33,13 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-from nbdatatools_spark.functions.distance import distance_expr, distance_matrix
+from nbdatatools_spark.functions.distance import _matrix, distance_expr, distance_matrix
 
 
 def _centroid_struct_array(vec, centroids: Sequence[Sequence[float]], metric: str):
@@ -79,9 +81,11 @@ def centroid_assign(
     struct tie-break only if the distance compares greater; to keep the
     argmin total, NULL distances are coalesced to +Inf first.
 
-    ``impl="gemm"``: Arrow-batched numpy kernel — one (batch x k) distance
-    matrix per Arrow batch, argmin with the same (distance, centroid_id)
-    tie-break (np.argmin keeps the first = lowest cid). The scale path:
+    ``impl="gemm"``: Arrow-batched numpy kernel (``mapInArrow``, vectors
+    decoded by ``functions.distance._matrix``: a null or ragged vector
+    raises) — one (batch x k) distance matrix per Arrow batch, argmin with
+    the same (distance, centroid_id) tie-break (np.argmin keeps the first =
+    lowest cid). The scale path:
     the literal-expression tree costs O(k*d) interpreted ops per ROW and
     seconds of driver-side analysis at k*d in the thousands; the kernel
     is two BLAS calls per batch. Distances differ from the expr path only
@@ -116,38 +120,29 @@ def _centroid_assign_gemm(
     out_col: str,
     dist_col: str | None,
 ) -> DataFrame:
-    """mapInPandas nearest-centroid kernel (see centroid_assign impl="gemm").
+    """mapInArrow nearest-centroid kernel (see centroid_assign impl="gemm"):
+    each Arrow batch keeps its columns and types and gains ``out_col`` (and
+    ``dist_col``).
 
     Semantics pinned to the expr path: NaN/undefined distances -> +Inf
     (zero-norm cosine rows get +Inf to every centroid and land on cid 0);
     argmin tie-break = lowest centroid_id (np.argmin first-occurrence)."""
-    import numpy as np
-    from pyspark.sql.types import DoubleType, IntegerType, StructField
-
     C = np.asarray(centroids, dtype=np.float64)  # (k, d)
     fields = list(df.schema.fields) + [StructField(out_col, IntegerType())]
     if dist_col:
         fields.append(StructField(dist_col, DoubleType()))
-    schema = StructType(fields)
 
     def assign_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(**{out_col: np.array([], dtype=np.int32)})
-                continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            D = distance_matrix(V, C, metric)
+        for batch in batches:
+            D = distance_matrix(_matrix(batch.column(vec_col), C.shape[1]), C, metric)
             D[np.isnan(D)] = np.inf  # undefined (zero-norm cosine) -> +Inf
             cid = D.argmin(axis=1)
-            out = pdf.copy()
-            out[out_col] = cid.astype(np.int32)
+            batch = batch.append_column(out_col, pa.array(cid.astype(np.int32)))
             if dist_col:
-                out[dist_col] = D[np.arange(len(cid)), cid]
-            yield out
+                batch = batch.append_column(dist_col, pa.array(D[np.arange(len(cid)), cid]))
+            yield batch
 
-    return df.mapInPandas(assign_batches, schema)
+    return df.mapInArrow(assign_batches, StructType(fields))
 
 
 def kmeans_centroids(
@@ -184,8 +179,6 @@ def _greedy_keep(ids, vecs, sims, threshold: float, block: int = 1024):
 
     Returns a boolean keep-mask aligned with the input order.
     """
-    import numpy as np
-
     n = len(ids)
     order = np.lexsort((ids, sims))  # primary: centroid_sim asc, tie: id asc
     X = vecs[order]
@@ -242,7 +235,6 @@ def semantic_dedup(
     partitioning. Pass precomputed ``centroids`` to pin them exactly (tests,
     incremental runs); otherwise MLlib KMeans trains them with ``seed``.
     """
-    import numpy as np
     import pandas as pd
 
     if centroids is None:
@@ -881,14 +873,7 @@ def kcenter_select(
 def _plain_scalar(v):
     """Pass ids through unchanged except numpy scalars -> Python ints
     (createDataFrame rejects numpy types on some Arrow paths)."""
-    try:
-        import numpy as np
-
-        if isinstance(v, np.generic):
-            return v.item()
-    except Exception:
-        pass
-    return v
+    return v.item() if isinstance(v, np.generic) else v
 
 
 def dbscan_from_pairs(

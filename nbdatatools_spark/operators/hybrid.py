@@ -12,16 +12,16 @@ them all in ONE scan of the metadata as a per-row array of matching
 predicate ids (``_predicate_ids``). ``result_indices_table`` groups that
 array by predicate; ``hybrid_ground_truth`` instead joins it onto the base
 vectors by ordinal and runs the dense KNN kernel (operators.knn._knn_kernel,
-the query-block scan every top-k caller shares) with a per-cell mask: base row b is a candidate for query q iff q is among
-b's predicate ids. The base table streams through the kernel once; rows
-matching no predicate are dropped by the join before any distance is
-computed.
+the query-block scan every top-k caller shares) with a per-cell mask: base
+row b is a candidate for query q iff q is among b's predicate ids. The
+base table streams through the kernel once; rows matching no predicate are
+dropped by the join before any distance is computed.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -68,12 +68,12 @@ def result_indices_table(
     )
 
 
-def _not_matching(D: np.ndarray, pids: pd.Series, qids: np.ndarray) -> np.ndarray:
+def _not_matching(D: np.ndarray, pids: pa.ListArray, qids: np.ndarray) -> np.ndarray:
     """Kernel mask: cell (b, q) is excluded unless query ordinal ``qids[q]``
     is among base row b's predicate ids."""
     order = np.argsort(qids)
-    rows = np.repeat(np.arange(len(pids)), pids.map(len).to_numpy())
-    flat = np.concatenate([np.empty(0, np.int64), *pids])
+    rows = np.repeat(np.arange(len(pids)), pids.value_lengths().to_numpy(zero_copy_only=False))
+    flat = pids.flatten().to_numpy(zero_copy_only=False)
     pos = np.minimum(np.searchsorted(qids, flat, sorter=order), len(qids) - 1)
     hit = qids[order[pos]] == flat
     excluded = np.ones(D.shape, dtype=bool)

@@ -17,9 +17,10 @@ Physical strategy (scale posture):
   one ``np.lexsort`` — no shuffle, no window, no ``groupBy``.
 - One query-block scan does that for every top-k caller: ``_query_blocks``
   collects the query side through Arrow, ``_scan_topk`` broadcasts it, runs
-  each Arrow batch's ``_partial_topk``, merges the batches within each
-  task and ranks the collected candidates with ``_rank_rows``; a caller
-  supplies only its per-batch scorer. ``_knn_kernel`` (``exact_knn``,
+  each Arrow batch's ``_partial_topk`` (``mapInArrow``), merges the batches
+  within each task and ranks the collected candidates with ``_rank_rows``;
+  a caller supplies only its per-batch scorer. Both sides decode vectors
+  with ``functions.distance._matrix``. ``_knn_kernel`` (``exact_knn``,
   hybrid ground truth, hard negatives, the self-KNN audits) scores with
   ``distance_matrix`` and an optional per-cell exclusion mask; the PQ scans
   with per-task lookup tables.
@@ -43,12 +44,11 @@ from __future__ import annotations
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.functions.distance import distance_expr, distance_matrix
+from nbdatatools_spark.functions.distance import _matrix, distance_expr, distance_matrix
 
 _CANDIDATES = "__qid BIGINT, __bid BIGINT, __dist DOUBLE"
 _RANKED = pa.schema(
@@ -83,7 +83,7 @@ def exact_knn(
 
     ``impl``:
     - ``"gemm"`` (default — the scale path): the shared ``_knn_kernel``,
-      numpy/BLAS distance matrices via Arrow-batched mapInPandas with
+      numpy/BLAS distance matrices via Arrow-batched mapInArrow with
       PER-BATCH PARTIAL TOP-K (the SIMD analogue of the reference's
       Panama-vector kernels, src/main/java25/.../DistanceFunction.java:199-232).
       Each scan task merges its batches and returns only Q*k rows, which
@@ -149,10 +149,10 @@ def _partial_topk(
     qids: np.ndarray,
     k: int,
     excluded: np.ndarray | None = None,
-) -> pd.DataFrame:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """The one partial top-k: the ``k`` smallest cells of each column of the
-    (base rows x queries) matrix ``D`` as candidate rows ``(__qid, __bid,
-    __dist)``, ordered by (value, base id) — NaN cells rank last and tie
+    (base rows x queries) matrix ``D`` as candidate columns ``(qid, bid,
+    dist)``, ordered by (value, base id) — NaN cells rank last and tie
     with each other, matching the merge. Cells flagged in ``excluded`` rank
     after every other cell, NaN included, and are dropped — a query never
     sees an excluded base row. Cells tied with a column's k-th value are
@@ -176,16 +176,11 @@ def _partial_topk(
         idx[:, q] = np.concatenate(
             [below, ties[np.argsort(bids[ties], kind="stable")[: kk - len(below)]]]
         )
-    rows = pd.DataFrame(
-        {
-            "__qid": np.repeat(qids, kk),
-            "__bid": bids[idx.T.ravel()],
-            "__dist": np.take_along_axis(D, idx, axis=0).T.ravel(),
-        }
-    )
-    if excluded is None:
-        return rows
-    return rows[~np.take_along_axis(excluded, idx, axis=0).T.ravel()]
+    rows = np.repeat(qids, kk), bids[idx.T.ravel()], np.take_along_axis(D, idx, axis=0).T.ravel()
+    if excluded is not None:
+        keep = ~np.take_along_axis(excluded, idx, axis=0).T.ravel()
+        rows = tuple(col[keep] for col in rows)
+    return rows
 
 
 def _merge_topk(candidates: DataFrame, k: int) -> DataFrame:
@@ -304,49 +299,44 @@ def _query_blocks(queries, query_id: str, cols: list, k: int, run: Callable) -> 
 
 
 def _query_arrays(block: pa.Table):
-    """A collected query block -> ``(qids, Q, qkeys)``; null or ragged
-    query vectors raise."""
-    vecs = block.column(1).combine_chunks()
-    lens = vecs.value_lengths().to_numpy(zero_copy_only=False)
-    if vecs.null_count or (lens != lens[0]).any():
-        raise ValueError("query vectors must be non-null and of one dimension")
-    Q = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(vecs), -1)
+    """A collected query block -> ``(qids, Q, qkeys)``."""
     qkeys = block.column(2).to_numpy(zero_copy_only=False) if block.num_columns > 2 else None
-    return block.column(0).to_numpy().astype(np.int64), Q, qkeys
+    return block.column(0).to_numpy().astype(np.int64), _matrix(block.column(1).combine_chunks()), qkeys
 
 
 def _scan_topk(base, base_id: str, cols: list, k: int, qids, payload, make_score) -> pa.Table:
     """The one query-block scan: ``(qids, payload)`` is broadcast, each task
     builds ``score = make_score(payload)`` once, and each Arrow batch of the
     ``(base_id, *cols)`` rows yields the ``_partial_topk`` of ``D, excluded
-    = score(pdf)`` (a batch x Q distance matrix, an optional mask of cells
-    to drop). Each task merges its batches as it goes and emits at most
-    Q*k rows; the driver collects them with ``toArrow()`` and ranks them
-    with ``_rank_rows``. Returns the ranked ``(__qid, __bid, __dist,
-    rank)`` table: no shuffle, no window."""
+    = score(batch)`` (a batch x Q distance matrix, an optional mask of cells
+    to drop; Spark passes no empty batch). Each task merges its batches'
+    candidates with ``_rank_rows`` and emits at most Q*k rows as one Arrow
+    batch; the driver collects them with ``toArrow()`` and ranks them with
+    ``_rank_rows``. Returns the ranked ``(__qid, __bid, __dist, rank)``
+    table: no shuffle, no window."""
     spark = base.sparkSession
     bc = spark.sparkContext.broadcast((qids, payload))
 
-    def task_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def task_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         q_ids, p = bc.value
         score = make_score(p)
         top = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            D, excluded = score(pdf)
-            cand = _partial_topk(D, pdf[base_id].to_numpy(dtype=np.int64), q_ids, k, excluded)
+        for batch in batches:
+            D, excluded = score(batch)
+            bids = batch.column(base_id).to_numpy().astype(np.int64)
+            cand = _partial_topk(D, bids, q_ids, k, excluded)
             if top is not None:
-                cand = pd.concat([top, cand], ignore_index=True)
-                cand = cand.iloc[_rank_rows(*(cand[c].to_numpy() for c in cand.columns), k)[0]]
+                cand = [np.concatenate(pair) for pair in zip(top, cand)]
+                pos = _rank_rows(*cand, k)[0]
+                cand = [col[pos] for col in cand]
             top = cand
         if top is not None:
-            yield top
+            yield pa.record_batch(list(top), names=["__qid", "__bid", "__dist"])
 
     cand = (
         base.select(base_id, *cols)
         .coalesce(_scan_tasks(spark))
-        .mapInPandas(task_topk, _CANDIDATES)
+        .mapInArrow(task_topk, _CANDIDATES)
         .toArrow()
     )
     pos, rank = _rank_rows(*(cand.column(i).to_numpy() for i in range(3)), k)
@@ -370,16 +360,17 @@ def _knn_kernel(
     rows, ranks 1..k per query — ``_scan_topk`` over ``_query_blocks``,
     scoring each Arrow batch with a (batch x Q) ``distance_matrix`` and
     dropping the cells ``exclude(D, base_keys, query_keys)`` flags
-    (``base_key`` / ``query_key`` name the columns it compares; the base
-    key may be ``base_id`` itself)."""
+    (``base_key`` / ``query_key`` name the columns it compares: the batch's
+    Arrow column and the query block's numpy array; the base key may be
+    ``base_id`` itself)."""
     keyed = exclude is not None
 
     def dense(payload):
         Q, q_keys = payload
 
-        def score(pdf):
-            D = distance_matrix(np.array(list(pdf[base_vec]), dtype=np.float64), Q, metric)
-            return D, (exclude(D, pdf[base_key], q_keys) if keyed else None)
+        def score(batch):
+            D = distance_matrix(_matrix(batch.column(base_vec), Q.shape[1]), Q, metric)
+            return D, (exclude(D, batch.column(base_key), q_keys) if keyed else None)
 
         return score
 

@@ -32,7 +32,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.functions.distance import distance_expr
+from nbdatatools_spark.functions.distance import _matrix, distance_expr
 from nbdatatools_spark.operators.clustering import (
     _centroid_struct_array,
     centroid_assign,
@@ -258,10 +258,18 @@ def _pq_codes(X, books):
     ).astype(np.uint8)
 
 
+def _code_matrix(codes: pa.Array, m: int) -> np.ndarray:
+    """An Arrow column of ``m``-byte PQ codes -> ``(rows, m)`` uint8."""
+    fixed = codes.cast(pa.binary(m))
+    return np.frombuffer(fixed.buffers()[1], np.uint8, len(fixed) * m, fixed.offset * m).reshape(-1, m)
+
+
 def _sample_matrix(base: DataFrame, vec_col: str, sample_limit: int, m: int):
-    """The driver-side training sample as float64, checked for ``d % m``."""
-    rows = base.select(vec_col).limit(sample_limit).collect()
-    X = np.array([r[0] for r in rows], dtype=np.float64)
+    """The driver-side training sample as float64, checked for ``d % m``:
+    the first ``sample_limit`` rows in partition order, read by one task so
+    the sample does not depend on shuffle block order."""
+    sample = base.select(vec_col).coalesce(1).limit(sample_limit).toArrow()
+    X = _matrix(sample.column(0).combine_chunks())
     if X.shape[1] % m != 0:
         raise ValueError(f"dim {X.shape[1]} not divisible by m={m}")
     return X
@@ -331,30 +339,29 @@ def _encode(base: DataFrame, base_id: str, vec_col: str, codebooks, rotation=Non
     batch is rotated (``X @ R``) when a ``rotation`` is given, assigned to
     its nearest coarse centroid and replaced by the residual when
     ``centroids`` are given (IVFADC), then coded by ``_pq_codes``."""
-    import pandas as pd
-
     bc = base.sparkSession.sparkContext.broadcast(
         (np.asarray(codebooks), None if rotation is None else np.asarray(rotation), centroids)
     )
 
     def encode(batches):
         books, rot, C = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.array(list(pdf[vec_col]), dtype=np.float64)
+        m, _, dsub = books.shape
+        for batch in batches:
+            X = _matrix(batch.column(vec_col), m * dsub)
             if rot is not None:
                 X = X @ rot
-            out = {"id": pdf[base_id].to_numpy()}
+            out = {"id": batch.column(base_id).cast(pa.int64())}
             if C is not None:
                 cid = _nearest(X, C)
-                out["centroid_id"] = cid.astype(np.int32)
+                out["centroid_id"] = pa.array(cid.astype(np.int32))
                 X = X - C[cid]
-            out["codes"] = [c.tobytes() for c in _pq_codes(X, books)]
-            yield pd.DataFrame(out)
+            codes = np.ascontiguousarray(_pq_codes(X, books))
+            fixed = pa.Array.from_buffers(pa.binary(m), len(codes), [None, pa.py_buffer(codes)])
+            out["codes"] = fixed.cast(pa.binary())
+            yield pa.record_batch(out)
 
     cells = "" if centroids is None else "centroid_id INT, "
-    return base.select(base_id, vec_col).mapInPandas(encode, f"id BIGINT, {cells}codes BINARY")
+    return base.select(base_id, vec_col).mapInArrow(encode, f"id BIGINT, {cells}codes BINARY")
 
 
 def pq_topk(
@@ -408,8 +415,8 @@ def pq_topk(
         else:  # dot: negative inner product so smaller = closer
             lut = -(subq[:, :, None, :] * books[None, :, :, :]).sum(-1)
 
-        def score(pdf):
-            codes = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8).reshape(-1, m)
+        def score(batch):
+            codes = _code_matrix(batch.column("codes"), m)
             D = np.zeros((len(codes), len(Q)))
             for s in range(m):
                 D += lut[:, s, codes[:, s]].T
@@ -529,9 +536,9 @@ def ivfpq_topk(
         slot = np.full((nq, len(C)), -1)
         slot[np.arange(nq)[:, None], P] = np.arange(n_probe)
 
-        def score(pdf):
-            codes = np.frombuffer(b"".join(pdf["codes"]), dtype=np.uint8).reshape(-1, m)
-            S = slot[:, pdf["centroid_id"].to_numpy()].T  # (rows, Q)
+        def score(batch):
+            codes = _code_matrix(batch.column("codes"), m)
+            S = slot[:, batch.column("centroid_id").to_numpy()].T  # (rows, Q)
             rows, qs = np.nonzero(S >= 0)
             dv = np.zeros(len(rows))
             for s in range(m):
@@ -829,7 +836,9 @@ def hard_negatives(
         # undefined distances are excluded like same-label pairs
         pairs = _knn_kernel(
             queries, base, k, metric, query_id, vec_col, base_id, vec_col,
-            exclude=lambda D, blab, qlab: np.isnan(D) | (blab.to_numpy()[:, None] == qlab[None, :]),
+            exclude=lambda D, blab, qlab: (
+                np.isnan(D) | (blab.to_numpy(zero_copy_only=False)[:, None] == qlab[None, :])
+            ),
             query_key=label_col, base_key=label_col,
         )
     return _as_pairs(pairs)

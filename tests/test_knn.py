@@ -3,6 +3,7 @@ self-KNN recall@1 == 1.0, distances non-decreasing, indices in bounds,
 numpy differential, block-partitioned equivalence, hybrid filtered truth."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -251,6 +252,91 @@ def test_kth_distance_ties_break_by_ordinal(spark):
     preds = [(0, '{"fieldName":"z","op":"EQ","values":[0]}')]
     hybrid = hybrid_ground_truth(q, base, meta, preds, k=5, metric="euclidean").collect()
     assert list(hybrid[0]["indices"]) == list(expr)
+
+
+def test_bad_vectors_raise_one_error(spark):
+    """Both sides of the scan and the gemm centroid assignment decode
+    vectors through ``_matrix``: a null or a ragged vector raises its one
+    ``ValueError``, on the query side (driver) and on the base side (in the
+    scan task) alike. A null component is not an error: it reads as NaN,
+    so the row ranks last and its distance is NULL, on either side."""
+    from nbdatatools_spark.operators.clustering import centroid_assign
+
+    schema = "ordinal BIGINT, vector ARRAY<FLOAT>"
+    good = [(i, [float(i), 1.0, 0.5]) for i in range(6)]
+    bad = {"null": None, "ragged": [1.0, 2.0]}
+    message = "vectors must be non-null and of one dimension"
+    for vec in bad.values():
+        side = spark.createDataFrame(good[:3] + [(3, vec)], schema)
+        full = spark.createDataFrame(good, schema)
+        for q, b in ((side, full), (full, side)):
+            with pytest.raises(Exception, match=message):
+                exact_knn(q, b, 3)
+        with pytest.raises(Exception, match=message):
+            centroid_assign(side, [[1.0, 1.0, 1.0]], vec_col="vector", impl="gemm").collect()
+
+    holed = [(i, [float(i), None, 0.5] if i == 2 else v) for i, v in good]
+    base = spark.createDataFrame(holed, schema)
+    rows = {r["ordinal"]: r for r in exact_knn(base, base, 6).collect()}
+    for qid, r in rows.items():
+        if qid == 2:  # the query with the null component: every distance NULL
+            assert list(r["indices"]) == list(range(6))
+            assert list(r["distances"]) == [None] * 6
+        else:  # the base row with the null component ranks last
+            assert r["indices"][-1] == 2 and r["distances"][-1] is None
+            assert None not in r["distances"][:-1]
+
+
+def test_scan_merges_many_batches_per_task(spark):
+    """Each scan task merges the top-k of several Arrow batches. With
+    7-row batches and ties everywhere (duplicated small-integer vectors,
+    exact in float64), ``exact_knn`` and ``hybrid_ground_truth`` pass the
+    perfbench oracle's answer-key check, and ties, the k-th included, go
+    to the lower ordinal."""
+    from perfbench import oracles
+
+    rng = np.random.default_rng(11)
+    mat = rng.integers(-2, 3, size=(90, 6)).astype(np.float32)
+    mat[~mat.any(1), 0] = 1  # no zero vectors
+    mat = np.vstack([mat, mat[::-1]])  # every vector twice, far apart
+    qmat = np.vstack([mat[:8], rng.integers(-2, 3, size=(4, 6))]).astype(np.float32)
+    qmat[~qmat.any(1), 0] = 1
+    schema = "ordinal BIGINT, vector ARRAY<FLOAT>"
+    base = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(mat)], schema)
+    q = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(qmat)], schema)
+    meta = base.select("ordinal", (F.col("ordinal") % 3).alias("m3"))
+    preds = [(i, '{"fieldName":"m3","op":"EQ","values":[%d]}' % (i % 3)) for i in range(len(qmat))]
+    allowed = (np.arange(len(mat))[None, :] % 3) == (np.arange(len(qmat))[:, None] % 3)
+    k = 10
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        tasks = spark.sparkContext.defaultParallelism
+        sizes = [
+            r["n"] for r in base.coalesce(tasks).mapInArrow(
+                lambda batches: (pa.record_batch([pa.array([b.num_rows])], ["n"]) for b in batches),
+                "n BIGINT",
+            ).collect()
+        ]
+        assert max(sizes) == 7 and len(sizes) > tasks  # a task sees several batches
+        got = {
+            "exact": exact_knn(q, base, k).collect(),
+            "hybrid": hybrid_ground_truth(q, base, meta, preds, k=k).collect(),
+        }
+    finally:
+        spark.conf.set(key, old)
+    dist = oracles.cosine_distances(mat, qmat)
+    for name, mask in (("exact", None), ("hybrid", allowed)):
+        _, kth = oracles.answer_key(mat, qmat, k, mask)
+        expected = {i: (qmat[i], kth[i], None if mask is None else mask[i]) for i in range(len(qmat))}
+        rows = [(r["ordinal"], r["indices"], r["distances"]) for r in got[name]]
+        assert oracles.check_answer_key(rows, expected, mat, k) == [], name
+        ranked = dist if mask is None else np.where(mask, dist, np.inf)
+        for qi, idx, _ in rows:
+            order = np.lexsort((np.arange(len(mat)), ranked[qi]))[:k]
+            assert list(idx) == order.tolist(), (name, qi)
 
 
 def test_knn_label_accuracy_closed_form(spark):

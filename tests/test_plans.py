@@ -89,7 +89,7 @@ def test_knn_uses_broadcast_not_shuffle(spark, embeddings, collected):
 
 def test_knn_default_has_no_full_pair_shuffle(spark, embeddings, collected):
     """VERDICT r1 #3: the DEFAULT exact_knn plan must do per-partition
-    partial top-k (GEMM mapInPandas) — never the Q*B cross product. The
+    partial top-k (GEMM mapInArrow) — never the Q*B cross product. The
     candidate scan's executed plan has the kernel and no shuffle at all:
     each task's Q*k rows are ranked on the driver, and the result is a
     local relation. The PQ scan runs the same query-block scan."""
@@ -110,7 +110,7 @@ def test_knn_default_has_no_full_pair_shuffle(spark, embeddings, collected):
     ]
     for result in results:
         assert "LocalTableScan" in _plan(result)
-    scans = [plan for plan in collected if "MapInPandas" in plan]
+    scans = [plan for plan in collected if "MapInArrow" in plan]
     assert len(scans) == len(results)  # one candidate scan per top-k
     for plan in scans:
         assert "BroadcastNestedLoopJoin" not in plan
