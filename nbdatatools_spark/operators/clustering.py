@@ -8,8 +8,7 @@ is exact value dedup, ``README.md:97-99`` cleanfvec — see operators/dedup.py):
   as a literal array of (distance, centroid_id) structs and the per-row
   argmin is one ``array_min`` projection — NO shuffle, NO crossJoin
   (VERDICT r1 #4). The IVF paths (similarity.ivf_topk, ivf_build_index,
-  ivf_append_index) assign base cells with it, and their query probe
-  sorts the same ``_centroid_struct_array``.
+  ivf_append_index) assign base cells with it.
 - ``kmeans_centroids``: MLlib KMeans (DataFrame API) on an optionally
   sampled input, returning plain ``list[list[float]]`` centroids — also
   the IVF coarse quantizer's trainer.

@@ -188,7 +188,7 @@ def _merge_topk(candidates: DataFrame, k: int) -> DataFrame:
     NULLs and NaN last, base id asc) and keep ranks 1..k as ``rank``.
     Undefined distances must go last: plain asc ranks NULLs first and would
     fill every top-k with zero vectors. The Spark twin of ``_rank_rows``,
-    for candidates that JVM joins produce (the expr and ANN paths)."""
+    for candidates that JVM joins produce (the expr path, LSH, re-rank)."""
     w = Window.partitionBy("__qid").orderBy(
         F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
     )

@@ -10,21 +10,23 @@
 - ``ivf_topk``: IVF-style partition search — clustering.kmeans_centroids
   (MLlib, trained on a sample), each base vector assigned to its nearest
   centroid once by clustering.centroid_assign (precomputable /
-  materializable, see ``ivf_build_index``), queries probe the ``nprobe``
-  nearest centroids (``_ivf_probe``). At 100TB the assignment table is
-  bucketed by centroid id so each query touches ~nprobe/k_centroids of the
-  data.
-- The approximate searches share operators.knn's tail: each produces
-  ``(__qid, __bid, __dist)`` candidates and returns
-  ``_as_pairs(_merge_topk(candidates, k))`` — ranks by (distance asc, NULLs
-  last, base id), undefined (NaN) distances NULL, as for the exact paths.
-  ``bq_topk`` keeps its own window: its rows carry a ``hamming`` column.
+  materializable, see ``ivf_build_index``), then ``_ivf_scan``, shared
+  with IVFADC: operators.knn's query-block scan over each query's
+  ``nprobe`` nearest cells (``_probes``); each query scores only the rows
+  of its own cells. At 100TB the assignment table is bucketed (or
+  partitioned) by centroid id, so a query block reads only its probed cells.
+- LSH keeps operators.knn's Spark tail: bucket-join ``(__qid, __bid,
+  __dist)`` candidates, returned as ``_as_pairs(_merge_topk(candidates,
+  k))`` — ranks by (distance asc, NULLs last, base id), undefined (NaN)
+  distances NULL, as for the scans. ``bq_topk`` keeps its own window: its
+  rows carry a ``hamming`` column.
 - PQ/OPQ/IVFADC train on the driver with one seeded Lloyd loop
   (``_lloyd``) and encode with one nearest-codeword pass (``_pq_codes``).
 """
 
 from __future__ import annotations
 
+import os
 import random
 
 import numpy as np
@@ -32,14 +34,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.functions.distance import _matrix, distance_expr
-from nbdatatools_spark.operators.clustering import (
-    _centroid_struct_array,
-    centroid_assign,
-    kmeans_centroids,
-)
+from nbdatatools_spark.functions.distance import _matrix, distance_expr, distance_matrix
+from nbdatatools_spark.operators.clustering import centroid_assign, kmeans_centroids
 from nbdatatools_spark.operators.knn import (
     _as_pairs,
+    _group_starts,
     _knn_kernel,
     _local,
     _merge_topk,
@@ -135,36 +134,82 @@ def _cosine_candidates(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_probe(queries: DataFrame, centroids, nprobe: int, query_id: str, vec_col: str):
-    """``(__qid, __qvec, centroid_id)``: each query's ``nprobe`` nearest
-    cells — the first ``nprobe`` ids of its (euclidean distance, id)-sorted
-    ``_centroid_struct_array``, exploded (queries are the small side)."""
-    return queries.select(
-        F.col(query_id).alias("__qid"),
-        F.col(vec_col).alias("__qvec"),
-        F.explode_outer(
-            F.transform(
-                F.slice(
-                    F.array_sort(_centroid_struct_array(F.col(vec_col), centroids, "euclidean")),
-                    1,
-                    nprobe,
-                ),
-                lambda s: s["centroid_id"],
-            )
-        ).alias("centroid_id"),
-        # explode_outer: inner explode's inferred size()>0 filter would
-        # inline the whole centroid-distance array build into an
-        # interpreted per-row scan filter (the winnow trap); the array is
-        # never empty (nprobe >= 1), so semantics are unchanged.
-    )
+def _probes(Q: np.ndarray, C: np.ndarray, nprobe: int) -> np.ndarray:
+    """The one IVF probe: each query's ``nprobe`` nearest centroid ids by
+    squared euclidean distance, stably sorted — (distance, id) order, NaN
+    last, so tied centroids (``_lloyd``'s padding) go lowest id first.
+    Queries go through in chunks, so the (queries x centroids x dim)
+    difference stays ~16 MB whatever the block size."""
+    P = np.empty((len(Q), min(nprobe, len(C))), dtype=np.int64)
+    step = max(1, int(2e6 // max(C.size, 1)))
+    for s in range(0, len(Q), step):
+        qc = ((Q[s : s + step, None, :] - C[None, :, :]) ** 2).sum(-1)
+        P[s : s + step] = np.argsort(qc, axis=1, kind="stable")[:, :nprobe]
+    return P
 
 
-def _ivf_rank(cells: DataFrame, probe: DataFrame, k: int) -> DataFrame:
-    """Top-k pairs of the base rows ``(__bid, __bvec, centroid_id)`` in each
-    query's probed cells, ranked by exact cosine distance. The probe side is
-    tiny -> broadcast; the only large shuffle keys on the query id."""
-    cands = _cosine_candidates(cells.join(F.broadcast(probe), "centroid_id"))
-    return _as_pairs(_merge_topk(cands, k))
+def _ivf_scan(
+    queries, cells, centroids, nprobe, k, query_id, vec_col, base_id, cols, make_score, seen=None
+):
+    """The one IVF search, on operators.knn's query-block scan: per query
+    block the driver picks ``P = _probes(Q, C, nprobe)`` (appended to
+    ``seen`` if given) and prunes ``cells`` to ``centroid_id IN (probed)``.
+    Each task builds ``score = make_score(Q, C, P)`` once and scores each
+    Arrow batch of ``(base_id, centroid_id, *cols)`` rows cell by cell:
+    ``score(batch)(rows, qs, slots)`` is the distance block of one cell's
+    rows against the queries ``qs`` that probe it (in probe slots
+    ``slots``); every other pair is excluded. ``nprobe < 1`` raises."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    C = np.asarray(centroids, dtype=np.float64)
+
+    def probed(payload):
+        Q, C, P = payload
+        score = make_score(Q, C, P)
+        pairs = np.argsort(P, axis=None, kind="stable")  # q * nprobe + slot, by cell
+        probers = np.split(pairs, np.searchsorted(P.ravel()[pairs], np.arange(1, len(C))))
+
+        def by_cell(batch):
+            cid = batch.column("centroid_id").to_numpy()
+            cell = score(batch)
+            D = np.zeros((len(cid), len(Q)))
+            excluded = np.ones(D.shape, dtype=bool)
+            order = np.argsort(cid, kind="stable")
+            for rows in np.split(order, _group_starts(cid[order])[1:]):
+                qs, slots = np.divmod(probers[cid[rows[0]]], P.shape[1])
+                D[np.ix_(rows, qs)] = cell(rows, qs, slots)
+                excluded[np.ix_(rows, qs)] = False
+            return D, excluded
+
+        return by_cell
+
+    def run(qids, Q, _):
+        P = _probes(Q, C, nprobe)
+        if seen is not None:
+            seen.append(P)
+        return _scan_topk(
+            cells.where(F.col("centroid_id").isin(np.unique(P).tolist())),
+            base_id, ["centroid_id", *cols], k, qids, (Q, C, P), probed,
+        )
+
+    return _query_blocks(queries, query_id, [vec_col], k, run)
+
+
+def _ivf_flat(queries, cells, centroids, nprobe, k, query_id, base_id, vec_col, seen=None):
+    """IVF-flat pairs: ``_ivf_scan`` of ``(base_id, vec_col, centroid_id)``
+    cells, each cell's rows scored by cosine ``distance_matrix`` against
+    the queries that probe it."""
+
+    def cosine(Q, C, P):
+        def score(batch):
+            B = _matrix(batch.column(vec_col), Q.shape[1])
+            return lambda rows, qs, slots: distance_matrix(B[rows], Q[qs], "cosine")
+
+        return score
+
+    return _as_pairs(_ivf_scan(
+        queries, cells, centroids, nprobe, k, query_id, vec_col, base_id, [vec_col], cosine, seen
+    ))
 
 
 def ivf_topk(
@@ -184,23 +229,22 @@ def ivf_topk(
     Train centroids on a (deterministic) sample with
     ``clustering.kmeans_centroids``, assign base vectors to the nearest
     centroid with the shuffle-free ``clustering.centroid_assign`` (one
-    literal-array argmin projection, VERDICT r1 #4), probe the nprobe
-    nearest centroids per query. The centroid table is tiny -> inlined on
-    both sides; the only large shuffle keys on the query id.
+    literal-array argmin projection, VERDICT r1 #4), then ``_ivf_scan``
+    the ``nprobe`` nearest cells per query by cosine distance (float64
+    GEMM of each cell's rows against the queries probing it, within ~1e-15
+    of ``distance_expr``; a null or ragged vector raises ``_matrix``'s
+    ``ValueError``, as does ``nprobe < 1``). No join, window or shuffle; the
+    scan runs when called and returns a local relation, like exact_knn.
     """
-    centroids, cells = _ivf_cells(base, n_centroids, seed, base_id, vec_col, sample_fraction)
-    return _ivf_rank(cells, _ivf_probe(queries, centroids, nprobe, query_id, vec_col), k)
+    centroids, cells = _ivf_cells(base, n_centroids, seed, vec_col, sample_fraction)
+    return _ivf_flat(queries, cells, centroids, nprobe, k, query_id, base_id, vec_col)
 
 
-def _ivf_cells(base, n_centroids, seed, base_id, vec_col, sample_fraction=1.0):
+def _ivf_cells(base, n_centroids, seed, vec_col, sample_fraction=1.0):
     """The IVF coarse quantizer: ``kmeans_centroids`` on a sample, then the
-    base rows ``(__bid, __bvec, centroid_id)`` of each cell."""
+    base with each row's ``centroid_id``."""
     centroids = kmeans_centroids(base, n_centroids, vec_col, seed, 20, sample_fraction)
-    cells = centroid_assign(
-        base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec")),
-        centroids, "euclidean", "__bvec", impl="expr",
-    )
-    return centroids, cells
+    return centroids, centroid_assign(base, centroids, "euclidean", vec_col, impl="expr")
 
 
 # --- Product quantization (PQ/ADC) -----------------------------------------
@@ -514,52 +558,34 @@ def ivfpq_topk(
     per-batch partial top-k, tiny merge. Optional exact re-rank as in
     :func:`pq_topk`.
 
-    The query-block scan of :func:`pq_topk`: each query block picks its
-    probes on the driver and prunes the scan to the probed cells; each
-    task builds the residual LUTs and a (Q x n_centroids) probe-slot table
-    once. The probe mask costs one (rows x Q) boolean per batch. Combined
-    with centroid_id bucketing (or partition pruning on a
+    The IVF scan of :func:`ivf_topk` (``_ivf_scan``; probe ties go to the
+    lowest centroid id) with an ADC scorer: each task builds the residual
+    LUTs once and reads each row's LUT from its cell's probe slot.
+    Combined with centroid_id bucketing (or partition pruning on a
     centroid_id-partitioned table) the scan itself skips unprobed data at
     100TB.
     """
     centroids, books = index
     shortlist_k = k * rerank_factor if rerank_base is not None else k
 
-    def ivfadc(payload):
-        Q, C, B, P = payload
-        m, n_codes, dsub = B.shape
+    def ivfadc(Q, C, P):
+        m, n_codes, dsub = books.shape
         nq, n_probe = P.shape
-        # per (query, probe slot) residual LUT: (Q, nprobe, m, n_codes);
-        # slot[q, cell] is the cell's probe slot, -1 where q does not probe it
+        # per (query, probe slot) residual LUT: (Q, nprobe, m, n_codes)
         R = (Q[:, None, :] - C[P]).reshape(nq, n_probe, m, 1, dsub)
-        luts = np.stack([((r - B) ** 2).sum(-1) for r in R])  # per query: bounded temporaries
-        slot = np.full((nq, len(C)), -1)
-        slot[np.arange(nq)[:, None], P] = np.arange(n_probe)
+        luts = np.stack([((r - books) ** 2).sum(-1) for r in R])  # per query: bounded temporaries
 
         def score(batch):
             codes = _code_matrix(batch.column("codes"), m)
-            S = slot[:, batch.column("centroid_id").to_numpy()].T  # (rows, Q)
-            rows, qs = np.nonzero(S >= 0)
-            dv = np.zeros(len(rows))
-            for s in range(m):
-                dv += luts[qs, S[rows, qs], s, codes[rows, s]]
-            D = np.zeros(S.shape)
-            D[rows, qs] = dv
-            return D, S < 0
+            return lambda rows, qs, slots: sum(
+                luts[qs, slots, s][:, codes[rows, s]].T for s in range(m)
+            )
 
         return score
 
-    def run(qids, Q, _):
-        qc = ((Q[:, None, :] - centroids[None, :, :]) ** 2).sum(-1)  # (Q, C)
-        probes = np.argsort(qc, axis=1)[:, :nprobe]  # (Q, nprobe)
-        # prune unprobed cells at the scan (partition/bucket pruning at scale)
-        return _scan_topk(
-            encoded.where(F.col("centroid_id").isin(np.unique(probes).tolist())),
-            "id", ["centroid_id", "codes"], shortlist_k, qids,
-            (Q, centroids, books, probes), ivfadc,
-        )
-
-    out = _query_blocks(queries, query_id, [vec_col], shortlist_k, run)
+    out = _ivf_scan(
+        queries, encoded, centroids, nprobe, shortlist_k, query_id, vec_col, "id", ["codes"], ivfadc
+    )
     if rerank_base is None:
         return _as_pairs(out, F.sqrt("__dist"))
     return _rerank(out, queries, rerank_base, k, "euclidean", query_id, base_id, vec_col)
@@ -861,23 +887,18 @@ def ivf_build_index(
     - ``centroids.parquet`` (centroid_id INT, centroid ARRAY<DOUBLE>) — tiny;
       ids are 0..n_centroids-1
     - ``assignments.parquet`` — the base table + ``centroid_id``, written
-      PARTITIONED BY centroid_id, so a probe of c cells reads exactly c
-      directories (partition pruning = the inverted-list seek)
+      PARTITIONED BY centroid_id, so a query block probing c cells reads
+      exactly c directories (partition pruning = the inverted-list seek)
 
     Returns ``{"n_centroids", "n_vectors"}``. Training and assignment are
-    ivf_topk's: ``clustering.kmeans_centroids`` with the same seed,
-    iterations and sample, then the shuffle-free
-    ``clustering.centroid_assign``.
+    ivf_topk's (``_ivf_cells``).
     """
-    import os
-
-    centroids = kmeans_centroids(base, n_centroids, vec_col, seed, 20, sample_fraction)
+    centroids, assigned = _ivf_cells(base, n_centroids, seed, vec_col, sample_fraction)
     spark = base.sparkSession
     spark.createDataFrame(
         list(enumerate(centroids)),
         "centroid_id INT, centroid ARRAY<DOUBLE>",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "centroids.parquet"))
-    assigned = centroid_assign(base, centroids, "euclidean", vec_col, impl="expr")
     assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
         os.path.join(index_dir, "assignments.parquet")
     )
@@ -889,8 +910,6 @@ def _read_centroids(spark, index_dir: str) -> list[list[float]]:
     """The index's centroids in id order. Probe and assignment label cells
     by list position, so ids other than 0..n-1 raise instead of
     mislabelling cells."""
-    import os
-
     rows = spark.read.parquet(os.path.join(index_dir, "centroids.parquet")).orderBy(
         "centroid_id"
     ).collect()
@@ -930,8 +949,6 @@ def ivf_append_index(
     of the APPENDED batch concentrates in few cells, the distribution has
     moved and ivf_build_index should be re-run.
     """
-    import os
-
     spark = new_vectors.sparkSession
     centroids = _read_centroids(spark, index_dir)
 
@@ -971,21 +988,15 @@ def ivf_search_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe a materialized IVF index (ivf_build_index layout): load the
-    tiny centroid table, compute each query's nprobe nearest cells, and
-    scan ONLY those cells — ``centroid_id IN (...)`` prunes partitions of
-    the assignments table, so the scan touches c directories out of
-    n_centroids (visible as PartitionFilters in the plan). Probe and
-    ranking are ivf_topk's ``_ivf_probe`` and ``_ivf_rank``, so the same
-    centroids give the same pairs."""
-    import os
-
-    qprobe = _ivf_probe(queries, _read_centroids(spark, index_dir), nprobe, query_id, vec_col)
-    # bounded driver list of probed cells -> partition-pruning IN filter
-    probed = sorted({r.centroid_id for r in qprobe.select("centroid_id").distinct().collect()})
-    cells = spark.read.parquet(os.path.join(index_dir, "assignments.parquet")).where(
-        F.col("centroid_id").isin(probed)
-    ).select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"), "centroid_id")
-    return _ivf_rank(cells, qprobe, k)
+    tiny centroid table and run ivf_topk's ``_ivf_scan`` over the
+    assignments table — each query block's ``centroid_id IN (probed)``
+    filter prunes partitions, so the scan touches c directories out of
+    n_centroids (visible as PartitionFilters in the scan plan). Probe and
+    ranking are ivf_topk's, so the same centroids give the same pairs; the
+    pairs come back as a local relation."""
+    centroids = _read_centroids(spark, index_dir)
+    cells = spark.read.parquet(os.path.join(index_dir, "assignments.parquet"))
+    return _ivf_flat(queries, cells, centroids, nprobe, k, query_id, base_id, vec_col)
 
 
 def _neighbor_sets(pairs: DataFrame) -> DataFrame:
@@ -1014,10 +1025,10 @@ def ann_tuning_report(
 
     Returns one row per probed setting: ``(nprobe, n_queries, recall,
     mean_candidates)`` — recall = mean per-query |IVF∩exact| / k;
-    mean_candidates = average scanned-cell candidate count, i.e. the rows
-    of the probed-cell join per query (the cost dial the recall buys).
-    The quantizer is fitted and the base assigned once (the same centroids
-    ``ivf_topk`` would fit); each nprobe only re-probes and re-ranks. All
+    mean_candidates = base rows scanned per query (the cost dial the recall
+    buys): per-cell row counts summed over each query's ``_probes``. The
+    quantizer is fitted and the base assigned once (the same centroids
+    ``ivf_topk`` would fit); each nprobe only re-runs the IVF scan. All
     comparisons run on id sets, never distances, so kernel float noise
     can't blur the readout.
     """
@@ -1030,15 +1041,19 @@ def ann_tuning_report(
     )
 
     spark = base.sparkSession
-    centroids, cells = _ivf_cells(base, n_centroids, seed, base_id, vec_col)
-    cells = cells.persist()
+    centroids, cells = _ivf_cells(base, n_centroids, seed, vec_col)
+    cells = cells.select(base_id, vec_col, "centroid_id").persist()
     out = []
     try:
+        sizes = dict(cells.groupBy("centroid_id").count().collect())
         for nprobe in nprobes:
-            probe = _ivf_probe(queries, centroids, int(nprobe), query_id, vec_col)
-            scanned = cells.join(F.broadcast(probe), "centroid_id").count()
+            seen = []
+            found = _ivf_flat(
+                queries, cells, centroids, int(nprobe), k, query_id, base_id, vec_col, seen
+            )
+            scanned = sum(sizes.get(c, 0) for P in seen for c in P.ravel().tolist())
             row = (
-                knn_recall(truth, _neighbor_sets(_ivf_rank(cells, probe, k)), k)
+                knn_recall(truth, _neighbor_sets(found), k)
                 .select(
                     "n_queries",
                     F.round("mean_recall", 6).alias("recall"),

@@ -17,6 +17,23 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def collected(spark, monkeypatch):
+    """Executed plans (taken before they run) of the frames collected
+    through ``toArrow``: the scans an eager operator runs before it returns
+    a local relation."""
+    frame = type(spark.range(1))
+    plans = []
+    to_arrow = frame.toArrow
+
+    def recording(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(df)
+
+    monkeypatch.setattr(frame, "toArrow", recording)
+    return plans
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

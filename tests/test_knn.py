@@ -255,12 +255,14 @@ def test_kth_distance_ties_break_by_ordinal(spark):
 
 
 def test_bad_vectors_raise_one_error(spark):
-    """Both sides of the scan and the gemm centroid assignment decode
-    vectors through ``_matrix``: a null or a ragged vector raises its one
-    ``ValueError``, on the query side (driver) and on the base side (in the
-    scan task) alike. A null component is not an error: it reads as NaN,
-    so the row ranks last and its distance is NULL, on either side."""
+    """Both sides of the scan (exact and IVF) and the gemm centroid
+    assignment decode vectors through ``_matrix``: a null or a ragged vector
+    raises its one ``ValueError``, on the query side (driver) and on the
+    base side (in the scan task) alike. A null component is not an error:
+    it reads as NaN, so the row ranks last and its distance is NULL, on
+    either side."""
     from nbdatatools_spark.operators.clustering import centroid_assign
+    from nbdatatools_spark.operators.similarity import ivf_topk
 
     schema = "ordinal BIGINT, vector ARRAY<FLOAT>"
     good = [(i, [float(i), 1.0, 0.5]) for i in range(6)]
@@ -274,6 +276,10 @@ def test_bad_vectors_raise_one_error(spark):
                 exact_knn(q, b, 3)
         with pytest.raises(Exception, match=message):
             centroid_assign(side, [[1.0, 1.0, 1.0]], vec_col="vector", impl="gemm").collect()
+    null_query = spark.createDataFrame(good[:3] + [(3, None)], schema)
+    with pytest.raises(Exception, match=message):
+        ivf_topk(null_query, spark.createDataFrame(good, schema), 3, n_centroids=2, nprobe=1,
+                 query_id="ordinal", base_id="ordinal", vec_col="vector")
 
     holed = [(i, [float(i), None, 0.5] if i == 2 else v) for i, v in good]
     base = spark.createDataFrame(holed, schema)
