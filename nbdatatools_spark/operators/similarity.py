@@ -12,7 +12,7 @@
   centroid once by clustering.centroid_assign (precomputable /
   materializable, see ``ivf_build_index``), then ``_ivf_scan``, shared
   with IVFADC: operators.knn's query-block scan over each query's
-  ``nprobe`` nearest cells (``_probes``); each query scores only the rows
+  ``nprobe`` nearest cells (``_nearest``); each query scores only the rows
   of its own cells. At 100TB the assignment table is bucketed (or
   partitioned) by centroid id, so a query block reads only its probed cells.
 - LSH keeps operators.knn's Spark tail: bucket-join ``(__qid, __bid,
@@ -21,7 +21,9 @@
   distances NULL, as for the scans. ``bq_topk`` keeps its own window: its
   rows carry a ``hamming`` column.
 - PQ/OPQ/IVFADC train on the driver with one seeded Lloyd loop
-  (``_lloyd``) and encode with one nearest-codeword pass (``_pq_codes``).
+  (``_lloyd``), encode with one nearest-codeword pass (``_pq_codes``) and
+  score from per-subspace ADC tables (``_luts``); all of them, and the IVF
+  probe, take codeword distances from one row-chunked ``_block``.
 """
 
 from __future__ import annotations
@@ -134,25 +136,34 @@ def _cosine_candidates(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _probes(Q: np.ndarray, C: np.ndarray, nprobe: int) -> np.ndarray:
-    """The one IVF probe: each query's ``nprobe`` nearest centroid ids by
-    squared euclidean distance, stably sorted — (distance, id) order, NaN
-    last, so tied centroids (``_lloyd``'s padding) go lowest id first.
-    Queries go through in chunks, so the (queries x centroids x dim)
-    difference stays ~16 MB whatever the block size."""
-    P = np.empty((len(Q), min(nprobe, len(C))), dtype=np.int64)
+def _block(X, C, dot=False):
+    """The one (rows x codes x dim) temporary: the ``(rows, codes)`` squared
+    euclidean distances, or negated inner products when ``dot``. Rows go
+    through in chunks, so the temporary stays ~16 MB; each cell's sum is
+    the unchunked one, bit for bit."""
+    out = np.empty((len(X), len(C)), np.result_type(X, C))
     step = max(1, int(2e6 // max(C.size, 1)))
-    for s in range(0, len(Q), step):
-        qc = ((Q[s : s + step, None, :] - C[None, :, :]) ** 2).sum(-1)
-        P[s : s + step] = np.argsort(qc, axis=1, kind="stable")[:, :nprobe]
-    return P
+    for s in range(0, len(X), step):
+        x = X[s : s + step, None, :]
+        out[s : s + step] = -(x * C).sum(-1) if dot else ((x - C) ** 2).sum(-1)
+    return out
+
+
+def _nearest(X, C, n=1):
+    """Each row's ``n`` nearest rows of ``C`` by squared euclidean distance
+    (``_block``), as ``(rows, min(n, codes))`` ids in (distance, id) order:
+    ties (``_lloyd``'s padding) go to the lowest id, NaN distances last."""
+    D = _block(X, C)
+    if n == 1 and not np.isnan(D).any():
+        return D.argmin(1)[:, None]  # the stable sort's first id, without the sort
+    return np.argsort(D, axis=1, kind="stable")[:, :n]
 
 
 def _ivf_scan(
     queries, cells, centroids, nprobe, k, query_id, vec_col, base_id, cols, make_score, seen=None
 ):
     """The one IVF search, on operators.knn's query-block scan: per query
-    block the driver picks ``P = _probes(Q, C, nprobe)`` (appended to
+    block the driver picks ``P = _nearest(Q, C, nprobe)`` (appended to
     ``seen`` if given) and prunes ``cells`` to ``centroid_id IN (probed)``.
     Each task builds ``score = make_score(Q, C, P)`` once and scores each
     Arrow batch of ``(base_id, centroid_id, *cols)`` rows cell by cell:
@@ -184,7 +195,7 @@ def _ivf_scan(
         return by_cell
 
     def run(qids, Q, _):
-        P = _probes(Q, C, nprobe)
+        P = _nearest(Q, C, nprobe)
         if seen is not None:
             seen.append(P)
         return _scan_topk(
@@ -260,12 +271,6 @@ def _ivf_cells(base, n_centroids, seed, vec_col, sample_fraction=1.0):
 # difference between a scan that fits the page cache and one that doesn't.
 
 
-def _nearest(X, C):
-    """Row-wise index of the nearest row of ``C`` (squared euclidean; ties
-    -> lowest index)."""
-    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
-
-
 def _lloyd(Y, n_out: int, iters: int, rng):
     """The one Lloyd k-means: ``min(n_out, len(Y))`` seeds drawn from ``Y``
     by ``rng``, ``iters`` assign/mean rounds (an empty cluster keeps its
@@ -274,7 +279,7 @@ def _lloyd(Y, n_out: int, iters: int, rng):
     k = min(n_out, len(Y))
     cents = Y[rng.choice(len(Y), size=k, replace=False)].copy()
     for _ in range(iters):
-        assign = _nearest(Y, cents)
+        assign = _nearest(Y, cents)[:, 0]
         for c in range(k):
             mask = assign == c
             if mask.any():
@@ -288,18 +293,19 @@ def _lloyd(Y, n_out: int, iters: int, rng):
 def _pq_books(Y, m: int, n_codes: int, iters: int, rng):
     """(m, n_codes, d//m) codebooks: ``_lloyd`` on each subspace in turn,
     one ``rng`` stream across subspaces."""
-    dsub = Y.shape[1] // m
-    return np.stack(
-        [_lloyd(Y[:, s * dsub : (s + 1) * dsub], n_codes, iters, rng) for s in range(m)]
-    )
+    return np.stack([_lloyd(y, n_codes, iters, rng) for y in np.hsplit(Y, m)])
 
 
 def _pq_codes(X, books):
     """(n, m) uint8 codes: the nearest codeword per subspace."""
-    m, _, dsub = books.shape
-    return np.stack(
-        [_nearest(X[:, s * dsub : (s + 1) * dsub], books[s]) for s in range(m)], axis=1
-    ).astype(np.uint8)
+    codes = [_nearest(x, b) for x, b in zip(np.hsplit(X, len(books)), books)]
+    return np.hstack(codes).astype(np.uint8)
+
+
+def _luts(X, books, dot=False):
+    """ADC lookup tables, one subspace at a time: per subspace, the
+    ``(rows, n_codes)`` ``_block`` of ``X``'s slice against its codebook."""
+    return [_block(x, b, dot) for x, b in zip(np.hsplit(X, len(books)), books)]
 
 
 def _code_matrix(codes: pa.Array, m: int) -> np.ndarray:
@@ -333,6 +339,9 @@ def pq_train(
     """Train per-subspace codebooks with Lloyd k-means on a driver-side
     sample (codebooks are tiny: m * n_codes * d/m floats = one vector's
     worth per code). Deterministic: seeded init, fixed iterations.
+    NaN policy: a NaN distance ranks after every number, so a sample row
+    with a NaN component can make a NaN codeword, but a clean row never
+    trains or encodes to it.
 
     Returns a numpy array of shape (m, n_codes, d//m).
 
@@ -396,7 +405,7 @@ def _encode(base: DataFrame, base_id: str, vec_col: str, codebooks, rotation=Non
                 X = X @ rot
             out = {"id": batch.column(base_id).cast(pa.int64())}
             if C is not None:
-                cid = _nearest(X, C)
+                cid = _nearest(X, C)[:, 0]
                 out["centroid_id"] = pa.array(cid.astype(np.int32))
                 X = X - C[cid]
             codes = np.ascontiguousarray(_pq_codes(X, books))
@@ -450,21 +459,11 @@ def pq_topk(
 
     def adc(payload):
         Q, books = payload
-        m, n_codes, dsub = books.shape
-        # LUT[q, s, c] = subspace distance contribution
-        subq = Q.reshape(len(Q), m, dsub)
-        if metric_key in ("euclidean", "l2"):
-            # (Q, m, n_codes) squared distances per subspace
-            lut = ((subq[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1)
-        else:  # dot: negative inner product so smaller = closer
-            lut = -(subq[:, :, None, :] * books[None, :, :, :]).sum(-1)
+        luts = _luts(Q, books, metric_key in ("dot", "dot_product"))
 
         def score(batch):
-            codes = _code_matrix(batch.column("codes"), m)
-            D = np.zeros((len(codes), len(Q)))
-            for s in range(m):
-                D += lut[:, s, codes[:, s]].T
-            return D, None
+            codes = _code_matrix(batch.column("codes"), len(luts))
+            return sum(t[:, codes[:, s]].T for s, t in enumerate(luts)), None
 
         return score
 
@@ -537,7 +536,7 @@ def ivfpq_build(
     # one rng stream: coarse seeds first, then each subspace's
     rng = np.random.default_rng(seed)
     centroids = _lloyd(X, n_centroids, iters, rng)
-    books = _pq_books(X - centroids[_nearest(X, centroids)], m, n_codes, iters, rng)
+    books = _pq_books(X - centroids[_nearest(X, centroids)[:, 0]], m, n_codes, iters, rng)
     return _encode(base, base_id, vec_col, books, centroids=centroids), (centroids, books)
 
 
@@ -569,16 +568,14 @@ def ivfpq_topk(
     shortlist_k = k * rerank_factor if rerank_base is not None else k
 
     def ivfadc(Q, C, P):
-        m, n_codes, dsub = books.shape
-        nq, n_probe = P.shape
-        # per (query, probe slot) residual LUT: (Q, nprobe, m, n_codes)
-        R = (Q[:, None, :] - C[P]).reshape(nq, n_probe, m, 1, dsub)
-        luts = np.stack([((r - books) ** 2).sum(-1) for r in R])  # per query: bounded temporaries
+        # per subspace, the (query, probe slot) residual LUTs: (Q, nprobe, n_codes)
+        R = (Q[:, None, :] - C[P]).reshape(P.size, Q.shape[1])
+        luts = [t.reshape(*P.shape, books.shape[1]) for t in _luts(R, books)]
 
         def score(batch):
-            codes = _code_matrix(batch.column("codes"), m)
+            codes = _code_matrix(batch.column("codes"), len(luts))
             return lambda rows, qs, slots: sum(
-                luts[qs, slots, s][:, codes[rows, s]].T for s in range(m)
+                t[qs, slots][:, codes[rows, s]].T for s, t in enumerate(luts)
             )
 
         return score
@@ -1026,7 +1023,7 @@ def ann_tuning_report(
     Returns one row per probed setting: ``(nprobe, n_queries, recall,
     mean_candidates)`` — recall = mean per-query |IVF∩exact| / k;
     mean_candidates = base rows scanned per query (the cost dial the recall
-    buys): per-cell row counts summed over each query's ``_probes``. The
+    buys): per-cell row counts summed over each query's probed cells. The
     quantizer is fitted and the base assigned once (the same centroids
     ``ivf_topk`` would fit); each nprobe only re-runs the IVF scan. All
     comparisons run on id sets, never distances, so kernel float noise

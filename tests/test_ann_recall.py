@@ -118,29 +118,59 @@ def test_ivf_nprobe_monotone(clustered):
 
 
 def test_probes_bounded_and_stable():
-    """``_probes`` ranks centroids in (squared distance, id) order with NaN
-    last, the same ids as one unchunked stable argsort, while its
-    temporaries stay bounded: the unchunked (queries x centroids x dim)
-    difference for these 400 queries is ~105 MB."""
+    """The one codeword-distance block: ``_nearest`` (IVF probes, Lloyd and
+    PQ codes) ranks in (squared distance, id) order with NaN last, and
+    ``_nearest`` and ``pq_topk``'s euclidean and dot LUTs (``_luts``) equal
+    the unchunked broadcast bit for bit, while their temporaries stay under
+    48 MB. Unchunked, the 400 queries x 256 centroids of dim 128 take
+    ~105 MB, 2,000 rows x 256 codes of dsub 32 ~129 MiB and 400 queries'
+    LUTs at m=8 ~206 MiB."""
     import tracemalloc
 
-    from nbdatatools_spark.operators.similarity import _probes
+    from nbdatatools_spark.operators.similarity import _luts, _nearest
+
+    def bounded(fn, *args):
+        tracemalloc.start()
+        out = fn(*args)
+        peak = tracemalloc.get_traced_memory()[1]
+        tracemalloc.stop()
+        assert peak < 48e6, (fn.__name__, args[1:], peak)
+        return out
+
+    def ranked(X, C, n):
+        full = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+        return np.argsort(full, axis=1, kind="stable")[:, :n]
 
     rng = np.random.default_rng(5)
     Q = rng.standard_normal((400, 128))
     C = rng.standard_normal((256, 128))
     C[200:] = C[0]  # exact ties with centroid 0, as _lloyd's padding makes
     Q[7, 3] = np.nan
-    tracemalloc.start()
-    P = _probes(Q, C, 60)
-    peak = tracemalloc.get_traced_memory()[1]
-    tracemalloc.stop()
-    assert peak < 48e6, peak
-    head = Q[:150]
-    full = ((head[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-    np.testing.assert_array_equal(P[:150], np.argsort(full, axis=1, kind="stable")[:, :60])
+    P = bounded(_nearest, Q, C, 60)
+    np.testing.assert_array_equal(P[:150], ranked(Q[:150], C, 60))
     assert P[7].tolist() == list(range(60))  # all NaN: id order
-    assert _probes(Q[:0], C, 4).shape == (0, 4)
+    assert _nearest(Q[:0], C, 4).shape == (0, 4)
+
+    # codes: rows go through 244 at a time, so the first 600 span 3 chunks
+    X = rng.standard_normal((2000, 32))
+    books = rng.standard_normal((8, 256, 32))
+    books[0, 40:] = books[0, 3]  # ties go to the lowest id
+    codes = bounded(_nearest, X, books[0])
+    np.testing.assert_array_equal(codes[:600], ranked(X[:600], books[0], 1))
+    books[1, 9, 0] = np.nan  # a NaN codeword ranks last for every row
+    codes = bounded(_nearest, X, books[1])
+    np.testing.assert_array_equal(codes[:600], ranked(X[:600], books[1], 1))
+    assert 9 not in codes
+
+    # LUTs, against the parent's (queries, m, n_codes) broadcast over rows
+    # 230-259, which straddle the first chunk boundary
+    Q = rng.standard_normal((400, 256))
+    books = rng.standard_normal((8, 256, 32))
+    sub = Q[230:260].reshape(30, 8, 1, 32)
+    l2 = np.stack(bounded(_luts, Q, books), axis=1)
+    dot = np.stack(bounded(_luts, Q, books, True), axis=1)
+    np.testing.assert_array_equal(l2[230:260], ((sub - books) ** 2).sum(-1))
+    np.testing.assert_array_equal(dot[230:260], -(sub * books).sum(-1))
 
 
 def test_ivf_index_persist_and_search(spark, embeddings, tmp_path, collected):

@@ -227,6 +227,26 @@ def test_pq_scans_empty_query_side(clustered):
     assert ivfpq_topk(none, ivf_enc, index, k=5).count() == 0
 
 
+def test_pq_nan_codeword_never_wins(spark):
+    """NaN policy: a NaN distance ranks after every number. One NaN
+    component in the sample trains a NaN codeword, but no clean row encodes
+    to it; with ``argmin``'s first-NaN rule every clean row collapsed onto
+    that one code."""
+    X = np.random.default_rng(11).standard_normal((400, 16))
+    X[17, 3] = np.nan
+    base = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(X)], "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    )
+    books = pq_train(base, m=2, n_codes=16, seed=5)
+    nan_codes = np.isnan(books).any(-1)  # (m, n_codes)
+    assert nan_codes[0].any()
+    codes = np.array([list(r.codes) for r in pq_encode(base, books).orderBy("id").collect()])
+    clean = np.delete(codes, 17, axis=0)
+    for s in range(2):
+        assert not nan_codes[s, clean[:, s]].any(), s
+        assert len(np.unique(clean[:, s])) == 16 - nan_codes[s].sum(), s
+
+
 # --- SQ8 scalar quantization ------------------------------------------------
 
 def test_sq8_roundtrip_error_bound(spark, embeddings):
