@@ -3,8 +3,9 @@
 Local testing runs ``local[N]``; the configuration is chosen so the same plans
 scale to a multi-executor cluster: AQE on (runtime re-planning, skew-join
 splitting, partition coalescing), modest shuffle partition default (overridable
-per-job), Arrow enabled for the few pandas-UDF paths (xvec ingest, multimodal
-stubs).
+per-job), Arrow enabled for pandas conversions and the pandas-UDF paths (media
+codecs, streaming state). xvec IO and the vector kernels are Arrow-native
+(``mapInArrow``, ``createDataFrame`` of an Arrow table) and need no conf.
 
 Work the driver plans itself (xvec byte ranges, datagen ordinal ranges,
 integrity chunks) is launched one way, ``_planned_scan``: a ``spark.range``

@@ -137,14 +137,17 @@ def test_ivf_assignment_has_no_shuffle(spark, embeddings, collected):
         assert banned not in scans[0]
 
 
-def test_driver_planned_scans_have_no_shuffle(spark, tmp_path):
+def test_driver_planned_scans_have_no_shuffle(spark, tmp_path, monkeypatch):
     """read_xvec, generate_vectors and chunk_digests run their driver-planned
     tasks over spark.range task ids: no planning Exchange and no scan of a
-    pickled Python RDD of plan rows."""
+    pickled Python RDD of plan rows. (read_xvec plans a file set larger than
+    ``_CHUNK_BYTES``; the limit is lowered so this small file is planned.)"""
     from nbdatatools_spark.datagen import generate_vectors
     from nbdatatools_spark.operators.integrity import chunk_digests
+    from nbdatatools_spark.sources import xvec
     from nbdatatools_spark.sources.xvec import read_xvec, write_xvec
 
+    monkeypatch.setattr(xvec, "_CHUNK_BYTES", 0)
     gen = generate_vectors(spark, 300, 4, partitions=3)
     path = str(tmp_path / "v.fvec")
     write_xvec(gen, path)
@@ -153,6 +156,24 @@ def test_driver_planned_scans_have_no_shuffle(spark, tmp_path):
         plan = _plan(df)
         assert "Range" in plan
         assert "Exchange" not in plan and "ExistingRDD" not in plan
+
+
+def test_small_xvec_read_is_a_local_scan(spark, tmp_path):
+    """A file set of at most ``_CHUNK_BYTES`` (an answer key's indices.ivec)
+    decodes on the driver: the executed plan is a LocalTableScan with no
+    MapInArrow or other Python node."""
+    from nbdatatools_spark.sources.xvec import read_xvec, write_xvec
+
+    path = str(tmp_path / "indices.ivec")
+    keys = spark.createDataFrame(
+        [(i, list(range(i, i + 10))) for i in range(100)], "ordinal BIGINT, vector ARRAY<INT>"
+    )
+    write_xvec(keys, path)
+    df = read_xvec(spark, path, ordinal_start=100)
+    assert df.toArrow().column("ordinal").to_pylist() == list(range(100, 200))
+    plan = _plan(df)
+    assert plan.startswith("LocalTableScan")
+    assert "MapInArrow" not in plan and "Python" not in plan and "Range" not in plan
 
 
 def test_window_slice_pushes_ordinal_range(spark, embeddings):

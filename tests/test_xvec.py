@@ -17,17 +17,31 @@ def _write_raw(path, mat, np_dtype):
             f.write(np.asarray(row, dtype=np_dtype).tobytes())
 
 
-@pytest.mark.parametrize(
-    "ext,np_dtype,gen",
-    [
-        ("fvec", "<f4", lambda rng, n, d: rng.normal(size=(n, d)).astype("<f4")),
-        ("ivec", "<i4", lambda rng, n, d: rng.integers(-1000, 1000, (n, d)).astype("<i4")),
-        ("bvec", "<u1", lambda rng, n, d: rng.integers(0, 256, (n, d)).astype("<u1")),
-        ("dvec", "<f8", lambda rng, n, d: rng.normal(size=(n, d)).astype("<f8")),
-        ("svec", "<i2", lambda rng, n, d: rng.integers(-300, 300, (n, d)).astype("<i2")),
-        ("mvec", "<f2", lambda rng, n, d: rng.normal(size=(n, d)).astype("<f2")),
-    ],
-)
+_FORMATS = [
+    ("fvec", "<f4", lambda rng, n, d: rng.normal(size=(n, d)).astype("<f4")),
+    ("ivec", "<i4", lambda rng, n, d: rng.integers(-1000, 1000, (n, d)).astype("<i4")),
+    ("bvec", "<u1", lambda rng, n, d: rng.integers(0, 256, (n, d)).astype("<u1")),
+    ("dvec", "<f8", lambda rng, n, d: rng.normal(size=(n, d)).astype("<f8")),
+    ("svec", "<i2", lambda rng, n, d: rng.integers(-300, 300, (n, d)).astype("<i2")),
+    ("mvec", "<f2", lambda rng, n, d: rng.normal(size=(n, d)).astype("<f2")),
+]
+
+
+@pytest.fixture()
+def planned(monkeypatch):
+    """Send every non-empty file set down the planned ``mapInArrow`` path
+    (and so into the decoded-facet cache): test files are far below
+    ``_CHUNK_BYTES``, which would decode them on the driver."""
+    from nbdatatools_spark.sources import xvec
+
+    monkeypatch.setattr(xvec, "_CHUNK_BYTES", 0)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("ext,np_dtype,gen", _FORMATS)
 def test_read_roundtrip(spark, tmp_path, ext, np_dtype, gen):
     rng = np.random.default_rng(42)
     mat = gen(rng, 50, 8)
@@ -309,7 +323,7 @@ def _vectors(df):
     return [list(r["vector"]) for r in df.orderBy("ordinal").collect()]
 
 
-def test_cache_hit_returns_the_persisted_frame(spark, tmp_path):
+def test_cache_hit_returns_the_persisted_frame(spark, tmp_path, planned):
     p = str(tmp_path / "hit.fvec")
     _write_raw(p, np.arange(40, dtype="<f4").reshape(10, 4), "<f4")
     df = read_xvec(spark, p)
@@ -323,7 +337,7 @@ def test_cache_hit_returns_the_persisted_frame(spark, tmp_path):
     assert read_xvec(spark, p, ordinal_start=5) is not df
 
 
-def test_cache_rewrite_in_place_same_size_reads_new_bytes(spark, tmp_path):
+def test_cache_rewrite_in_place_same_size_reads_new_bytes(spark, tmp_path, planned):
     p = str(tmp_path / "inplace.fvec")
     _write_raw(p, np.zeros((10, 4), "<f4"), "<f4")
     assert _vectors(read_xvec(spark, p))[3] == [0.0] * 4
@@ -333,7 +347,7 @@ def test_cache_rewrite_in_place_same_size_reads_new_bytes(spark, tmp_path):
     assert _vectors(read_xvec(spark, p))[3] == [7.0] * 4
 
 
-def test_cache_write_read_rewrite_decodes_new_file(spark, tmp_path):
+def test_cache_write_read_rewrite_decodes_new_file(spark, tmp_path, planned):
     p = str(tmp_path / "rw.fvec")
     first = spark.createDataFrame([(i, [float(i)] * 3) for i in range(6)], "ordinal BIGINT, vector ARRAY<FLOAT>")
     write_xvec(first, p)
@@ -342,7 +356,7 @@ def test_cache_write_read_rewrite_decodes_new_file(spark, tmp_path):
     assert _vectors(read_xvec(spark, p))[5] == [-5.0] * 3
 
 
-def test_cache_unpersisted_hit_is_a_miss(spark, tmp_path):
+def test_cache_unpersisted_hit_is_a_miss(spark, tmp_path, planned):
     p = str(tmp_path / "unpersist.fvec")
     _write_raw(p, np.arange(24, dtype="<f4").reshape(6, 4), "<f4")
     df = read_xvec(spark, p)
@@ -355,7 +369,7 @@ def test_cache_unpersisted_hit_is_a_miss(spark, tmp_path):
     assert _vectors(read_xvec(spark, p))[0] == [0.0, 1.0, 2.0, 3.0]
 
 
-def test_cache_evicts_lru_under_byte_budget(spark, tmp_path, monkeypatch):
+def test_cache_evicts_lru_under_byte_budget(spark, tmp_path, monkeypatch, planned):
     from nbdatatools_spark.sources import xvec
 
     xvec.clear_cache(spark)
@@ -376,7 +390,7 @@ def test_cache_evicts_lru_under_byte_budget(spark, tmp_path, monkeypatch):
     xvec.clear_cache(spark)
 
 
-def test_cache_clear_empties_it(spark, tmp_path):
+def test_cache_clear_empties_it(spark, tmp_path, planned):
     from nbdatatools_spark.sources import xvec
 
     p = str(tmp_path / "clear.fvec")
@@ -386,3 +400,167 @@ def test_cache_clear_empties_it(spark, tmp_path):
     xvec.clear_cache(spark)
     assert not xvec._caches[spark] and not df.is_cached
     assert read_xvec(spark, p) is not df
+
+
+def test_cache_small_read_is_not_cached_and_evicts_stale(spark, tmp_path, monkeypatch):
+    """A file set of at most ``_CHUNK_BYTES`` decodes on the driver and never
+    enters the cache; reading a file that shrank to that size still drops
+    the planned entry its larger self left."""
+    from nbdatatools_spark.sources import xvec
+
+    xvec.clear_cache(spark)
+    monkeypatch.setattr(xvec, "_CHUNK_BYTES", 200)
+    p = str(tmp_path / "shrink.fvec")
+    _write_raw(p, np.ones((10, 4), "<f4"), "<f4")  # 200 bytes: driver path
+    assert _vectors(read_xvec(spark, p))[9] == [1.0] * 4
+    assert not xvec._caches[spark]
+    _write_raw(p, np.full((11, 4), 2.0, "<f4"), "<f4")  # 220 bytes: planned, cached
+    big = read_xvec(spark, p)
+    assert big.is_cached and len(xvec._caches[spark]) == 1
+    _write_raw(p, np.full((5, 4), 3.0, "<f4"), "<f4")  # shrank below the limit
+    small = read_xvec(spark, p)
+    assert not xvec._caches[spark] and not big.is_cached
+    assert _vectors(small) == [[3.0] * 4] * 5
+
+
+# --- the driver path and the planned path return the same table -------------
+
+
+def _bits(tbl):
+    """Ordinals, vector lengths and every component's bit pattern (NaN
+    payloads and -0.0 included)."""
+    vec = tbl.column("vector").combine_chunks()
+    vals = vec.flatten().to_numpy(zero_copy_only=False)
+    return (
+        tbl.column("ordinal").to_pylist(),
+        vec.value_lengths().to_pylist(),
+        vec.null_count,
+        vals.view(f"u{vals.itemsize}").tolist(),
+    )
+
+
+def _read_both(spark, monkeypatch, paths, **kw):
+    """One read on the driver path and on the forced planned path: the
+    same Spark schema (types and nullability), Arrow schema and bits.
+    Returns the driver path's table."""
+    from nbdatatools_spark.sources import xvec
+
+    local = read_xvec(spark, paths, **kw)
+    with monkeypatch.context() as m:
+        m.setattr(xvec, "_CHUNK_BYTES", 0)
+        planned = read_xvec(spark, paths, **kw)
+    assert _plan(local).startswith("LocalTableScan")
+    assert "MapInArrow" in _plan(planned)
+    assert local.schema == planned.schema
+    got, want = local.toArrow(), planned.toArrow()
+    xvec.clear_cache(spark)
+    assert got.schema.equals(want.schema)
+    assert _bits(got) == _bits(want)
+    return got
+
+
+@pytest.mark.parametrize("ext,np_dtype,gen", _FORMATS)
+def test_paths_equal_every_format(spark, tmp_path, monkeypatch, ext, np_dtype, gen):
+    """Every format, bvec/mvec widening included; float formats carry NaN
+    (a payload NaN too), +-inf and -0.0, which must keep their bits."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    mat = gen(np.random.default_rng(7), 30, 6)
+    if mat.dtype.kind == "f":
+        mat[0, :4] = [np.nan, -0.0, np.inf, -np.inf]
+        if mat.dtype.itemsize == 4:
+            mat[1, 0] = np.uint32(0x7FC00001).view("<f4")
+    p = str(tmp_path / f"eq.{ext}")
+    _write_raw(p, mat, np_dtype)
+    got = _read_both(spark, monkeypatch, p)
+    want = mat.astype({"<u1": "<i2", "<f2": "<f4"}.get(np_dtype, np_dtype))
+    assert _bits(got) == (
+        list(range(30)), [6] * 30, 0, want.ravel().view(f"u{want.itemsize}").tolist()
+    )
+    elem = spark.createDataFrame([], f"x ARRAY<{xvec_dtype(ext)[2]}>").schema["x"].dataType.elementType
+    assert read_xvec(spark, p).schema == StructType(
+        [StructField("ordinal", LongType(), True), StructField("vector", ArrayType(elem, True), True)]
+    )
+
+
+def test_paths_equal_multifile_ordinal_start_and_empty(spark, tmp_path, monkeypatch):
+    """Two files continue their ordinals in sorted path order from
+    ``ordinal_start``; an empty file in the set adds no rows, and an
+    all-empty set is an empty frame of the same schema."""
+    a, b, c = (str(tmp_path / f"{n}.ivec") for n in "abc")
+    _write_raw(a, np.arange(12).reshape(3, 4), "<i4")
+    _write_raw(c, -np.arange(20).reshape(5, 4), "<i4")
+    open(b, "wb").close()
+    got = _read_both(spark, monkeypatch, [c, a], ordinal_start=7)
+    assert got.column("ordinal").to_pylist() == list(range(7, 15))
+    assert got.column("vector").to_pylist()[3] == [0, -1, -2, -3]
+    assert _bits(_read_both(spark, monkeypatch, [c, b, a], ordinal_start=7)) == _bits(got)
+    empty = read_xvec(spark, b)
+    assert _plan(empty).startswith("LocalTableScan")
+    assert empty.schema == read_xvec(spark, a).schema and empty.count() == 0
+
+
+def _write_lying_header(path):
+    with open(path, "wb") as f:
+        f.write(struct.pack("<i", 4) + np.zeros(4, "<f4").tobytes())
+        f.write(struct.pack("<i", 3) + np.zeros(4, "<f4").tobytes())
+
+
+def _write_big_endian(path):
+    with open(path, "wb") as f:
+        f.write(struct.pack(">i", 4) + np.zeros(4, "<f4").tobytes())
+
+
+def _write_trailing_bytes(path):
+    with open(path, "wb") as f:
+        f.write(struct.pack("<i", 4) + np.zeros(4, "<f4").tobytes() + b"\x01\x02")
+
+
+@pytest.mark.parametrize("path_kind", ["driver", "planned"])
+@pytest.mark.parametrize(
+    "write,match",
+    [
+        (_write_big_endian, "implausible dimension"),
+        (_write_lying_header, "record header dim 3 != file dim 4"),
+        (_write_trailing_bytes, "not a multiple of stride"),
+        (lambda p: open(p, "wb").write(b"\x04\x00"), "shorter than a record header"),
+    ],
+)
+def test_bad_files_raise_value_error_on_both_paths(spark, tmp_path, monkeypatch, path_kind, write, match):
+    """The driver path raises ``ValueError`` from ``read_xvec`` itself; the
+    planned path raises file-level errors there too and record-header
+    errors from the first action, as the worker's ``ValueError``."""
+    from nbdatatools_spark.sources import xvec
+
+    p = str(tmp_path / "bad.fvec")
+    write(p)
+    if path_kind == "driver":
+        with pytest.raises(ValueError, match=match):
+            read_xvec(spark, p)
+        return
+    monkeypatch.setattr(xvec, "_CHUNK_BYTES", 0)
+    with pytest.raises(Exception, match=match) as err:
+        read_xvec(spark, p).collect()
+    assert isinstance(err.value, ValueError) or "ValueError" in str(err.value)
+    xvec.clear_cache(spark)
+
+
+def test_file_truncated_after_planning_raises(spark, tmp_path, monkeypatch):
+    """A range the file no longer holds raises ``ValueError`` naming the
+    path and the planned bytes, on the driver's decode and in a planned
+    scan's task."""
+    from nbdatatools_spark.sources import xvec
+
+    p = str(tmp_path / "shrinks.fvec")
+    _write_raw(p, np.ones((10, 4), "<f4"), "<f4")
+    (chunk,) = xvec._plan_chunks([p])
+    monkeypatch.setattr(xvec, "_CHUNK_BYTES", 0)
+    planned = read_xvec(spark, p)
+    with open(p, "r+b") as f:
+        f.truncate(120)
+    with pytest.raises(ValueError, match=f"{p}: expected 200 bytes at offset 0, read 120"):
+        xvec._decode_chunk(*chunk)
+    with pytest.raises(Exception, match="expected 200 bytes") as err:
+        planned.collect()
+    assert "ValueError" in str(err.value)
+    xvec.clear_cache(spark)
