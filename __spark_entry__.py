@@ -489,14 +489,12 @@ def vector_norms(spark, sf_dir):
 
 
 def knn_cosine_topk(spark, sf_dir):
-    """J2 exact KNN, cosine. Gate uses impl="expr" — sequential fold matching
-    DuckDB's list_inner_product evaluation order bit-for-bit (the GEMM/BLAS
-    kernel is the bench/scale path; its float-summation order differs in the
-    last bits, ADVICE.md r1). `+ 0.0` collapses the self-match -0.0/0.0
-    representation split (IEEE: -0.0 + 0.0 == +0.0)."""
+    """J2 exact KNN, cosine: the scan's distances are distance_expr's
+    sequential fold (DuckDB's list_inner_product order) bit for bit. `+ 0.0`
+    collapses the self-match -0.0/0.0 split (IEEE: -0.0 + 0.0 == +0.0)."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 20)
-    pairs = brute_force_topk(q, emb, k=10, metric="cosine", impl="expr")
+    pairs = brute_force_topk(q, emb, k=10, metric="cosine")
     return pairs.select(
         "query_id", "rank", "base_id", (F.round("distance", 6) + 0.0).alias("distance")
     )
@@ -505,7 +503,7 @@ def knn_cosine_topk(spark, sf_dir):
 def knn_euclidean_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
-    pairs = brute_force_topk(q, emb, k=5, metric="euclidean", impl="expr")
+    pairs = brute_force_topk(q, emb, k=5, metric="euclidean")
     return pairs.select(
         "query_id", "rank", "base_id", F.round("distance", 6).alias("distance")
     )
@@ -703,7 +701,7 @@ def knn_dot_topk(spark, sf_dir):
     """J2 with the dot-product metric (DistanceFunction.java:26)."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
-    pairs = brute_force_topk(q, emb, k=5, metric="dot_product", impl="expr")
+    pairs = brute_force_topk(q, emb, k=5, metric="dot_product")
     return pairs.select(
         "query_id", "rank", "base_id", F.round("distance", 6).alias("distance")
     )
@@ -1088,7 +1086,7 @@ def knn_self_recall(spark, sf_dir):
         F.col("vec_id").alias("ordinal"), F.col("embedding").alias("vector")
     )
     q = emb.where(F.col("ordinal") < 50)
-    nn = exact_knn(q, emb, k=10, metric="cosine", impl="expr")
+    nn = exact_knn(q, emb, k=10, metric="cosine")
     return knn_recall(nn, nn, k=10)
 
 
@@ -2232,7 +2230,7 @@ def doc_rrf_fusion(spark, sf_dir):
         docs.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
     )
     q = emb.where(F.col("vec_id") == 0)
-    dense = brute_force_topk(q, base, k=50, metric="cosine", impl="expr").select(
+    dense = brute_force_topk(q, base, k=50, metric="cosine").select(
         F.col("base_id").alias("doc_id"), "rank"
     )
     return rrf_fuse([lex, dense], id_col="doc_id", k0=60, top_k=20).orderBy("rank")
@@ -2609,14 +2607,14 @@ def doc_token_entropy(spark, sf_dir):
 
 def embedding_hard_negatives(spark, sf_dir):
     """Hard-negative mining (similarity.py::hard_negatives): top-5 nearest
-    DIFFERENT-label vectors per query. Gate pins impl="expr" (sequential
-    fold = DuckDB list_inner_product order); the GEMM label-mask kernel is
-    the scale path, differential-tested in tests/test_ann_recall.py."""
+    DIFFERENT-label vectors per query, on the default label-mask scan,
+    whose distances are the sequential fold's (DuckDB list_inner_product
+    order) bit for bit."""
     from nbdatatools_spark.operators.similarity import hard_negatives
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 16)
-    pairs = hard_negatives(q, emb, k=5, impl="expr")
+    pairs = hard_negatives(q, emb, k=5)
     return pairs.select(
         "query_id", "rank", "base_id", (F.round("distance", 6) + 0.0).alias("distance")
     )
@@ -3876,12 +3874,11 @@ def doc_span_corruption(spark, sf_dir):
 def embedding_hubness(spark, sf_dir):
     """k-occurrence hubness audit (knn.py::hubness_stats, Radovanovic
     et al. 2010): how many other vectors list each vector in their
-    10-NN (self excluded); anti-hubs report 0. expr impl for bit-exact
-    oracle parity (GEMM is the scale default)."""
+    10-NN (self excluded); anti-hubs report 0 (fold distances, as in SQL)."""
     from nbdatatools_spark.operators.knn import hubness_stats
 
     emb = _t(spark, sf_dir, "embeddings")
-    return hubness_stats(emb, k=10, metric="cosine", impl="expr")
+    return hubness_stats(emb, k=10, metric="cosine")
 
 
 def corpus_source_similarity(spark, sf_dir):
@@ -3973,11 +3970,11 @@ def doc_filter_agreement(spark, sf_dir):
 def embedding_mutual_knn(spark, sf_dir):
     """Mutual 10-NN pairs (knn.py::mutual_knn_pairs): reciprocal
     neighborhood near-dup mining — one self-KNN + one reversed-key
-    equi-join, never all-pairs. expr impl for oracle parity."""
+    equi-join, never all-pairs (fold distances, as in SQL)."""
     from nbdatatools_spark.operators.knn import mutual_knn_pairs
 
     emb = _t(spark, sf_dir, "embeddings")
-    return mutual_knn_pairs(emb, k=10, metric="cosine", impl="expr")
+    return mutual_knn_pairs(emb, k=10, metric="cosine")
 
 
 def doc_cross_corpus_near_dups(spark, sf_dir):
@@ -4378,14 +4375,13 @@ def embedding_knn_accuracy(spark, sf_dir):
     """Leave-one-out 3-NN label accuracy (knn.py::knn_label_accuracy,
     cosine, majority vote with (count DESC, label ASC) ties): the
     supervised audit of embedding geometry, per-label + grand-total
-    ROLLUP. expr impl for oracle parity (the hubness/mutual-knn policy:
-    gate-side exact quadratic at sf0.01; production rides the GEMM
-    partial top-k, and at corpus scale the neighbor lists come from the
-    ANN family)."""
+    ROLLUP. The default scan ranks by the sequential fold's distances
+    (the hubness/mutual-knn policy: gate-side exact quadratic at sf0.01;
+    at corpus scale the neighbor lists come from the ANN family)."""
     from nbdatatools_spark.operators.knn import knn_label_accuracy
 
     emb = _t(spark, sf_dir, "embeddings")
-    return knn_label_accuracy(emb, k=3, metric="cosine", impl="expr")
+    return knn_label_accuracy(emb, k=3, metric="cosine")
 
 
 def events_autocorrelation(spark, sf_dir):
@@ -11713,10 +11709,9 @@ def embedding_knn_overlap(spark, sf_dir):
     (knn.py::knn_overlap, k=10): mean overlap between each vector's
     full-dimension 10-NN set and its first-16-dims 10-NN set — the
     direct QA readout for dimension truncation / projection / model
-    swaps (recall@k is this with B = the ANN index). Gate pins
-    impl='expr' for fold parity (the knn_cosine_topk discipline); GEMM
-    is the production path. Per-point overlaps 9dp-DECIMAL-summed —
-    hash-exact."""
+    swaps (recall@k is this with B = the ANN index). The default scan's
+    distances are the sequential fold's (the knn_cosine_topk
+    discipline). Per-point overlaps 9dp-DECIMAL-summed — hash-exact."""
     from nbdatatools_spark.operators.knn import knn_overlap
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -11726,7 +11721,7 @@ def embedding_knn_overlap(spark, sf_dir):
             "transform(slice(embedding, 1, 16), x -> CAST(x AS FLOAT))"
         ).alias("embedding"),
     )
-    return knn_overlap(emb, trunc, k=10, impl="expr")
+    return knn_overlap(emb, trunc, k=10)
 
 
 def _knn_overlap_oracle(k: int = 10, trunc: int = 16) -> str:

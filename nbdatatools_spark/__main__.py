@@ -195,7 +195,7 @@ def _cmd_compute_knn(args) -> int:
     spark = _spark()
     base = _read_vectors(spark, args.base)
     queries = _read_vectors(spark, args.query)
-    nn = exact_knn(queries, base, k=args.k, metric=args.metric, impl=args.impl)
+    nn = exact_knn(queries, base, k=args.k, metric=args.metric)
     if not args.out_indices and not args.out_distances:
         _emit(nn.orderBy("ordinal").limit(args.limit).collect())
         return 0
@@ -1814,7 +1814,7 @@ def _cmd_analyze_knn_overlap(args) -> int:
     return _emit_rows(
         knn_overlap(
             a, b, k=args.k, metric=args.metric, id_col=args.id_col,
-            vec_a=args.vec_col, vec_b=args.vec_col, impl=args.impl,
+            vec_a=args.vec_col, vec_b=args.vec_col,
         )
     )
 
@@ -2782,7 +2782,6 @@ def build_parser() -> argparse.ArgumentParser:
     kn.add_argument("--query", required=True)
     kn.add_argument("--k", type=int, default=10)
     kn.add_argument("--metric", default="cosine")
-    kn.add_argument("--impl", default="gemm")
     kn.add_argument("--out-indices")
     kn.add_argument("--out-distances")
     kn.add_argument("--limit", type=int, default=20)
@@ -3854,7 +3853,6 @@ def build_parser() -> argparse.ArgumentParser:
     ako.add_argument("--metric", default="cosine")
     ako.add_argument("--id-col", default="vec_id")
     ako.add_argument("--vec-col", default="embedding")
-    ako.add_argument("--impl", default="gemm")
     ako.set_defaults(func=_cmd_analyze_knn_overlap)
     apr = an.add_parser("procrustes")
     apr.add_argument("--input-a", required=True)

@@ -114,31 +114,126 @@ def _matrix(vectors: pa.ListArray, dim: int | None = None) -> np.ndarray:
     return flat.astype(np.float64).reshape(len(vectors), dim)
 
 
-def distance_matrix(B, Q, metric: str):
-    """Dense float64 ``(len(B), len(Q))`` distance matrix — the numpy (BLAS)
-    twin of :func:`distance_expr`, with the same metric names. Cells the
-    metric leaves undefined (zero-magnitude cosine) are NaN; each caller
-    states its own policy for them. Values differ from the sequential-fold
-    expressions only in float summation order (last bits)."""
+_U = 2.0**-53  # float64 unit roundoff
+
+
+def _gamma(n: int) -> float:
+    """gamma_n = n*u / (1 - n*u): the relative error bound of n roundings."""
+    return n * _U / (1 - n * _U)
+
+
+def _fold(P: np.ndarray) -> np.ndarray:
+    """Sum the last axis left to right from 0.0, ``_fsum``'s order bit for
+    bit (``+ 0.0`` turns an all ``-0.0`` sum into ``_fsum``'s ``0.0``)."""
+    return np.cumsum(P, axis=-1)[..., -1] + 0.0
+
+
+def _by_rows(n: int, dim: int, f) -> np.ndarray:
+    """``f(rows)`` over cache-sized slices of ``range(n)``, concatenated."""
+    step = max(1, 65536 // max(dim, 1))
+    return np.concatenate([f(slice(s, s + step)) for s in range(0, n, step)] or [np.empty(0)])
+
+
+def _cell_fold(fn, B, Q, bb, qq):
+    """Distances of the row pairs ``(B[i], Q[i])`` by the fold; ``bb`` and
+    ``qq`` are their squared norms by the fold (cosine reads them)."""
+    if fn is euclidean_distance:
+        d = B - Q
+        return np.sqrt(_fold(d * d))
+    if fn is manhattan_distance:
+        return _fold(np.abs(B - Q))
+    dot = _fold(B * Q)
+    if fn is dot_product_distance:
+        return -dot
+    denom = np.sqrt(qq) * np.sqrt(bb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom != 0, 1.0 - dot / denom, np.nan)
+
+
+def distance_fold(B, Q, metric: str) -> np.ndarray:
+    """The cell-wise numpy twin of :func:`distance_expr`: the distance of
+    each row pair ``(B[i], Q[i])`` from float64 products summed left to
+    right, the expression's value bit for bit (NaN where it is NULL)."""
+    B = np.asarray(B, dtype=np.float64)
+    Q = np.asarray(Q, dtype=np.float64)
+    return _cell_fold(_metric(metric), B, Q, _fold(B * B), _fold(Q * Q))
+
+
+def _near(sel, slack, k, excluded):
+    """``(rows, cols)`` of the cells of ``sel`` not excluded and at most
+    their column's k-th smallest defined, allowed value plus ``2 * slack``
+    (all defined, allowed cells when a column has fewer than ``k``)."""
+    key = sel if excluded is None else np.where(excluded, np.nan, sel)
+    kth = np.partition(key, min(k, len(sel)) - 1, axis=0)[min(k, len(sel)) - 1]  # NaN last
+    return np.nonzero(key <= np.where(np.isnan(kth), np.inf, kth + 2 * slack))
+
+
+def _gemm(fn, B, Q, bb, qq):
+    """GEMM distances ``(D, sel, slack)`` for cosine, euclidean and dot:
+    ``sel`` is the form the re-score compares (``D``, but euclidean's
+    squared form, where the bound is linear), ``slack`` a per-column bound
+    on |sel - fold|. ``bb``/``qq``: squared norms by the fold.
+
+    Derivation (u = 2^-53, gamma_n = n*u/(1-n*u), d = dim): any order of
+    summing d rounded or fused products errs by at most gamma_d *
+    sum|b_i q_i| <= gamma_d*|b|*|q| (Cauchy-Schwarz), and GEMM and the fold
+    are two orders, so dot differs by 2*gamma_d*|b|*|q|; euclidean's
+    |b|^2 - 2b.q + |q|^2 (three sums, two additions) and the fold of
+    (b_i - q_i)^2 each err by gamma_(d+2)*(|b|+|q|)^2; cosine, over the
+    same denominator sqrt(q.q)*sqrt(b.b), by 2*gamma_d plus four roundings
+    of the quotients and ``1 -``: 2*gamma_(d+3). ``slack`` doubles each
+    bound, with the batch's largest base norm, to cover the bound's own
+    rounding and that of the computed norms (O(d*u) relative)."""
+    G = B @ Q.T
+    d = B.shape[1]
+    bmax = np.fmax.reduce(bb, initial=0.0)  # NaN rows stay out of the bound
+    if fn is cosine_distance:
+        denom = np.outer(np.sqrt(bb), np.sqrt(qq))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            D = 1.0 - G / denom
+        D[denom == 0] = np.nan
+        return D, D, 4 * _gamma(d + 3)
+    if fn is euclidean_distance:
+        sel = bb[:, None] - 2.0 * G + qq[None, :]
+        slack = 4 * _gamma(d + 2) * (np.sqrt(bmax) + np.sqrt(qq)) ** 2
+        return np.sqrt(np.maximum(sel, 0.0)), sel, slack  # clipped for fp negatives
+    D = -G
+    return D, D, 4 * _gamma(d) * np.sqrt(bmax * qq)
+
+
+def distance_matrix(B, Q, metric: str, k: int | None = None, excluded=None):
+    """Dense float64 ``(len(B), len(Q))`` distance matrix -- the numpy twin
+    of :func:`distance_expr`, with the same metric names; undefined cells
+    (zero-magnitude cosine) are NaN. Manhattan sums with the fold. The
+    others run one GEMM (``_gemm``), whose last bits follow the operands'
+    shapes; with ``k``, GEMM proposes and the fold decides: each cell
+    within ``2 * slack`` of its column's k-th GEMM value (``excluded``
+    cells never) is re-scored with the fold, so any (distance, base id)
+    top-k cut of the matrix is ``distance_expr``'s, values included.
+
+    Why that is enough: the k GEMM-best cells have fold values at most
+    g_k + slack, so the fold's k-th value f_k is too; a cell above
+    g_k + 2*slack has a fold value and a GEMM value above f_k (for
+    euclidean the slack is >= 4*(d+2)*u times the squared distance, so the
+    sqrt keeps that strict) and can never enter the k smallest."""
     fn = _metric(metric)
     B = np.asarray(B, dtype=np.float64)
     Q = np.asarray(Q, dtype=np.float64)
-    if fn is cosine_distance:
-        denom = np.outer(np.linalg.norm(B, axis=1), np.linalg.norm(Q, axis=1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            D = 1.0 - (B @ Q.T) / denom
-        D[denom == 0] = np.nan
+    if fn is manhattan_distance:
+        # chunk the query axis so the (rows, q_chunk, dim) intermediate and
+        # its cumulative sum stay ~64MB each whatever the batch shape
+        q_chunk = max(1, int(8e6 // max(B.shape[0] * B.shape[1], 1)))
+        D = np.empty((B.shape[0], Q.shape[0]), dtype=np.float64)
+        for s in range(0, Q.shape[0], q_chunk):
+            D[:, s : s + q_chunk] = _fold(np.abs(B[:, None, :] - Q[None, s : s + q_chunk, :]))
         return D
-    if fn is euclidean_distance:
-        # |b-q|^2 = |b|^2 - 2 b.q + |q|^2, clipped for fp negatives
-        sq = (B * B).sum(1)[:, None] - 2.0 * (B @ Q.T) + (Q * Q).sum(1)[None, :]
-        return np.sqrt(np.maximum(sq, 0.0))
-    if fn is dot_product_distance:
-        return -(B @ Q.T)
-    # manhattan has no GEMM form; chunk the query axis so the (rows, q_chunk,
-    # dim) intermediate stays ~128MB whatever the batch shape
-    q_chunk = max(1, int(16e6 // max(B.shape[0] * B.shape[1], 1)))
-    D = np.empty((B.shape[0], Q.shape[0]), dtype=np.float64)
-    for s in range(0, Q.shape[0], q_chunk):
-        D[:, s : s + q_chunk] = np.abs(B[:, None, :] - Q[None, s : s + q_chunk, :]).sum(axis=2)
+    d = B.shape[1]
+    bb = _by_rows(len(B), d, lambda s: _fold(B[s] * B[s]))
+    qq = _by_rows(len(Q), d, lambda s: _fold(Q[s] * Q[s]))
+    D, sel, slack = _gemm(fn, B, Q, bb, qq)
+    if k is not None and D.size:
+        r, c = _near(sel, slack, k, excluded)
+        D[r, c] = _by_rows(
+            len(r), d, lambda s: _cell_fold(fn, B[r[s]], Q[c[s]], bb[r[s]], qq[c[s]])
+        )
     return D

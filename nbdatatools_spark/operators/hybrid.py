@@ -68,7 +68,7 @@ def result_indices_table(
     )
 
 
-def _not_matching(D: np.ndarray, pids: pa.ListArray, qids: np.ndarray) -> np.ndarray:
+def _not_matching(pids: pa.ListArray, qids: np.ndarray) -> np.ndarray:
     """Kernel mask: cell (b, q) is excluded unless query ordinal ``qids[q]``
     is among base row b's predicate ids."""
     order = np.argsort(qids)
@@ -76,7 +76,7 @@ def _not_matching(D: np.ndarray, pids: pa.ListArray, qids: np.ndarray) -> np.nda
     flat = pids.flatten().to_numpy(zero_copy_only=False)
     pos = np.minimum(np.searchsorted(qids, flat, sorter=order), len(qids) - 1)
     hit = qids[order[pos]] == flat
-    excluded = np.ones(D.shape, dtype=bool)
+    excluded = np.ones((len(pids), len(qids)), dtype=bool)
     excluded[rows[hit], order[pos[hit]]] = False
     return excluded
 

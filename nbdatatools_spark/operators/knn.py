@@ -24,9 +24,11 @@ Physical strategy (scale posture):
   hybrid ground truth, hard negatives, the self-KNN audits) scores with
   ``distance_matrix`` and an optional per-cell exclusion mask; the PQ scans
   with per-task lookup tables.
+- GEMM proposes and a left-to-right fold decides (PHiDJ: filter by a bound,
+  then verify): every stored distance is ``distance_expr``'s, bit for bit.
 - Tie-break is (distance, base ordinal) ascending — deterministic under float
   associativity (SURVEY §7 "What's hard"); undefined (NaN) distances rank last.
-- ``_ranked_knn`` is the one exact KNN (ranked rows), in two shapes with one
+- ``_knn_kernel`` is the one exact KNN (ranked rows), in two shapes with one
   NaN -> NULL rule: ``_as_arrays`` (``exact_knn``'s neighbor facets) and
   ``_as_pairs`` (a row per neighbor: ``similarity.brute_force_topk``, the PQ
   scans). Both render a scan's ranked Arrow table as a local relation.
@@ -48,7 +50,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nbdatatools_spark.functions.distance import _matrix, distance_expr, distance_matrix
+from nbdatatools_spark.functions.distance import _matrix, distance_matrix
 
 _CANDIDATES = "__qid BIGINT, __bid BIGINT, __dist DOUBLE"
 _RANKED = pa.schema(
@@ -66,81 +68,28 @@ def exact_knn(
     base_ordinal: str = "ordinal",
     query_vec: str = "vector",
     base_vec: str = "vector",
-    impl: str = "gemm",
 ) -> DataFrame:
     """Exact top-k neighbors per query.
 
     Returns ``(ordinal, indices ARRAY<ordinal-type>, distances ARRAY<DOUBLE>)``
     matching the reference's neighbor facet shape (FIXTURES.md §1): row i =
     top-k base ordinals for query i, ascending distance, ties broken by base
-    ordinal. Undefined distances (zero-magnitude cosine) rank last and are
-    NULL on both paths.
+    ordinal. Each stored distance is ``distance_expr``'s value for the pair,
+    bit for bit; undefined distances (zero-magnitude cosine) rank last and
+    are NULL.
 
     The top-k runs when ``exact_knn`` is called: the ranked rows are
     collected to the driver and the result is a local relation
     (``LocalTableScan``, one row per query in ordinal order), so later
     actions on it run no scan.
 
-    ``impl``:
-    - ``"gemm"`` (default — the scale path): the shared ``_knn_kernel``,
-      numpy/BLAS distance matrices via Arrow-batched mapInArrow with
-      PER-BATCH PARTIAL TOP-K (the SIMD analogue of the reference's
-      Panama-vector kernels, src/main/java25/.../DistanceFunction.java:199-232).
-      Each scan task merges its batches and returns only Q*k rows, which
-      the driver ranks — never the Q*B cross product and no shuffle. ~2
-      orders of magnitude faster at the reference benchmark scale (100k x
-      256d); distances differ from sequential summation only in the last
-      float64 bits. Query sides past the driver's candidate budget are
-      processed in bounded blocks automatically.
-    - ``"expr"``: pure Catalyst zip_with/aggregate distance inside the
-      broadcast crossJoin, ranked by a row_number window. Catalyst inserts
-      ``WindowGroupLimit ... Partial`` BELOW the exchange (SPARK-37099, the
-      rank-limit pushdown), so each map task keeps only its local top-k per
-      query before shuffling — the exchange carries <= Q*k rows per input
-      partition, not the Q*B cross product (pinned by
-      tests/test_plans.py::test_expr_knn_window_has_partial_group_limit).
-      Still the ORACLE path: the scalar fold distance is bit-reproducible
-      against sequential-sum SQL oracles, but it is ~100x slower than the
-      BLAS kernel at reference scale, so gemm remains the default.
+    Plan: ``_knn_kernel``'s Arrow-batched GEMM with per-batch partial
+    top-k, its candidates re-scored with the fold; each task returns Q*k
+    rows for the driver to rank — no Q*B cross product, no shuffle.
     """
     return _as_arrays(
-        _ranked_knn(
-            queries, base, k, metric, query_ordinal, base_ordinal, query_vec, base_vec, impl
-        )
+        _knn_kernel(queries, base, k, metric, query_ordinal, query_vec, base_ordinal, base_vec)
     )
-
-
-def _ranked_knn(
-    queries: DataFrame,
-    base: DataFrame,
-    k: int,
-    metric: str,
-    query_ordinal: str,
-    base_ordinal: str,
-    query_vec: str,
-    base_vec: str,
-    impl: str,
-) -> DataFrame | pa.Table:
-    """The one exact KNN: ranked rows ``(__qid, __bid, __dist, rank)``,
-    ranks 1..k per query — ``_knn_kernel``'s Arrow table for
-    ``impl="gemm"``, the broadcast crossJoin over ``distance_expr`` (a
-    lazy frame) otherwise (see exact_knn)."""
-    if impl == "gemm":
-        return _knn_kernel(
-            queries, base, k, metric, query_ordinal, query_vec, base_ordinal, base_vec
-        )
-    q = queries.select(
-        F.col(query_ordinal).alias("__qid"), F.col(query_vec).alias("__qvec")
-    )
-    b = base.select(
-        F.col(base_ordinal).alias("__bid"), F.col(base_vec).alias("__bvec")
-    )
-    pairs = b.crossJoin(F.broadcast(q)).select(
-        "__qid",
-        "__bid",
-        distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
-    )
-    return _merge_topk(pairs, k)
 
 
 def _partial_topk(
@@ -188,7 +137,8 @@ def _merge_topk(candidates: DataFrame, k: int) -> DataFrame:
     NULLs and NaN last, base id asc) and keep ranks 1..k as ``rank``.
     Undefined distances must go last: plain asc ranks NULLs first and would
     fill every top-k with zero vectors. The Spark twin of ``_rank_rows``,
-    for candidates that JVM joins produce (the expr path, LSH, re-rank)."""
+    for candidates that JVM joins produce (LSH, re-rank, precomputed
+    neighbor lists)."""
     w = Window.partitionBy("__qid").orderBy(
         F.col("__dist").asc_nulls_last(), F.col("__bid").asc()
     )
@@ -218,18 +168,16 @@ def _local(table: pa.Table) -> DataFrame:
 
 
 def _defined(dist):
-    """NaN distance -> NULL (the expr path's cosine policy): the one
+    """NaN distance -> NULL (``distance_expr``'s cosine policy): the one
     undefined-distance rule of both output shapes."""
     return F.when(F.isnan(dist), F.lit(None)).otherwise(dist)
 
 
-def _as_arrays(topk: DataFrame | pa.Table) -> DataFrame:
+def _as_arrays(topk: pa.Table) -> DataFrame:
     """Ranked rows -> the neighbor facet shape ``(ordinal, indices,
     distances)``, one row per query in ordinal order, built on the driver
-    from the ranked Arrow table (a Spark-ranked frame is collected first)
-    and returned as a local relation: no shuffle and no ``groupBy``."""
-    if isinstance(topk, DataFrame):
-        topk = topk.toArrow()
+    from the ranked Arrow table and returned as a local relation: no
+    shuffle and no ``groupBy``."""
     topk = topk.sort_by([("__qid", "ascending"), ("rank", "ascending")])
     qid = topk.column("__qid").to_numpy()
     starts = _group_starts(qid)
@@ -358,19 +306,21 @@ def _knn_kernel(
 ) -> pa.Table:
     """The dense exact-KNN kernel: ranked ``(__qid, __bid, __dist, rank)``
     rows, ranks 1..k per query — ``_scan_topk`` over ``_query_blocks``,
-    scoring each Arrow batch with a (batch x Q) ``distance_matrix`` and
-    dropping the cells ``exclude(D, base_keys, query_keys)`` flags
-    (``base_key`` / ``query_key`` name the columns it compares: the batch's
-    Arrow column and the query block's numpy array; the base key may be
-    ``base_id`` itself)."""
+    scoring each Arrow batch with a (batch x Q) ``distance_matrix`` whose
+    top-k candidates hold ``distance_expr``'s values, and dropping the
+    cells ``exclude(base_keys, query_keys)`` flags (``base_key`` /
+    ``query_key`` name the columns it compares: the batch's Arrow column
+    and the query block's numpy array; the base key may be ``base_id``
+    itself)."""
     keyed = exclude is not None
 
     def dense(payload):
         Q, q_keys = payload
 
         def score(batch):
-            D = distance_matrix(_matrix(batch.column(base_vec), Q.shape[1]), Q, metric)
-            return D, (exclude(D, batch.column(base_key), q_keys) if keyed else None)
+            excluded = exclude(batch.column(base_key), q_keys) if keyed else None
+            B = _matrix(batch.column(base_vec), Q.shape[1])
+            return distance_matrix(B, Q, metric, k, excluded), excluded
 
         return score
 
@@ -506,35 +456,30 @@ def _self_neighbors(
     metric: str,
     id_col: str,
     vec_col: str,
-    impl: str,
     neighbors: DataFrame | None = None,
 ) -> DataFrame:
     """The self-KNN edge list the neighbor audits share: each id's k
     nearest OTHER ids as ``(query_id, base_id, distance)``.
 
-    The input is the exact self-KNN at k+1 (``impl`` picks the kernel) or
-    the caller's precomputed ``neighbors`` list ``(query_id, base_id,
-    distance)`` — raw ANN output included. Self rows are dropped and the
-    rest re-ranked by (distance asc, NULLs last, base_id) to exactly k, so
-    an undefined distance never displaces a defined one. On the gemm path
-    the scan masks each query's own cell and ranks k other ids directly."""
-    if neighbors is None and impl == "gemm":
+    By default the exact kernel masks each query's own cell and ranks k
+    other ids directly. A caller's precomputed ``neighbors`` list
+    ``(query_id, base_id, distance)`` — raw ANN output included — has its
+    self rows dropped and the rest re-ranked by (distance asc, NULLs last,
+    base_id) to exactly k, so an undefined distance never displaces a
+    defined one."""
+    if neighbors is None:
         return _as_pairs(
             _knn_kernel(
                 df, df, k, metric, id_col, vec_col, id_col, vec_col,
-                exclude=lambda D, bids, qids: bids.to_numpy()[:, None] == qids[None, :],
+                exclude=lambda bids, qids: bids.to_numpy()[:, None] == qids[None, :],
                 query_key=id_col, base_key=id_col,
             )
         ).drop("rank")
-    if neighbors is None:
-        cand = _ranked_knn(df, df, k + 1, metric, id_col, id_col, vec_col, vec_col, impl)
-    else:
-        cand = neighbors.select(
-            F.col("query_id").alias("__qid"),
-            F.col("base_id").alias("__bid"),
-            F.col("distance").alias("__dist"),
-        )
-    # _merge_topk's rank replaces the k+1 self-KNN's own
+    cand = neighbors.select(
+        F.col("query_id").alias("__qid"),
+        F.col("base_id").alias("__bid"),
+        F.col("distance").alias("__dist"),
+    )
     return _as_pairs(_merge_topk(cand.where(F.col("__qid") != F.col("__bid")), k)).drop("rank")
 
 
@@ -544,7 +489,6 @@ def hubness_stats(
     metric: str = "cosine",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "gemm",
     neighbors: DataFrame | None = None,
 ) -> DataFrame:
     """k-occurrence hubness audit (Radovanovic et al. JMLR 2010): for each
@@ -554,9 +498,9 @@ def hubness_stats(
     and ANN recall; the N_k distribution (and its skewness, computed
     downstream of this frame) is the standard diagnostic.
 
-    Plan: the shared ``_self_neighbors`` edge list (self-KNN at k+1, GEMM
-    partial top-k by default — the scale path; self rows dropped,
-    re-ranked by (distance NULLs last, base_id) to exactly k), then ONE
+    Plan: the shared ``_self_neighbors`` edge list (the exact kernel with
+    each query's own cell masked, k other ids by (distance NULLs last,
+    base_id)), then ONE
     groupBy(base_id) count joined back to the id universe so
     zero-occurrence anti-hubs report 0. Shuffles carry (query_id,
     base_id, distance) triples only.
@@ -571,7 +515,7 @@ def hubness_stats(
 
     Returns (id, k_occurrence) — every input id exactly once.
     """
-    topk = _self_neighbors(df, k, metric, id_col, vec_col, impl, neighbors)
+    topk = _self_neighbors(df, k, metric, id_col, vec_col, neighbors)
     occ = topk.groupBy(F.col("base_id").alias("id")).agg(
         F.count(F.lit(1)).cast("int").alias("k_occurrence")
     )
@@ -590,7 +534,6 @@ def knn_label_accuracy(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    impl: str = "gemm",
 ) -> DataFrame:
     """Leave-one-out k-NN classification accuracy over a labeled vector
     table — the supervised audit of embedding geometry (if labels are
@@ -603,8 +546,7 @@ def knn_label_accuracy(
     Returns a ROLLUP: one row per true label plus the grand-total row
     (gid=1, label NULL) — (gid, label, n, n_correct, accuracy at 6dp).
 
-    Plan: the shared ``_self_neighbors`` edge list (GEMM partial top-k
-    default; ``impl="expr"`` is the oracle-parity audit path — a
+    Plan: the shared ``_self_neighbors`` edge list (the exact kernel — a
     deliberate quadratic, keep it off hot paths), one (query,
     neighbor-label) vote aggregate, one ranking window over <= k rows per
     query, one rollup. All counts integer.
@@ -612,7 +554,7 @@ def knn_label_accuracy(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     labels = df.select(F.col(id_col).alias("__id"), F.col(label_col).alias("__l"))
-    neigh = _self_neighbors(df, k, metric, id_col, vec_col, impl).join(
+    neigh = _self_neighbors(df, k, metric, id_col, vec_col).join(
         labels.select(F.col("__id").alias("base_id"), F.col("__l").alias("__nl")),
         "base_id",
     )
@@ -648,7 +590,6 @@ def mutual_knn_pairs(
     metric: str = "cosine",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "gemm",
     neighbors: DataFrame | None = None,
 ) -> DataFrame:
     """Mutual k-NN pairs: unordered pairs (a, b) where each vector lists
@@ -658,15 +599,15 @@ def mutual_knn_pairs(
     reciprocity test; cf. the reciprocal-rank heuristics of Qin et al.
     CVPR 2011).
 
-    Plan: the shared ``_self_neighbors`` edge list (self-KNN at k+1, GEMM
-    partial top-k default, self-drop + deterministic re-rank to k), then
+    Plan: the shared ``_self_neighbors`` edge list (the exact kernel, self
+    masked, deterministic (distance, id) rank to k), then
     the directed edge list self-joins on the REVERSED key pair — an
     equi-join on (query, base) ids, never all-pairs. ``neighbors`` is
     the corpus-scale path (see hubness_stats): a precomputed ANN neighbor
     list replaces the exact self-KNN; the reciprocity join is unchanged.
     Returns (id_a, id_b, distance) with id_a < id_b, ordered.
     """
-    edges = _self_neighbors(df, k, metric, id_col, vec_col, impl, neighbors).localCheckpoint(
+    edges = _self_neighbors(df, k, metric, id_col, vec_col, neighbors).localCheckpoint(
         eager=False
     )
     fwd = edges.where(F.col("query_id") < F.col("base_id")).select(
@@ -692,7 +633,6 @@ def knn_overlap(
     id_col: str = "vec_id",
     vec_a: str = "embedding",
     vec_b: str = "embedding",
-    impl: str = "gemm",
     neighbors_a: DataFrame | None = None,
     neighbors_b: DataFrame | None = None,
 ) -> DataFrame:
@@ -707,10 +647,10 @@ def knn_overlap(
     space (recall@k is this with B = approximate). 1.0 = neighborhoods
     intact; ~k/n = unrelated spaces.
 
-    Plan: the shared ``_self_neighbors`` edge list per space (self-KNN at
-    k+1, GEMM partial top-k default; ``neighbors_a/b`` accept precomputed
-    ANN lists — the hubness / mutual-kNN corpus-scale convention;
-    self-drop + deterministic re-rank to k), then the two directed edge
+    Plan: the shared ``_self_neighbors`` edge list per space (the exact
+    kernel, self masked; ``neighbors_a/b`` accept precomputed ANN lists —
+    the hubness / mutual-kNN corpus-scale convention; self-drop +
+    deterministic re-rank to k), then the two directed edge
     lists equi-join on (query, base) — never all-pairs. Per-point
     overlaps round to 9dp and DECIMAL-sum into the mean (engine-exact).
 
@@ -733,7 +673,7 @@ def knn_overlap(
         raise ValueError(f"k must be >= 1, got {k}")
 
     def edges(df, vec, nbrs):
-        return _self_neighbors(df, k, metric, id_col, vec, impl, nbrs).select(
+        return _self_neighbors(df, k, metric, id_col, vec, nbrs).select(
             "query_id", "base_id"
         )
 

@@ -45,7 +45,6 @@ from nbdatatools_spark.operators.knn import (
     _local,
     _merge_topk,
     _query_blocks,
-    _ranked_knn,
     _scan_topk,
     exact_knn,
     knn_recall,
@@ -60,19 +59,15 @@ def brute_force_topk(
     query_id: str = "vec_id",
     base_id: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "gemm",
 ) -> DataFrame:
     """Exact top-k neighbor pairs (query_id, rank, base_id, distance): the
-    ranked rows of ``knn._ranked_knn`` in the one-row-per-neighbor shape
+    ranked rows of ``knn._knn_kernel`` in the one-row-per-neighbor shape
     (``exact_knn`` renders the same rows as neighbor arrays). Ranks run
-    1..k per query by (distance, base_id); undefined distances rank last
-    and are NULL.
-
-    Default ``impl="gemm"`` — per-batch partial top-k, the scale path;
-    pass ``impl="expr"`` only for bit-exact SQL-oracle comparisons (see
-    exact_knn docstring)."""
+    1..k per query by (distance, base_id); each distance is
+    ``distance_expr``'s value, bit for bit. Undefined distances rank last
+    and are NULL."""
     return _as_pairs(
-        _ranked_knn(queries, base, k, metric, query_id, base_id, vec_col, vec_col, impl)
+        _knn_kernel(queries, base, k, metric, query_id, vec_col, base_id, vec_col)
     )
 
 
@@ -209,12 +204,13 @@ def _ivf_scan(
 def _ivf_flat(queries, cells, centroids, nprobe, k, query_id, base_id, vec_col, seen=None):
     """IVF-flat pairs: ``_ivf_scan`` of ``(base_id, vec_col, centroid_id)``
     cells, each cell's rows scored by cosine ``distance_matrix`` against
-    the queries that probe it."""
+    the queries that probe it, its top-k candidates re-scored with the
+    fold: every stored distance is ``distance_expr``'s."""
 
     def cosine(Q, C, P):
         def score(batch):
             B = _matrix(batch.column(vec_col), Q.shape[1])
-            return lambda rows, qs, slots: distance_matrix(B[rows], Q[qs], "cosine")
+            return lambda rows, qs, slots: distance_matrix(B[rows], Q[qs], "cosine", k)
 
         return score
 
@@ -242,8 +238,9 @@ def ivf_topk(
     centroid with the shuffle-free ``clustering.centroid_assign`` (one
     literal-array argmin projection, VERDICT r1 #4), then ``_ivf_scan``
     the ``nprobe`` nearest cells per query by cosine distance (float64
-    GEMM of each cell's rows against the queries probing it, within ~1e-15
-    of ``distance_expr``; a null or ragged vector raises ``_matrix``'s
+    GEMM of each cell's rows against the queries probing it, the top-k
+    candidates re-scored to ``distance_expr``'s values bit for bit; a null
+    or ragged vector raises ``_matrix``'s
     ``ValueError``, as does ``nprobe < 1``). No join, window or shuffle; the
     scan runs when called and returns a local relation, like exact_knn.
     """
@@ -814,7 +811,6 @@ def hard_negatives(
     query_id: str = "vec_id",
     base_id: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "gemm",
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each query vector,
     the ``k`` nearest base vectors whose ``label_col`` DIFFERS from the
@@ -823,48 +819,22 @@ def hard_negatives(
 
     Returns ``(query_id, rank, base_id, distance)``; pairs with undefined
     distance (zero-magnitude cosine) are excluded — a NULL-distance negative
-    is useless for training. Ties break on (distance, base_id).
+    is useless for training. Ties break on (distance, base_id); each
+    distance is ``distance_expr``'s value, bit for bit.
 
-    ``impl="gemm"`` (scale path): operators.knn's dense kernel with a
-    same-label exclusion mask — query blocks (ids, vectors, labels; cut
-    past the driver's candidate budget, as in exact_knn) are broadcast,
-    each scan task keeps its local top-k per query, and the driver ranks
-    those Q*k rows per task, never Q*B.
-    ``impl="expr"`` is the sequential-fold Catalyst path whose arithmetic a
-    SQL oracle reproduces bit-for-bit.
+    Plan: operators.knn's dense kernel with a same-label exclusion mask —
+    query blocks (ids, vectors, labels; cut past the driver's candidate
+    budget, as in exact_knn) are broadcast, each scan task keeps its local
+    top-k per query, and the driver ranks those Q*k rows per task, never
+    Q*B. Undefined distances rank after every defined one, so dropping
+    them from the ranked rows leaves the defined ranks unchanged.
     """
-    if impl == "expr":
-        q = queries.select(
-            F.col(query_id).alias("__qid"),
-            F.col(vec_col).alias("__qvec"),
-            F.col(label_col).alias("__qlabel"),
-        )
-        b = base.select(
-            F.col(base_id).alias("__bid"),
-            F.col(vec_col).alias("__bvec"),
-            F.col(label_col).alias("__blabel"),
-        )
-        pairs = _merge_topk(
-            b.crossJoin(F.broadcast(q))
-            .where(F.col("__qlabel") != F.col("__blabel"))
-            .select(
-                "__qid",
-                "__bid",
-                distance_expr(metric, F.col("__qvec"), F.col("__bvec")).alias("__dist"),
-            )
-            .where(F.col("__dist").isNotNull()),
-            k,
-        )
-    else:
-        # undefined distances are excluded like same-label pairs
-        pairs = _knn_kernel(
-            queries, base, k, metric, query_id, vec_col, base_id, vec_col,
-            exclude=lambda D, blab, qlab: (
-                np.isnan(D) | (blab.to_numpy(zero_copy_only=False)[:, None] == qlab[None, :])
-            ),
-            query_key=label_col, base_key=label_col,
-        )
-    return _as_pairs(pairs)
+    pairs = _knn_kernel(
+        queries, base, k, metric, query_id, vec_col, base_id, vec_col,
+        exclude=lambda blab, qlab: blab.to_numpy(zero_copy_only=False)[:, None] == qlab[None, :],
+        query_key=label_col, base_key=label_col,
+    )
+    return _as_pairs(pairs).where(F.col("distance").isNotNull())
 
 
 def ivf_build_index(
@@ -1034,7 +1004,6 @@ def ann_tuning_report(
         metric="cosine",
         query_ordinal=query_id, base_ordinal=base_id,
         query_vec=vec_col, base_vec=vec_col,
-        impl="gemm",
     )
 
     spark = base.sparkSession
@@ -1095,9 +1064,9 @@ def lsh_tradeoff_report(
     divisions rendered at 6dp.
 
     100-TB shape (tightened in optimization round 10, guide §1.2/§2.4):
-    ground truth is ``knn._ranked_knn``'s expr path, ONE broadcast
-    query-side crossJoin + rank-k window (the exact_knn audit posture —
-    cap the query sample upstream), and each setting's LSH top-k is
+    ground truth is ``knn._knn_kernel``'s exact top-k, one query-block
+    scan collected to the driver (the exact_knn audit posture — cap the
+    query sample upstream), and each setting's LSH top-k is
     ``knn._merge_topk`` over its bucket-join candidates. The
     base table is scanned ONCE for all settings — a single projection
     evaluates every n_bits signature and is localCheckpointed; before,
@@ -1119,17 +1088,15 @@ def lsh_tradeoff_report(
     )
     from nbdatatools_spark.session import spread_small_input
 
-    # hyperplane signatures + the exact-truth crossJoin are per-row
-    # heavy: spread an under-split base scan once for both (round 10)
+    # hyperplane signatures are per-row heavy: spread an under-split base
+    # scan once (round 10)
     b = spread_small_input(
         base.select(F.col(base_id).alias("__bid"), F.col(vec_col).alias("__bvec"))
     )
     nq = q.agg(F.count(F.lit(1)).alias("__nq"))
-    truth = (
-        _ranked_knn(q, b, k, "cosine", "__qid", "__bid", "__qvec", "__bvec", "expr")
-        .select("__qid", "__bid")
-        .localCheckpoint(eager=False)
-    )
+    truth = _local(
+        _knn_kernel(q, b, k, "cosine", "__qid", "__qvec", "__bid", "__bvec")
+    ).select("__qid", "__bid")
 
     # one base pass computing every setting's signature, materialized once.
     # Storage trade, stated explicitly (round-11 ADVICE note): this
@@ -1355,7 +1322,7 @@ def compression_report(
     truth = exact_knn(
         queries, df, k, metric="cosine",
         query_ordinal=id_col, base_ordinal=id_col,
-        query_vec=vec_col, base_vec=vec_col, impl="gemm",
+        query_vec=vec_col, base_vec=vec_col,
     )
 
     def recall_of(pairs: DataFrame) -> float:

@@ -56,7 +56,7 @@ def main() -> None:
 
     # 2. exact KNN, cosine, k=100 (compute knn / J2) — GEMM kernel
     t0 = time.time()
-    truth = exact_knn(queries, base, k=K, metric="cosine", impl="gemm").persist()
+    truth = exact_knn(queries, base, k=K, metric="cosine").persist()
     truth.count()
     results["knn_1k_x_100k_cosine_k100_sec"] = round(time.time() - t0, 2)
 

@@ -35,6 +35,45 @@ def collected(spark, monkeypatch):
 
 
 @pytest.fixture(scope="session")
+def expr_topk():
+    """The reference exact KNN the default scan must equal bit for bit:
+    ``distance_expr`` over a broadcast crossJoin, ranked by a window on
+    (distance NULLs last, base id). ``expr_topk(queries, base, k, metric,
+    id_col, vec_col, keep=None)`` returns ``{query id: [(base id,
+    distance or None), ...]}`` in rank order; ``keep`` is an optional
+    Column over the pair's ``q_<col>`` / ``b_<col>`` columns that filters
+    the pairs before ranking."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from nbdatatools_spark.functions.distance import distance_expr
+
+    def rank(queries, base, k, metric="cosine", id_col="ordinal", vec_col="vector", keep=None):
+        q = queries.select(*[F.col(c).alias("q_" + c) for c in queries.columns])
+        b = base.select(*[F.col(c).alias("b_" + c) for c in base.columns])
+        pairs = b.crossJoin(F.broadcast(q)).withColumn(
+            "__d", distance_expr(metric, F.col("q_" + vec_col), F.col("b_" + vec_col))
+        )
+        if keep is not None:
+            pairs = pairs.where(keep)
+        w = Window.partitionBy("q_" + id_col).orderBy(
+            F.col("__d").asc_nulls_last(), F.col("b_" + id_col)
+        )
+        rows = (
+            pairs.withColumn("__r", F.row_number().over(w))
+            .where(F.col("__r") <= k)
+            .select(F.col("q_" + id_col).alias("q"), F.col("b_" + id_col).alias("b"), "__d", "__r")
+            .collect()
+        )
+        out = {}
+        for r in sorted(rows, key=lambda r: (r["q"], r["__r"])):
+            out.setdefault(r["q"], []).append((r["b"], r["__d"]))
+        return out
+
+    return rank
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

@@ -210,13 +210,14 @@ def test_centroid_assign_gemm_matches_expr(spark, embeddings):
         assert expr == gemm, f"metric {metric}: assignments diverge"
 
 
-def test_centroid_assign_gemm_zero_vector_and_ties(spark):
+def test_centroid_assign_gemm_zero_vector_and_ties(spark, expr_topk):
     """Zero-norm cosine rows -> +Inf everywhere -> cid 0 (expr parity);
     exact distance ties -> lowest centroid_id on both paths.
 
     The same zero base vector and zero query pin every dense-kernel
     caller's undefined-distance policy: exact_knn and hybrid_ground_truth
-    rank it last with a NULL distance, hard_negatives excludes it."""
+    rank it last with a NULL distance, as the ``distance_expr`` reference
+    does, and hard_negatives excludes it."""
     from nbdatatools_spark.operators.clustering import centroid_assign
     from nbdatatools_spark.operators.hybrid import hybrid_ground_truth
     from nbdatatools_spark.operators.knn import exact_knn
@@ -241,23 +242,20 @@ def test_centroid_assign_gemm_zero_vector_and_ties(spark):
     want = {0: ([0, 1, 2], [None, None, None]), 1: ([1, 2, 0], [0.0, 1.0, None])}
     meta = vecs.select("ordinal", F.lit(0).alias("z"))
     preds = [(i, '{"fieldName":"z","op":"EQ","values":[0]}') for i in (0, 1)]
+    ref = expr_topk(q, vecs, 3, "cosine")
+    assert {o: ([i for i, _ in c], [d for _, d in c]) for o, c in ref.items()} == want
     keys = {
-        impl: exact_knn(q, vecs, 3, "cosine", impl=impl) for impl in ("expr", "gemm")
+        "exact": exact_knn(q, vecs, 3, "cosine"),
+        "hybrid": hybrid_ground_truth(q, vecs, meta, preds, k=3, metric="cosine"),
     }
-    keys["hybrid"] = hybrid_ground_truth(q, vecs, meta, preds, k=3, metric="cosine")
     for name, key in keys.items():
         got = {r["ordinal"]: (list(r["indices"]), list(r["distances"])) for r in key.collect()}
         assert got == want, f"{name}: {got}"
 
     # labels all differ, so only the undefined distances are excluded
     labeled = df.withColumn("label", F.col("vec_id"))
-    for impl in ("expr", "gemm"):
-        neg = hard_negatives(
-            labeled.where(F.col("vec_id") <= 1), labeled, k=3, impl=impl
-        ).collect()
-        assert [(r.query_id, r.rank, r.base_id, r.distance) for r in neg] == [
-            (1, 1, 2, 1.0)
-        ], impl
+    neg = hard_negatives(labeled.where(F.col("vec_id") <= 1), labeled, k=3).collect()
+    assert [(r.query_id, r.rank, r.base_id, r.distance) for r in neg] == [(1, 1, 2, 1.0)]
 
 
 def test_semantic_dedup_gemm_assign_same_survivors(spark, embeddings):

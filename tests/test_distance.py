@@ -96,3 +96,38 @@ def test_nan_propagates(spark):
     )
     v = df.select(euclidean_distance(F.col("a"), F.col("b"))).collect()[0][0]
     assert math.isnan(v)
+
+
+@pytest.mark.parametrize("case", ["dynamic_range", "near_collinear", "cancellation"])
+def test_gemm_error_within_slack(case):
+    """|GEMM - fold| stays within ``_gemm``'s per-column slack on
+    adversarial inputs, in the form the re-score compares (euclidean
+    squared), and the k-cut re-score stores the fold's values."""
+    from nbdatatools_spark.functions import distance as dist
+
+    rng = np.random.default_rng(5)
+    n, nq, dim = 300, 12, 64
+    if case == "dynamic_range":
+        B = rng.normal(size=(n, dim)) * 10.0 ** rng.uniform(-8, 8, size=(n, dim))
+        Q = rng.normal(size=(nq, dim)) * 10.0 ** rng.uniform(-8, 8, size=(nq, dim))
+    elif case == "near_collinear":
+        Q = rng.normal(size=(nq, dim))
+        B = Q[rng.integers(0, nq, n)] * (1 + 1e-9 * rng.normal(size=(n, 1)))
+        B += 1e-12 * rng.normal(size=(n, dim))
+    else:  # large, nearly equal components: |b|^2 - 2 b.q + |q|^2 cancels
+        Q = 1e6 + rng.normal(size=(nq, dim))
+        B = Q[rng.integers(0, nq, n)] + 1e-6 * rng.normal(size=(n, dim))
+    B, Q = B.astype(np.float32).astype(np.float64), Q.astype(np.float32).astype(np.float64)
+    bi, qi = np.meshgrid(np.arange(n), np.arange(nq), indexing="ij")
+    bb, qq = dist._fold(B * B), dist._fold(Q * Q)
+    for metric, fn in (("cosine", dist.cosine_distance), ("euclidean", dist.euclidean_distance),
+                       ("dot_product", dist.dot_product_distance)):
+        _, sel, slack = dist._gemm(fn, B, Q, bb, qq)
+        fold = dist.distance_fold(B[bi.ravel()], Q[qi.ravel()], metric).reshape(n, nq)
+        if metric == "euclidean":
+            fold = dist._fold((B[bi] - Q[qi]) ** 2)
+        assert (np.abs(sel - fold) <= slack).all(), metric
+        D = dist.distance_matrix(B, Q, metric, k=3)
+        top = np.argsort(D, axis=0, kind="stable")[:3]
+        want = dist.distance_fold(B[top.ravel()], Q[np.tile(np.arange(nq), 3)], metric)
+        assert (np.take_along_axis(D, top, 0).ravel() == want).all(), metric

@@ -100,7 +100,7 @@ def test_mutual_knn_subset_and_symmetry(spark, embeddings):
     from nbdatatools_spark.operators.knn import hubness_stats, mutual_knn_pairs
 
     sub = embeddings.where(F.col("vec_id") < 100)
-    pairs = mutual_knn_pairs(sub, k=5, impl="expr").collect()
+    pairs = mutual_knn_pairs(sub, k=5).collect()
     assert pairs, "expected some mutual pairs"
     assert all(r["id_a"] < r["id_b"] for r in pairs)
     # numpy reference: mutual = intersection of directed top-5 edges
@@ -118,13 +118,23 @@ def test_mutual_knn_subset_and_symmetry(spark, embeddings):
     assert {(r["id_a"], r["id_b"]) for r in pairs} == want
 
 
-def test_mutual_knn_gemm_matches_expr(spark, embeddings):
+def test_mutual_knn_gemm_matches_expr(spark, embeddings, expr_topk):
+    """Mutual pairs over the scan's edges equal the pairs of the
+    ``distance_expr`` reference's edges, distances included."""
     from nbdatatools_spark.operators.knn import mutual_knn_pairs
 
     sub = embeddings.where(F.col("vec_id") < 80)
-    e = {(r["id_a"], r["id_b"]) for r in mutual_knn_pairs(sub, k=5, impl="expr").collect()}
-    g = {(r["id_a"], r["id_b"]) for r in mutual_knn_pairs(sub, k=5, impl="gemm").collect()}
-    assert e == g
+    ref = expr_topk(
+        sub, sub, 5, "cosine", "vec_id", "embedding", keep=F.col("q_vec_id") != F.col("b_vec_id")
+    )
+    edges = {(q, b): d for q, cells in ref.items() for b, d in cells}
+    want = {(a, b) for (a, b) in edges if a < b and (b, a) in edges}
+    got = {(r["id_a"], r["id_b"]): r["distance"] for r in mutual_knn_pairs(sub, k=5).collect()}
+    assert set(got) == want
+    rounded = spark.createDataFrame(
+        [(a, b, edges[a, b]) for a, b in sorted(want)], "a BIGINT, b BIGINT, d DOUBLE"
+    ).select("a", "b", F.round("d", 6).alias("d"))
+    assert got == {(r["a"], r["b"]): r["d"] for r in rounded.collect()}
 
 
 # --- cross-corpus near dups ---------------------------------------------------

@@ -49,10 +49,10 @@ def test_knn_matches_numpy(vecs):
         d = np.sqrt(((m64 - m64[qi]) ** 2).sum(axis=1))
         order = np.lexsort((np.arange(N), d))[:K]
         assert list(nn[qi]["indices"]) == [int(x) for x in order]
-        # atol covers the GEMM formulation ||b||^2 - 2bq + ||q||^2, whose
-        # cancellation error on near-zero distances is ~sqrt(eps)*||x||
-        # (~1e-7); the expr<->gemm differential test pins cross-impl parity
-        np.testing.assert_allclose(nn[qi]["distances"], d[order], rtol=1e-9, atol=5e-7)
+        # the stored distances are the left-to-right fold's, so they differ
+        # from numpy's pairwise sum in the last bits only;
+        # test_gemm_impl_matches_expr pins them to distance_expr exactly
+        np.testing.assert_allclose(nn[qi]["distances"], d[order], rtol=1e-12, atol=1e-12)
 
 
 def test_neighbor_invariants_hold(vecs):
@@ -131,38 +131,56 @@ def test_driver_rank_equals_merge_topk(spark):
     assert len(got) == 12 * k
 
 
-def test_zero_vectors_never_rank_in_cosine_topk(spark):
+def _keys(frame):
+    """An ``(ordinal, indices, distances)`` key as ``{ordinal: [(index,
+    distance), ...]}`` -- the shape of the ``expr_topk`` reference."""
+    return {r["ordinal"]: list(zip(r["indices"], r["distances"])) for r in frame.collect()}
+
+
+def test_zero_vectors_never_rank_in_cosine_topk(spark, expr_topk):
     """Regression: zero-magnitude cosine produces NULL/NaN distance; plain
     asc ordering ranked NULLS FIRST and filled every top-k with zero vectors
     (found at reference-scale: recall dropped to 0.0 with 1% injected
-    zeros)."""
+    zeros). The key equals the ``distance_expr`` reference bit for bit."""
     rng = np.random.default_rng(2)
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(50)]
     rows += [(100 + i, [0.0] * 8) for i in range(10)]
     df = spark.createDataFrame(rows, "ordinal BIGINT, vector ARRAY<FLOAT>")
     q = df.where(F.col("ordinal") < 3)
-    for impl in ("expr", "gemm"):
-        nn = exact_knn(q, df, k=5, metric="cosine", impl=impl).collect()
-        for r in nn:
-            assert all(i < 100 for i in r["indices"]), f"{impl}: zero vec in top-k"
-            assert all(d is not None for d in r["distances"]), impl
+    got = _keys(exact_knn(q, df, k=5, metric="cosine"))
+    for cells in got.values():
+        assert all(i < 100 for i, _ in cells), "zero vec in top-k"
+        assert all(d is not None for _, d in cells)
+    assert got == expr_topk(q, df, 5, "cosine")
 
 
-def test_gemm_impl_matches_expr(vecs):
-    """BLAS kernel returns the same neighbors/order as the Catalyst path for
-    every metric."""
+def test_gemm_impl_matches_expr(vecs, expr_topk):
+    """The GEMM scan returns the ``distance_expr`` reference's neighbors,
+    order and distances, bit for bit, for every metric."""
     df, _ = vecs
     q = df.where(F.col("ordinal") < 8)
     for metric in ("cosine", "euclidean", "dot_product", "manhattan"):
-        a = {
-            r["ordinal"]: list(r["indices"])
-            for r in exact_knn(q, df, K, metric, impl="expr").collect()
-        }
-        b = {
-            r["ordinal"]: list(r["indices"])
-            for r in exact_knn(q, df, K, metric, impl="gemm").collect()
-        }
-        assert a == b, f"gemm != expr for {metric}"
+        assert _keys(exact_knn(q, df, K, metric)) == expr_topk(q, df, K, metric), metric
+
+
+def test_twins_at_batch_tail_rank_by_ordinal():
+    """Bit-identical twin rows at base rows j and n-1-j of one batch tie
+    under every metric, so each query's top-1 is the lower ordinal j. A
+    plain GEMM gives the rows at the batch's tail other last bits, which
+    sent some top-1 answers to the higher-ordinal twin."""
+    from nbdatatools_spark.functions.distance import distance_matrix
+
+    rng = np.random.default_rng(0)
+    n, dim, nq = 10_000, 256, 200
+    B = rng.normal(size=(n, dim)).astype(np.float32).astype(np.float64)
+    Q = np.empty((nq, dim))
+    for j in range(nq):
+        B[n - 1 - j] = B[j]
+        Q[j] = (B[j] + rng.normal(size=dim) * 1e-3).astype(np.float32)
+    for metric in ("cosine", "euclidean", "dot_product"):
+        D = distance_matrix(B, Q, metric, k=1)
+        _, bid, _ = knn._partial_topk(D, np.arange(n), np.arange(nq), 1)
+        assert (bid == np.arange(nq)).all(), (metric, np.nonzero(bid != np.arange(nq))[0])
 
 
 def test_verify_knn_sampled(vecs):
@@ -234,24 +252,24 @@ def test_hybrid_always_true_predicate_equals_exact_knn(vecs, metric):
         assert list(hybrid[qi]["distances"]) == list(exact[qi]["distances"])
 
 
-def test_kth_distance_ties_break_by_ordinal(spark):
+def test_kth_distance_ties_break_by_ordinal(spark, expr_topk):
     """Within one Arrow batch, rows tied with the k-th distance are cut by
-    base ordinal: the gemm kernel (exact_knn and hybrid_ground_truth under an
-    always-true predicate) returns the expr path's (distance, ordinal)
-    answer, not an arbitrary subset of the tied rows."""
+    base ordinal: the scan (exact_knn and hybrid_ground_truth under an
+    always-true predicate) returns the ``distance_expr`` reference's
+    (distance, ordinal) answer, not an arbitrary subset of the tied rows."""
     dist = np.random.default_rng(0).permutation([0] * 3 + [1] * 40 + [2] * 57)
     base = spark.createDataFrame(
         [(i, [float(d), 0.0]) for i, d in enumerate(dist)],
         "ordinal BIGINT, vector ARRAY<FLOAT>",
     ).coalesce(1)
     q = spark.createDataFrame([(0, [0.0, 0.0])], "ordinal BIGINT, vector ARRAY<FLOAT>")
-    expr = exact_knn(q, base, 5, "euclidean", impl="expr").collect()[0]["indices"]
-    assert list(expr) == [41, 52, 59, 1, 2]
-    assert list(exact_knn(q, base, 5, "euclidean").collect()[0]["indices"]) == list(expr)
+    expr = expr_topk(q, base, 5, "euclidean")
+    assert [i for i, _ in expr[0]] == [41, 52, 59, 1, 2]
+    assert _keys(exact_knn(q, base, 5, "euclidean")) == expr
     meta = base.select("ordinal", F.lit(0).alias("z"))
     preds = [(0, '{"fieldName":"z","op":"EQ","values":[0]}')]
-    hybrid = hybrid_ground_truth(q, base, meta, preds, k=5, metric="euclidean").collect()
-    assert list(hybrid[0]["indices"]) == list(expr)
+    hybrid = hybrid_ground_truth(q, base, meta, preds, k=5, metric="euclidean")
+    assert _keys(hybrid) == expr
 
 
 def test_bad_vectors_raise_one_error(spark):
@@ -360,15 +378,33 @@ def test_knn_label_accuracy_closed_form(spark):
     assert total[0]["n"] == 20 and total[0]["accuracy"] == 1.0
 
 
-def test_knn_label_accuracy_gemm_matches_expr(spark, sf_dir):
+def test_knn_label_accuracy_gemm_matches_expr(spark, sf_dir, expr_topk):
+    """The leave-one-out votes run on the scan's self-KNN edges, which
+    equal the ``distance_expr`` reference bit for bit; the per-label counts
+    equal a vote over the reference's edges."""
     import os
+    from collections import Counter
 
-    from nbdatatools_spark.operators.knn import knn_label_accuracy
+    from nbdatatools_spark.operators.knn import _self_neighbors, knn_label_accuracy
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    a = knn_label_accuracy(emb, k=3, impl="expr").collect()
-    b = knn_label_accuracy(emb, k=3, impl="gemm").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    ref = expr_topk(
+        emb, emb, 3, "cosine", "vec_id", "embedding", keep=F.col("q_vec_id") != F.col("b_vec_id")
+    )
+    edges = {}
+    for r in _self_neighbors(emb, 3, "cosine", "vec_id", "embedding").collect():
+        edges.setdefault(r["query_id"], []).append((r["base_id"], r["distance"]))
+    rank = lambda c: (c[1] is None, c[1] or 0.0, c[0])  # noqa: E731 -- NULLs last
+    assert {q: sorted(e, key=rank) for q, e in edges.items()} == ref
+    labels = dict((r["vec_id"], r["label"]) for r in emb.select("vec_id", "label").collect())
+    n, ok = Counter(), Counter()
+    for q, cells in ref.items():
+        votes = Counter(labels[b] for b, _ in cells)
+        pred = min(votes, key=lambda lab: (-votes[lab], lab))
+        n[labels[q]] += 1
+        ok[labels[q]] += pred == labels[q]
+    got = {r["true_label"]: (r["n"], r["n_correct"]) for r in knn_label_accuracy(emb, k=3).collect()}
+    assert got == {**{lab: (n[lab], ok[lab]) for lab in n}, None: (sum(n.values()), sum(ok.values()))}
 
 
 def test_knn_label_accuracy_validation(spark, sf_dir):
@@ -396,7 +432,7 @@ def test_hubness_and_mutual_knn_accept_ann_neighbors(spark, sf_dir):
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     exact = brute_force_topk(
         emb, emb, 6, metric="cosine", query_id="vec_id", base_id="vec_id",
-        vec_col="embedding", impl="gemm",
+        vec_col="embedding",
     )
     a = hubness_stats(emb, k=5).collect()
     b = hubness_stats(emb, k=5, neighbors=exact).collect()
@@ -419,3 +455,47 @@ def test_hubness_and_mutual_knn_accept_ann_neighbors(spark, sf_dir):
     )
     occ = {r["id"]: r["k_occurrence"] for r in hubness_stats(four, k=1, neighbors=nbrs).collect()}
     assert occ == {0: 0, 1: 1, 2: 3, 3: 0}
+
+
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "dot_product", "manhattan"])
+def test_keys_bit_identical_across_batch_block_and_task_shapes(spark, monkeypatch, metric):
+    """Indices and distances of exact_knn, hybrid_ground_truth and
+    hard_negatives are bit-identical with 7-row Arrow batches, a query
+    side split into blocks and a single scan task: every stored distance
+    is the fold's, whatever shape the GEMM saw."""
+    from nbdatatools_spark.operators.similarity import hard_negatives
+
+    rng = np.random.default_rng(17)
+    mat = rng.normal(size=(150, 40)).astype(np.float32)
+    mat[100:] = mat[:50]  # twins in other batches and tasks
+    schema = "ordinal BIGINT, vector ARRAY<FLOAT>, label INT"
+    base = spark.createDataFrame(
+        [(i, v.tolist(), i % 3) for i, v in enumerate(mat)], schema
+    ).repartition(3)
+    q = base.where(F.col("ordinal") < 12)
+    meta = base.select("ordinal", (F.col("ordinal") % 2).alias("p"))
+    preds = [(i, '{"fieldName":"p","op":"EQ","values":[%d]}' % (i % 2)) for i in range(12)]
+
+    def keys():
+        neg = hard_negatives(q, base, 5, metric=metric, query_id="ordinal", base_id="ordinal",
+                             vec_col="vector").toArrow()
+        return (
+            exact_knn(q, base, 5, metric).orderBy("ordinal").toArrow(),
+            hybrid_ground_truth(q, base, meta, preds, k=5, metric=metric).orderBy("ordinal").toArrow(),
+            neg.sort_by([("query_id", "ascending"), ("rank", "ascending")]),
+        )
+
+    want = keys()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        assert all(a.equals(b) for a, b in zip(keys(), want)), "7-row batches"
+    finally:
+        spark.conf.set(key, old)
+    with monkeypatch.context() as m:
+        m.setattr(knn, "_CANDIDATE_BYTES", _budget_for(spark, 5, 5))
+        assert all(a.equals(b) for a, b in zip(keys(), want)), "split query side"
+    with monkeypatch.context() as m:
+        m.setattr(knn, "_scan_tasks", lambda spark: 1)
+        assert all(a.equals(b) for a, b in zip(keys(), want)), "one scan task"

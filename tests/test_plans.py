@@ -52,24 +52,6 @@ def test_small_dim_join_broadcasts(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_knn_uses_broadcast_not_shuffle(spark, embeddings, collected):
-    q = embeddings.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("ordinal"), F.col("embedding").alias("vector")
-    )
-    b = embeddings.select(
-        F.col("vec_id").alias("ordinal"), F.col("embedding").alias("vector")
-    )
-    from nbdatatools_spark.operators.knn import exact_knn
-
-    # oracle path: query side broadcast, base never shuffled pre-ranking;
-    # exact_knn collects the ranked rows, so the ranking plan is the last
-    # collected one
-    exact_knn(q, b, k=3, impl="expr")
-    plan = collected[-1]
-    assert "BroadcastNestedLoopJoin" in plan  # broadcast side = queries
-    assert "CartesianProduct" not in plan
-
-
 def test_knn_default_has_no_full_pair_shuffle(spark, embeddings, collected):
     """VERDICT r1 #3: the DEFAULT exact_knn plan must do per-partition
     partial top-k (GEMM mapInArrow) — never the Q*B cross product. The
@@ -99,27 +81,6 @@ def test_knn_default_has_no_full_pair_shuffle(spark, embeddings, collected):
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
         assert "Exchange" not in plan
-
-
-def test_expr_knn_window_has_partial_group_limit(spark, embeddings, collected):
-    """SPARK-37099 rank-limit pushdown: the expr path's top-k window gets a
-    Partial WindowGroupLimit BELOW the exchange, bounding the shuffle at
-    Q*k rows per map task (the r1 concern was a full Q*B pair shuffle)."""
-    from nbdatatools_spark.operators.knn import exact_knn
-
-    q = embeddings.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("ordinal"), F.col("embedding").alias("vector")
-    )
-    b = embeddings.select(
-        F.col("vec_id").alias("ordinal"), F.col("embedding").alias("vector")
-    )
-    exact_knn(q, b, k=3, impl="expr")
-    plan = collected[-1]  # the ranking plan exact_knn collects
-    # a Partial group-limit must appear, and it must be below the exchange
-    assert "Partial" in plan and "WindowGroupLimit" in plan
-    partial_pos = plan.find(", Partial")
-    exchange_pos = plan.find("Exchange hashpartitioning")
-    assert 0 <= exchange_pos < partial_pos  # plan prints top-down: partial deeper
 
 
 def test_ivf_assignment_has_no_shuffle(spark, embeddings, collected):

@@ -173,7 +173,7 @@ def _rows(df):
 def test_pq_scans_block_large_query_sides(clustered, monkeypatch):
     """A query side over the driver's candidate budget is scanned in
     blocks, and the blocked result equals the single-block one for every
-    PQ and IVF scan (IVF-flat distances to 1e-12)."""
+    PQ and IVF scan, distances included."""
     from nbdatatools_spark.operators import knn
     from nbdatatools_spark.operators.similarity import ivf_topk, ivfpq_build, ivfpq_topk
 
@@ -194,10 +194,25 @@ def test_pq_scans_block_large_query_sides(clustered, monkeypatch):
     monkeypatch.setattr(knn, "_CANDIDATE_BYTES", budget)
     blocked = [_rows(scan()) for scan in scans]
     assert all(len(rows) == 20 * 5 for rows in single)
-    assert blocked[:3] == single[:3]
-    # IVF-flat's cosine GEMM may round the last bit differently per block width
-    assert [r[:3] for r in blocked[3]] == [r[:3] for r in single[3]]
-    np.testing.assert_allclose([r[3] for r in blocked[3]], [r[3] for r in single[3]], rtol=0, atol=1e-12)
+    assert blocked == single
+
+
+def test_ivf_search_index_is_deterministic(clustered, tmp_path):
+    """Building and searching the same 16-cell IVF index twice gives
+    byte-identical pairs: IVF-flat's stored distances are the fold's, not
+    the last bits of a GEMM whose operand shape follows how the index
+    files batch a cell's rows."""
+    from nbdatatools_spark.operators.similarity import ivf_build_index, ivf_search_index
+
+    spark = clustered.sparkSession
+    q = clustered.where(F.col("vec_id") < 40)
+    runs = []
+    for i in range(2):
+        ivf_build_index(clustered, str(tmp_path / f"idx{i}"), n_centroids=16)
+        pairs = ivf_search_index(spark, str(tmp_path / f"idx{i}"), q, k=10, nprobe=3)
+        runs.append(pairs.orderBy("query_id", "rank").toArrow())
+    assert runs[0].num_rows == 400
+    assert runs[0].equals(runs[1])
 
 
 def test_ivfpq_probe_ties_go_to_lowest_cell(spark):

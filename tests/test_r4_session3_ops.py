@@ -99,23 +99,22 @@ def test_token_entropy_partition_invariance(spark, documents):
 
 def test_hard_negatives_excludes_same_label(spark, embeddings):
     q = embeddings.where(F.col("vec_id") < 8)
-    out = hard_negatives(q, embeddings, k=5, impl="gemm").collect()
+    out = hard_negatives(q, embeddings, k=5).collect()
     labels = {r.vec_id: r.label for r in embeddings.select("vec_id", "label").collect()}
     assert len(out) == 8 * 5
     for r in out:
         assert labels[r.query_id] != labels[r.base_id]
 
 
-def test_hard_negatives_gemm_matches_expr(spark, embeddings):
+def test_hard_negatives_gemm_matches_expr(spark, embeddings, expr_topk):
+    """The label-mask scan returns the ``distance_expr`` reference over
+    different-label, defined pairs: ids, order and distances bit for bit."""
     q = embeddings.where(F.col("vec_id") < 8)
-    gemm = hard_negatives(q, embeddings, k=5, impl="gemm").orderBy("query_id", "rank")
-    expr = hard_negatives(q, embeddings, k=5, impl="expr").orderBy("query_id", "rank")
-    g = [(r.query_id, r.rank, r.base_id) for r in gemm.collect()]
-    e = [(r.query_id, r.rank, r.base_id) for r in expr.collect()]
-    # identical neighbor sets and order; distances agree to float tolerance
-    assert g == e
-    for rg, re_ in zip(gemm.collect(), expr.collect()):
-        assert rg.distance == pytest.approx(re_.distance, abs=1e-9)
+    got = {}
+    for r in hard_negatives(q, embeddings, k=5).orderBy("query_id", "rank").collect():
+        got.setdefault(r.query_id, []).append((r.base_id, r.distance))
+    keep = (F.col("q_label") != F.col("b_label")) & F.col("__d").isNotNull()
+    assert got == expr_topk(q, embeddings, 5, "cosine", "vec_id", "embedding", keep=keep)
 
 
 def test_hard_negatives_is_knn_restricted_to_other_labels(spark, embeddings):
@@ -125,7 +124,7 @@ def test_hard_negatives_is_knn_restricted_to_other_labels(spark, embeddings):
     X = np.array([r.embedding for r in rows], dtype=np.float64)
     lab = np.array([r.label for r in rows])
     out = hard_negatives(
-        embeddings.where(F.col("vec_id") < 4), embeddings, k=3, impl="gemm"
+        embeddings.where(F.col("vec_id") < 4), embeddings, k=3
     ).collect()
     by_q = {}
     for r in out:

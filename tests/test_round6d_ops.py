@@ -79,7 +79,7 @@ def test_hubness_mass_conservation_and_numpy(spark, embeddings):
 
     k = 5
     sub = embeddings.where(F.col("vec_id") < 100)
-    out = {r["id"]: r["k_occurrence"] for r in hubness_stats(sub, k=k, impl="expr").collect()}
+    out = {r["id"]: r["k_occurrence"] for r in hubness_stats(sub, k=k).collect()}
     n = len(out)
     assert sum(out.values()) == n * k  # every query contributes exactly k
     # numpy differential
@@ -98,13 +98,24 @@ def test_hubness_mass_conservation_and_numpy(spark, embeddings):
     assert occ == out
 
 
-def test_hubness_gemm_matches_expr(spark, embeddings):
-    from nbdatatools_spark.operators.knn import hubness_stats
+def test_hubness_gemm_matches_expr(spark, embeddings, expr_topk):
+    """The scan's self-KNN edges equal the ``distance_expr`` reference's
+    (ids and distances, bit for bit), and the k-occurrences count them."""
+    from collections import Counter
+
+    from nbdatatools_spark.operators.knn import _self_neighbors, hubness_stats
 
     sub = embeddings.where(F.col("vec_id") < 80)
-    e = {r["id"]: r["k_occurrence"] for r in hubness_stats(sub, k=5, impl="expr").collect()}
-    g = {r["id"]: r["k_occurrence"] for r in hubness_stats(sub, k=5, impl="gemm").collect()}
-    assert e == g
+    ref = expr_topk(
+        sub, sub, 5, "cosine", "vec_id", "embedding", keep=F.col("q_vec_id") != F.col("b_vec_id")
+    )
+    edges = _self_neighbors(sub, 5, "cosine", "vec_id", "embedding").collect()
+    assert {(r["query_id"], r["base_id"], r["distance"]) for r in edges} == {
+        (q, b, d) for q, cells in ref.items() for b, d in cells
+    }
+    occ = Counter(b for cells in ref.values() for b, _ in cells)
+    g = {r["id"]: r["k_occurrence"] for r in hubness_stats(sub, k=5).collect()}
+    assert g == {i: occ[i] for i in g} and len(g) == sub.count()
 
 
 # --- source similarity ------------------------------------------------------

@@ -427,7 +427,7 @@ def test_knn_overlap_identity_and_truncation(spark, embeddings):
     from nbdatatools_spark.operators.knn import knn_overlap
 
     sub = embeddings.where(F.col("vec_id") < 150)
-    r = knn_overlap(sub, sub, k=5, impl="expr").collect()[0]
+    r = knn_overlap(sub, sub, k=5).collect()[0]
     assert r["mean_overlap"] == 1.0 and r["frac_perfect"] == 1.0
 
     trunc = sub.select(
@@ -435,15 +435,17 @@ def test_knn_overlap_identity_and_truncation(spark, embeddings):
         F.expr("transform(slice(embedding, 1, 8), x -> CAST(x AS FLOAT))")
         .alias("embedding"),
     )
-    r2 = knn_overlap(sub, trunc, k=5, impl="expr").collect()[0]
+    r2 = knn_overlap(sub, trunc, k=5).collect()[0]
     assert 0.0 <= r2["mean_overlap"] < 1.0
     assert r2["n_points"] == 150
     with pytest.raises(ValueError):
         knn_overlap(sub, sub, k=0)
 
 
-def test_knn_overlap_gemm_matches_expr(spark, embeddings):
-    from nbdatatools_spark.operators.knn import knn_overlap
+def test_knn_overlap_gemm_matches_expr(spark, embeddings, expr_topk):
+    """Each space's self-KNN edges equal the ``distance_expr`` reference's
+    (ids and distances, bit for bit), and the overlap scores them."""
+    from nbdatatools_spark.operators.knn import _self_neighbors, knn_overlap
 
     sub = embeddings.where(F.col("vec_id") < 150)
     trunc = sub.select(
@@ -451,12 +453,21 @@ def test_knn_overlap_gemm_matches_expr(spark, embeddings):
         F.expr("transform(slice(embedding, 1, 16), x -> CAST(x AS FLOAT))")
         .alias("embedding"),
     )
-    a = knn_overlap(sub, trunc, k=10, impl="expr").collect()[0]
-    b = knn_overlap(sub, trunc, k=10, impl="gemm").collect()[0]
-    # neighbor SETS agree between kernels (distances differ in last bits
-    # only, which cannot reorder distinct synthetic vectors at k=10)
-    assert a["mean_overlap"] == b["mean_overlap"]
-    assert a["min_overlap"] == b["min_overlap"]
+    sets = []
+    for space in (sub, trunc):
+        ref = expr_topk(
+            space, space, 10, "cosine", "vec_id", "embedding",
+            keep=F.col("q_vec_id") != F.col("b_vec_id"),
+        )
+        edges = _self_neighbors(space, 10, "cosine", "vec_id", "embedding").collect()
+        assert {(r["query_id"], r["base_id"], r["distance"]) for r in edges} == {
+            (q, b, d) for q, cells in ref.items() for b, d in cells
+        }
+        sets.append({q: {b for b, _ in cells} for q, cells in ref.items()})
+    ovs = [len(sets[0][i] & sets[1][i]) / 10 for i in sets[0]]
+    got = knn_overlap(sub, trunc, k=10).collect()[0]
+    assert got["mean_overlap"] == pytest.approx(sum(ovs) / len(ovs), abs=1e-6)
+    assert got["min_overlap"] == min(ovs)
 
 
 def test_knn_overlap_matches_numpy(spark, embeddings):
@@ -470,7 +481,7 @@ def test_knn_overlap_matches_numpy(spark, embeddings):
         F.expr("transform(slice(embedding, 1, 16), x -> CAST(x AS FLOAT))")
         .alias("embedding"),
     )
-    got = knn_overlap(sub, trunc, k=5, impl="expr").collect()[0]
+    got = knn_overlap(sub, trunc, k=5).collect()[0]
 
     rows = sub.orderBy("vec_id").collect()
     ids = [r["vec_id"] for r in rows]
