@@ -163,16 +163,18 @@ def _near(sel, slack, k, excluded):
     """``(rows, cols)`` of the cells of ``sel`` not excluded and at most
     their column's k-th smallest defined, allowed value plus ``2 * slack``
     (all defined, allowed cells when a column has fewer than ``k``)."""
-    key = sel if excluded is None else np.where(excluded, np.nan, sel)
-    kth = np.partition(key, min(k, len(sel)) - 1, axis=0)[min(k, len(sel)) - 1]  # NaN last
-    return np.nonzero(key <= np.where(np.isnan(kth), np.inf, kth + 2 * slack))
+    kk = min(k, len(sel)) - 1
+    key = sel.copy() if excluded is None else np.where(excluded, np.nan, sel)
+    key.partition(kk, axis=0)  # NaN last
+    near = sel <= np.where(np.isnan(key[kk]), np.inf, key[kk] + 2 * slack)
+    return np.nonzero(near if excluded is None else near & ~excluded)
 
 
 def _gemm(fn, B, Q, bb, qq):
-    """GEMM distances ``(D, sel, slack)`` for cosine, euclidean and dot:
-    ``sel`` is the form the re-score compares (``D``, but euclidean's
-    squared form, where the bound is linear), ``slack`` a per-column bound
-    on |sel - fold|. ``bb``/``qq``: squared norms by the fold.
+    """One GEMM's ``(sel, slack)`` for cosine, euclidean and dot: ``sel``
+    is the distance matrix, but euclidean's squared form, where the bound
+    is linear; ``slack`` is a per-column bound on |sel - fold|. ``bb``/``qq``:
+    squared norms (by the fold for cosine, whose re-score divides by them).
 
     Derivation (u = 2^-53, gamma_n = n*u/(1-n*u), d = dim): any order of
     summing d rounded or fused products errs by at most gamma_d *
@@ -192,24 +194,24 @@ def _gemm(fn, B, Q, bb, qq):
         with np.errstate(divide="ignore", invalid="ignore"):
             D = 1.0 - G / denom
         D[denom == 0] = np.nan
-        return D, D, 4 * _gamma(d + 3)
-    if fn is euclidean_distance:
-        sel = bb[:, None] - 2.0 * G + qq[None, :]
-        slack = 4 * _gamma(d + 2) * (np.sqrt(bmax) + np.sqrt(qq)) ** 2
-        return np.sqrt(np.maximum(sel, 0.0)), sel, slack  # clipped for fp negatives
-    D = -G
-    return D, D, 4 * _gamma(d) * np.sqrt(bmax * qq)
+        return D, 4 * _gamma(d + 3)
+    if fn is euclidean_distance:  # bb - 2G + qq, in place
+        np.add(np.add(bb[:, None], np.multiply(G, -2.0, out=G), out=G), qq, out=G)
+        return G, 4 * _gamma(d + 2) * (np.sqrt(bmax) + np.sqrt(qq)) ** 2
+    return np.negative(G, out=G), 4 * _gamma(d) * np.sqrt(bmax * qq)
 
 
 def distance_matrix(B, Q, metric: str, k: int | None = None, excluded=None):
     """Dense float64 ``(len(B), len(Q))`` distance matrix -- the numpy twin
     of :func:`distance_expr`, with the same metric names; undefined cells
-    (zero-magnitude cosine) are NaN. Manhattan sums with the fold. The
-    others run one GEMM (``_gemm``), whose last bits follow the operands'
-    shapes; with ``k``, GEMM proposes and the fold decides: each cell
-    within ``2 * slack`` of its column's k-th GEMM value (``excluded``
-    cells never) is re-scored with the fold, so any (distance, base id)
-    top-k cut of the matrix is ``distance_expr``'s, values included.
+    (zero-magnitude cosine) are NaN. Manhattan sums with the fold, with no
+    (rows, queries, dim) intermediate. The others run one GEMM (``_gemm``),
+    whose last bits follow the operands' shapes; without ``k`` that is the
+    whole matrix (numpy's norms, nothing re-scored). With ``k``, GEMM
+    proposes and the fold decides: each cell within ``2 * slack`` of its
+    column's k-th GEMM value (``excluded`` cells never) is re-scored with
+    the fold, so any (distance, base id) top-k cut of the matrix is
+    ``distance_expr``'s, values included.
 
     Why that is enough: the k GEMM-best cells have fold values at most
     g_k + slack, so the fold's k-th value f_k is too; a cell above
@@ -219,21 +221,22 @@ def distance_matrix(B, Q, metric: str, k: int | None = None, excluded=None):
     fn = _metric(metric)
     B = np.asarray(B, dtype=np.float64)
     Q = np.asarray(Q, dtype=np.float64)
-    if fn is manhattan_distance:
-        # chunk the query axis so the (rows, q_chunk, dim) intermediate and
-        # its cumulative sum stay ~64MB each whatever the batch shape
-        q_chunk = max(1, int(8e6 // max(B.shape[0] * B.shape[1], 1)))
-        D = np.empty((B.shape[0], Q.shape[0]), dtype=np.float64)
-        for s in range(0, Q.shape[0], q_chunk):
-            D[:, s : s + q_chunk] = _fold(np.abs(B[:, None, :] - Q[None, s : s + q_chunk, :]))
+    if fn is manhattan_distance:  # dims-outer in ``_fold``'s order, query chunks of ~8MB
+        D, step = np.zeros((len(B), len(Q))), max(1, (1 << 20) // max(len(B), 1))
+        for s in range(0, len(Q), step):
+            acc, term = D[:, s : s + step], np.empty((len(B), len(Q[s : s + step])))
+            for b, q in zip(B.T, Q[s : s + step].T):
+                acc += np.abs(np.subtract(b[:, None], q, out=term), out=term)
         return D
     d = B.shape[1]
-    bb = _by_rows(len(B), d, lambda s: _fold(B[s] * B[s]))
-    qq = _by_rows(len(Q), d, lambda s: _fold(Q[s] * Q[s]))
-    D, sel, slack = _gemm(fn, B, Q, bb, qq)
-    if k is not None and D.size:
-        r, c = _near(sel, slack, k, excluded)
-        D[r, c] = _by_rows(
-            len(r), d, lambda s: _cell_fold(fn, B[r[s]], Q[c[s]], bb[r[s]], qq[c[s]])
-        )
+    if fn is cosine_distance and k is not None:
+        bb = _by_rows(len(B), d, lambda s: _fold(B[s] * B[s]))
+        qq = _by_rows(len(Q), d, lambda s: _fold(Q[s] * Q[s]))
+    else:
+        bb, qq = (B * B).sum(1), (Q * Q).sum(1)
+    D, slack = _gemm(fn, B, Q, bb, qq)
+    r, c = _near(D, slack, k, excluded) if k is not None and D.size else np.empty((2, 0), int)
+    if fn is euclidean_distance:
+        np.sqrt(np.maximum(D, 0.0, out=D), out=D)  # clipped for fp negatives
+    D[r, c] = _by_rows(len(r), d, lambda s: _cell_fold(fn, B[r[s]], Q[c[s]], bb[r[s]], qq[c[s]]))
     return D

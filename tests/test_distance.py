@@ -122,7 +122,7 @@ def test_gemm_error_within_slack(case):
     bb, qq = dist._fold(B * B), dist._fold(Q * Q)
     for metric, fn in (("cosine", dist.cosine_distance), ("euclidean", dist.euclidean_distance),
                        ("dot_product", dist.dot_product_distance)):
-        _, sel, slack = dist._gemm(fn, B, Q, bb, qq)
+        sel, slack = dist._gemm(fn, B, Q, bb, qq)
         fold = dist.distance_fold(B[bi.ravel()], Q[qi.ravel()], metric).reshape(n, nq)
         if metric == "euclidean":
             fold = dist._fold((B[bi] - Q[qi]) ** 2)
@@ -131,3 +131,16 @@ def test_gemm_error_within_slack(case):
         top = np.argsort(D, axis=0, kind="stable")[:3]
         want = dist.distance_fold(B[top.ravel()], Q[np.tile(np.arange(nq), 3)], metric)
         assert (np.take_along_axis(D, top, 0).ravel() == want).all(), metric
+
+
+def test_manhattan_matrix_is_the_fold():
+    """``distance_matrix``'s manhattan sums dims-outer in ``_fsum``'s
+    order: each cell equals ``distance_fold`` of its pair bit for bit."""
+    from nbdatatools_spark.functions.distance import distance_fold, distance_matrix
+
+    rng = np.random.default_rng(7)
+    B = rng.normal(size=(50, 33)) * 10.0 ** rng.uniform(-8, 8, size=(50, 33))
+    Q = np.vstack([B[:3], -0.0 * B[:1], rng.normal(size=(4, 33))])
+    bi, qi = np.meshgrid(np.arange(len(B)), np.arange(len(Q)), indexing="ij")
+    want = distance_fold(B[bi.ravel()], Q[qi.ravel()], "manhattan").reshape(bi.shape)
+    assert np.array_equal(distance_matrix(B, Q, "manhattan"), want)
